@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Lets the benchmark wait until every listener event posted so far has
+  * been delivered, so counters read after an action are complete. The
+  * listener bus is `private[spark]`, hence this package. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
