@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries._
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Each operator family lives in its own registry object; this is the
@@ -13,54 +15,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
+  private lazy val registry: Map[String, Query] = Query.byName(Seq(
+    Relational.all, Relational2.all, ParityQueries.all, LlmQueries.all,
+    LlmQueries2.all, LlmQueries3.all, LlmQueries4.all, LlmQueries5.all,
+    LlmQueries6.all, LlmQueries7.all, LlmQueries8.all, LlmQueries9.all,
+    LlmQueries10.all, LlmQueries11.all, LlmQueries12.all, LlmQueries13.all,
+    LlmQueries14.all, LlmQueries15.all, LlmQueries16.all, LlmQueries17.all,
+    LlmQueries18.all, PqQueries.all).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.Relational2.queries ++
-      graft.queries.ParityQueries.queries ++
-      graft.queries.LlmQueries.queries ++
-      graft.queries.LlmQueries2.queries ++
-      graft.queries.LlmQueries3.queries ++
-      graft.queries.LlmQueries4.queries ++
-      graft.queries.LlmQueries5.queries ++
-      graft.queries.LlmQueries6.queries ++
-      graft.queries.LlmQueries7.queries ++
-      graft.queries.LlmQueries8.queries ++
-      graft.queries.LlmQueries9.queries ++
-      graft.queries.LlmQueries10.queries ++
-      graft.queries.LlmQueries11.queries ++
-      graft.queries.LlmQueries12.queries ++
-      graft.queries.LlmQueries13.queries ++
-      graft.queries.LlmQueries14.queries ++
-      graft.queries.LlmQueries15.queries ++
-      graft.queries.LlmQueries16.queries ++
-      graft.queries.LlmQueries17.queries ++
-      graft.queries.LlmQueries18.queries ++
-      graft.queries.PqQueries.queries
+    registry.map { case (name, q) => name -> q.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracle ++
-      graft.queries.Relational2.oracle ++
-      graft.queries.ParityQueries.oracle ++
-      graft.queries.LlmQueries.oracle ++
-      graft.queries.LlmQueries2.oracle ++
-      graft.queries.LlmQueries3.oracle ++
-      graft.queries.LlmQueries4.oracle ++
-      graft.queries.LlmQueries5.oracle ++
-      graft.queries.LlmQueries6.oracle ++
-      graft.queries.LlmQueries7.oracle ++
-      graft.queries.LlmQueries8.oracle ++
-      graft.queries.LlmQueries9.oracle ++
-      graft.queries.LlmQueries10.oracle ++
-      graft.queries.LlmQueries11.oracle ++
-      graft.queries.LlmQueries12.oracle ++
-      graft.queries.LlmQueries13.oracle ++
-      graft.queries.LlmQueries14.oracle ++
-      graft.queries.LlmQueries15.oracle ++
-      graft.queries.LlmQueries16.oracle ++
-      graft.queries.LlmQueries17.oracle ++
-      graft.queries.LlmQueries18.oracle ++
-      graft.queries.PqQueries.oracle
+    registry.map { case (name, q) => name -> q.oracle }
 }

@@ -47,9 +47,8 @@ object T {
 
   /** Spread a small input across cores before a compute-heavy narrow
     * stage — SCALE-ADAPTIVELY. The width is a function of the estimated
-    * input size, never a constant: one task per `spark.graft.par.minBytesPerTask`
-    * (default 64 KiB; SPARK_GRAFT_PAR_MINBYTES overrides for probes) of
-    * estimated input, clamped to [1, defaultParallelism].
+    * input size, never a constant: one task per [[MinBytesPerTask]]
+    * (64 KiB) of estimated input, clamped to [1, defaultParallelism].
     * At production scale any real relation estimates far past
     * cores × minBytes, so the clamp makes this identical to the old
     * unconditional repartition(defaultParallelism); on kilobyte-sized
@@ -77,23 +76,21 @@ object T {
     * correct at every scale. */
   def par(spark: SparkSession, df: DataFrame): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
-    val n = parWidth(spark, df, cores)
+    val n = parWidth(df, cores)
     if (n <= 1) df else df.repartition(n)
   }
 
-  /** Adaptive width: ceil(estimatedBytes / minBytesPerTask) clamped to
+  /** The input bytes one [[par]] task must cover (calibration above). */
+  private val MinBytesPerTask = 64L << 10
+
+  /** Adaptive width: ceil(estimatedBytes / MinBytesPerTask) clamped to
     * [1, cores]. Unknown/huge estimates clamp to full width. */
-  private[graft] def parWidth(spark: SparkSession, df: DataFrame,
-      cores: Int): Int = {
-    val minBytes = spark.conf
-      .getOption("spark.graft.par.minBytesPerTask")
-      .orElse(sys.env.get("SPARK_GRAFT_PAR_MINBYTES"))
-      .map(_.toLong).getOrElse(64L << 10)
+  private[graft] def parWidth(df: DataFrame, cores: Int): Int = {
     val bytes =
       try df.queryExecution.analyzed.stats.sizeInBytes
       catch { case _: Throwable => BigInt(Long.MaxValue) }
-    if (bytes >= BigInt(minBytes) * cores) cores
-    else math.max(1, ((bytes + minBytes - 1) / minBytes).toInt)
+    if (bytes >= BigInt(MinBytesPerTask) * cores) cores
+    else math.max(1, ((bytes + MinBytesPerTask - 1) / MinBytesPerTask).toInt)
   }
 
   /** Full-width fan-out for CPU-BOUND narrow kernels (the pre-r17

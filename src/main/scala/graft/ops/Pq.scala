@@ -51,7 +51,8 @@ object Pq {
       iters: Int = 3, idCol: String = "vec_id",
       vecCol: String = "embedding"): Array[Array[Array[Long]]] = {
     require(m > 0 && k > 0 && iters >= 0, "m, k positive; iters >= 0")
-    val seeds = corpus
+    val vecs = corpus.where(col(vecCol).isNotNull) // a null vector has no code
+    val seeds = vecs
       .select(md5(col(idCol).cast("string")).as("__h"), col(vecCol))
       .orderBy(col("__h"))
       .limit(k)
@@ -70,7 +71,7 @@ object Pq {
     // (assignment: subDist over floats == subDistMicro over the micro'd
     // elements; update sums: floor(x·10⁶)+Offset either way).
     foldTrainMicro(
-      corpus.select(col(vecCol)).queryExecution.toRdd
+      vecs.select(col(vecCol)).queryExecution.toRdd
         .map { r =>
           val a = r.getArray(0)
           val dimN = a.numElements()
@@ -293,7 +294,8 @@ object Pq {
     * [[trainPqCodebooksMicro]]. */
   private def trainOnMicro(corpusMicro: DataFrame, m: Int, k: Int,
       iters: Int): Array[Array[Array[Long]]] = {
-    val seeds = corpusMicro
+    val vecs = corpusMicro.where(col("__vm").isNotNull)
+    val seeds = vecs
       .select(md5(col("__id").cast("string")).as("__h"), col("__vm"))
       .orderBy(col("__h"))
       .limit(k)
@@ -310,7 +312,7 @@ object Pq {
     // (residual join / permutation projection) runs ONCE into the
     // persisted RDD instead of once per iteration.
     foldTrainMicro(
-      corpusMicro.select(col("__vm")).queryExecution.toRdd
+      vecs.select(col("__vm")).queryExecution.toRdd
         .map(_.getArray(0).toLongArray()),
       books, m, k, subDim, iters)
   }
@@ -422,7 +424,7 @@ object Pq {
       m: Int, k: Int, iters: Int = 3, idCol: String = "vec_id",
       vecCol: String = "embedding"): Array[Array[Array[Long]]] =
     trainOnMicro(
-      corpus.select(col(idCol).as("__id"),
+      corpus.where(col(vecCol).isNotNull).select(col(idCol).as("__id"),
         permutedMicro(vecCol, perm).as("__vm")),
       m, k, iters)
 

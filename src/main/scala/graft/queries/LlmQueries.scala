@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{Components, Curation, Dedup, Similarity, TextAnalysis}
 import graft.multimodal.Multimodal
+import CommonSql.{normSql, hashSql}
 
 /** Training-data-pipeline operators (SURVEY §2.10) over the documents /
   * embeddings corpus, each driven through the real library modules with a
@@ -15,11 +16,6 @@ object LlmQueries {
 
   import T.sql.{cents => c0}
 
-  // Shared DuckDB fragments mirroring graft.ops.Dedup/TextAnalysis helpers.
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
-  private def hashSql(seed: Int, e: String) =
-    s"CAST('0x' || substring(md5('$seed|' || $e), 1, 15) AS BIGINT)"
   private[queries] def gramsCteFor(name: String, pred: String) =
     s"""$name AS (
        |  SELECT doc_id AS id, g.gram
@@ -605,59 +601,6 @@ object LlmQueries {
       .orderBy(col("doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "decon_containment" -> (deconContainment _),
-    "decon_bloom_gate" -> (deconBloomGate _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "decon_cross_pairs" -> (deconCrossPairs _),
-    "text_facets" -> (textFacets _),
-    "sessionize_events" -> (sessionizeEvents _),
-    "event_retention" -> (eventRetention _),
-    "session_overlap" -> (sessionOverlap _),
-    "j3_auto_overlap_join" -> (autoOverlapJoin _),
-    "salted_hot_key_agg" -> (saltedHotKeyAgg _),
-    "salted_skew_join" -> (saltedSkewJoin _),
-    "sample_cap_per_source" -> (sampleCapPerSource _),
-    "sample_global" -> (sampleGlobal _),
-    "sample_top_quantile" -> (sampleTopQuantile _),
-    "sample_temperature" -> (sampleTemperature _),
-    "sample_winsorize" -> (sampleWinsorize _),
-    "sketch_winsorize" -> (sketchWinsorize _),
-    "dedup_connected_keep" -> (dedupConnectedKeep _),
-    "dedup_exact_prefix" -> (dedupExactPrefix _),
-    "dedup_minhash_lsh" -> (dedupMinhashLsh _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_embedding_cosine" -> (dedupEmbeddingCosine _),
-    "dedup_embedding_cosine_exact" -> (dedupEmbeddingCosineExact _),
-    "dedup_cc_clusters" -> (dedupCcClusters _),
-    "sim_brute_topk" -> (simBruteTopk _),
-    "sim_lsh_topk" -> (simLshTopk _),
-    "sim_ivf_topk" -> (simIvfTopk _),
-    "sim_recall_eval" -> (simRecallEval _),
-    "sim_knn_graph" -> (simKnnGraph _),
-    "emb_knn_outliers" -> (embKnnOutliers _),
-    "sim_ivf_trained_topk" -> (simIvfTrainedTopk _),
-    "sample_stratified" -> (sampleStratified _),
-    "text_pii_redact" -> (textPiiRedact _),
-    "sketch_cardinality" -> (sketchCardinality _),
-    "sketch_heavy_hitters" -> (sketchHeavyHitters _),
-    "sketch_topk_served" -> (sketchTopkServed _),
-    "sketch_quantiles" -> (sketchQuantiles _),
-    "sketch_group_topk" -> (sketchGroupTopk _),
-    "curation_pipeline" -> (curationPipeline _),
-    "text_profile" -> (textProfile _),
-    "text_lang_confusion" -> (textLangConfusion _),
-    "text_robust_fingerprint" -> (textRobustFingerprint _),
-    "mm_binary_features" -> (mmBinaryFeatures _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_audio_features" -> (mmAudioFeatures _),
-    "mm_video_frames" -> (mmVideoFrames _),
-    "text_ngrams" -> (textNgrams _),
-    "text_boilerplate" -> (textBoilerplate _),
-    "sample_importance" -> (sampleImportance _),
-  )
-
   private val dotSql =
     "list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))"
   private def cosSql(d: String, aa: String, bb: String) =
@@ -777,26 +720,26 @@ object LlmQueries {
          |WHERE inter.i / psz.psz >= 0.6
          |ORDER BY corpus_id, probe_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val all: Seq[Query] = Seq(
     // Engine-portable HLL replay: same md5 registers, same exact-rational
     // α, same single integral division (Sketches.hllCardinalitySql keeps
     // the constants in one place).
-    "sketch_cardinality" ->
-      graft.ops.Sketches.hllCardinalitySql("events", "event_type", "user_id"),
+    Query("sketch_cardinality", sketchCardinality,
+      graft.ops.Sketches.hllCardinalitySql("events", "event_type", "user_id")),
     // Engine-portable CMS replay: same per-row md5 hashing, same counter
     // cells, same min-over-rows estimate (constants shared in
     // Sketches.cmsHeavyHittersSql).
-    "sketch_heavy_hitters" ->
-      graft.ops.Sketches.cmsHeavyHittersSql("events", "user_id", 50),
-    "sketch_topk_served" ->
-      graft.ops.Sketches.cmsTopKSql("events", "user_id", 50),
+    Query("sketch_heavy_hitters", sketchHeavyHitters,
+      graft.ops.Sketches.cmsHeavyHittersSql("events", "user_id", 50)),
+    Query("sketch_topk_served", sketchTopkServed,
+      graft.ops.Sketches.cmsTopKSql("events", "user_id", 50)),
     // Engine-portable histogram-quantile replay: same octave/sub-bin ids,
     // same integer rank comparison (Sketches.histQuantilesSql).
-    "sketch_quantiles" ->
-      graft.ops.Sketches.histQuantilesSql("events", "event_type", "value"),
-    "sketch_group_topk" ->
-      graft.ops.Sketches.cmsHeavyHittersByGroupSql("events", "event_type", "user_id", 5),
-    "dedup_cc_clusters" ->
+    Query("sketch_quantiles", sketchQuantiles,
+      graft.ops.Sketches.histQuantilesSql("events", "event_type", "value")),
+    Query("sketch_group_topk", sketchGroupTopk,
+      graft.ops.Sketches.cmsHeavyHittersByGroupSql("events", "event_type", "user_id", 5)),
+    Query("dedup_cc_clusters", dedupCcClusters,
       s"""WITH RECURSIVE bkt AS (
          |  SELECT vec_id, embedding, ${lshBucketSql("embedding")} AS bkt
          |  FROM embeddings),
@@ -813,8 +756,8 @@ object LlmQueries {
          |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
          |)
          |SELECT id AS vec_id, min(lab) AS cluster_id
-         |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin,
-    "sim_ivf_topk" ->
+         |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin),
+    Query("sim_ivf_topk", simIvfTopk,
       s"""WITH cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
          |             FROM embeddings WHERE vec_id % 50 = 0),
          |corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -843,11 +786,11 @@ object LlmQueries {
          |  JOIN corp q ON q.vec_id = cd.query_id
          |  JOIN corp n ON n.vec_id = cd.neighbor_id)
          |WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
     // kNN-graph replay: the same seeded sign buckets, the same hamming-1
     // probe set on the query side, exact-bucket on the corpus side,
     // per-node rank window.
-    "sim_knn_graph" ->
+    Query("sim_knn_graph", simKnnGraph,
       s"""WITH bkt AS MATERIALIZED (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          |    ${lshBucketSql("embedding")} AS b
@@ -866,10 +809,10 @@ object LlmQueries {
          |      ORDER BY ${ivfCos("qv", "v")} DESC, nid) AS rank
          |  FROM cand)
          |WHERE rank <= 3
-         |ORDER BY vec_id, rank""".stripMargin,
+         |ORDER BY vec_id, rank""".stripMargin),
     // ODIN outliers: the sim_knn_graph replay, then in-degree per target
     // with a left back-join restoring in-degree-0 vectors.
-    "emb_knn_outliers" ->
+    Query("emb_knn_outliers", embKnnOutliers,
       s"""WITH bkt AS MATERIALIZED (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          |    ${lshBucketSql("embedding")} AS b
@@ -892,10 +835,10 @@ object LlmQueries {
          |SELECT e.vec_id, coalesce(i.in_degree, 0) AS in_degree,
          |  coalesce(i.in_degree, 0) <= 1 AS is_outlier
          |FROM embeddings e LEFT JOIN indeg i USING (vec_id)
-         |ORDER BY e.vec_id""".stripMargin,
+         |ORDER BY e.vec_id""".stripMargin),
     // Recall@5 eval: the sim_ivf_topk and sim_brute_topk replays as CTEs,
     // then the integer recall metric over their (query, neighbor) sets.
-    "sim_recall_eval" ->
+    Query("sim_recall_eval", simRecallEval,
       s"""WITH cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
          |             FROM embeddings WHERE vec_id % 50 = 0),
          |corp AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -939,11 +882,11 @@ object LlmQueries {
          |FROM ext e LEFT JOIN aprx a
          |  ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
          |GROUP BY e.query_id
-         |ORDER BY e.query_id""".stripMargin,
+         |ORDER BY e.query_id""".stripMargin),
     // trained-IVF: replay the 3 unrolled micro-unit k-means iterations
     // (KmeansSql mirrors Similarity.trainIvfCentroidsMicro exactly), then
     // the same probe/re-rank as sim_ivf_topk against the trained cells.
-    "sim_ivf_trained_topk" ->
+    Query("sim_ivf_trained_topk", simIvfTrainedTopk,
       s"""WITH src AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
          |            FROM embeddings),
          |${KmeansSql.trainCtes("src", "TRUE", k = 10, iters = 3, dim = 64)},
@@ -965,24 +908,24 @@ object LlmQueries {
          |  JOIN src q ON q.vid = cd.query_id
          |  JOIN src n ON n.vid = cd.neighbor_id)
          |WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
-    "sample_cap_per_source" ->
+         |ORDER BY query_id, rank""".stripMargin),
+    Query("sample_cap_per_source", sampleCapPerSource,
       s"""SELECT doc_id, source FROM (
          |  SELECT doc_id, source,
          |    row_number() OVER (PARTITION BY source
          |      ORDER BY ${Curation.hashFractionSql("doc_id", "cap")}, doc_id) AS rk
          |  FROM documents)
          |WHERE rk <= 12
-         |ORDER BY doc_id""".stripMargin,
-    "sample_temperature" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("sample_temperature", sampleTemperature,
       s"""WITH c AS (SELECT source, count(*) AS ns FROM documents GROUP BY source),
          |m AS (SELECT min(ns) AS nmin FROM c)
          |SELECT doc_id, source
          |FROM documents JOIN c USING (source)
          |WHERE ${Curation.hashFractionSql("doc_id", "temp")} <
          |  sqrt(CAST((SELECT nmin FROM m) AS DOUBLE) / ns)
-         |ORDER BY doc_id""".stripMargin,
-    "sample_winsorize" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("sample_winsorize", sampleWinsorize,
       s"""WITH t AS (SELECT doc_id, source,
          |    CAST($nTokensSql AS INTEGER) AS n_tokens
          |  FROM documents),
@@ -995,10 +938,10 @@ object LlmQueries {
          |SELECT doc_id, source, n_tokens,
          |  least(n_tokens, th.t) AS n_tokens_clipped
          |FROM t JOIN th USING (source)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Sketch-path winsorize: the whole histogram-quantile replay rides
     // as a nested-WITH CTE; the clip itself is integer least().
-    "sketch_winsorize" ->
+    Query("sketch_winsorize", sketchWinsorize,
       s"""WITH q AS (
          |${graft.ops.Sketches.histQuantilesSql("events", "event_type", "value")}),
          |e AS (SELECT event_id, event_type,
@@ -1007,8 +950,8 @@ object LlmQueries {
          |SELECT e.event_id, e.event_type, e.value_micro,
          |  least(e.value_micro, q.p99_micro) AS value_clipped_micro
          |FROM e JOIN q ON e.event_type IS NOT DISTINCT FROM q.event_type
-         |ORDER BY e.event_id""".stripMargin,
-    "sample_top_quantile" ->
+         |ORDER BY e.event_id""".stripMargin),
+    Query("sample_top_quantile", sampleTopQuantile,
       s"""WITH t AS (SELECT doc_id, source,
          |    CAST($nTokensSql AS INTEGER) AS n_tokens
          |  FROM documents),
@@ -1018,8 +961,8 @@ object LlmQueries {
          |      FROM t)
          |SELECT doc_id, source, n_tokens FROM r
          |WHERE rk <= (250000 * n + 999999) // 1000000
-         |ORDER BY doc_id""".stripMargin,
-    "dedup_connected_keep" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("dedup_connected_keep", dedupConnectedKeep,
       s"""WITH RECURSIVE $gramsCte,
          |sig AS (SELECT id, $sigCols FROM grams GROUP BY id),
          |bands AS (SELECT id, r.range AS band, $bandCase AS band_key
@@ -1048,19 +991,19 @@ object LlmQueries {
          |  WHERE component <> id)
          |SELECT doc_id FROM documents
          |WHERE doc_id < 500 AND doc_id NOT IN (SELECT id FROM losers)
-         |ORDER BY doc_id""".stripMargin,
-    "sample_global" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("sample_global", sampleGlobal,
       s"""SELECT doc_id, source FROM (
          |  SELECT doc_id, source FROM documents
          |  ORDER BY ${Curation.hashFractionSql("doc_id", "gsamp")}, doc_id
          |  LIMIT 100)
-         |ORDER BY doc_id""".stripMargin,
-    "sample_stratified" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("sample_stratified", sampleStratified,
       s"""SELECT doc_id, lang, source, $splitCaseSql AS split
          |FROM documents
          |WHERE ${Curation.hashFractionSql("doc_id", "samp")} < $rateCaseSql
-         |ORDER BY doc_id""".stripMargin,
-    "curation_pipeline" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("curation_pipeline", curationPipeline,
       s"""WITH gated AS (
          |  SELECT doc_id, lang, text,
          |    $qualitySql AS quality, $langSql AS lang_guess
@@ -1078,8 +1021,8 @@ object LlmQueries {
          |SELECT doc_id, lang, lang_guess, quality, $splitCaseSql AS split
          |FROM deduped
          |WHERE ${Curation.hashFractionSql("doc_id", "samp")} < $rateCaseSql
-         |ORDER BY doc_id""".stripMargin,
-    "text_pii_redact" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("text_pii_redact", textPiiRedact,
       s"""WITH t AS (SELECT doc_id, $piiTextSql AS txt FROM documents)
          |SELECT doc_id,
          |  CAST(len(regexp_extract_all(txt, ${sqlLit(Curation.EmailRe)})) AS INTEGER) AS n_emails,
@@ -1089,8 +1032,8 @@ object LlmQueries {
          |    ${sqlLit(Curation.EmailRe)}, '<EMAIL>', 'g'),
          |    ${sqlLit(Curation.Ipv4Re)}, '<IP>', 'g'),
          |    ${sqlLit(Curation.PhoneRe)}, '<PHONE>', 'g')) AS redacted_md5
-         |FROM t ORDER BY doc_id""".stripMargin,
-    "sessionize_events" ->
+         |FROM t ORDER BY doc_id""".stripMargin),
+    Query("sessionize_events", sessionizeEvents,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |x AS (SELECT user_id, ts,
         |        lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev FROM e),
@@ -1107,11 +1050,11 @@ object LlmQueries {
         |  count(*) AS n_events,
         |  CAST(floor(epoch(max(ts))) AS BIGINT) - CAST(floor(epoch(min(ts))) AS BIGINT) AS duration_secs
         |FROM z GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "session_overlap" -> sessionOverlapSql,
+        |ORDER BY user_id, session_id""".stripMargin),
+    Query("session_overlap", sessionOverlap, sessionOverlapSql),
     // the auto-rewritten raw-predicate form computes the same relation
-    "j3_auto_overlap_join" -> sessionOverlapSql,
-    "event_retention" ->
+    Query("j3_auto_overlap_join", autoOverlapJoin, sessionOverlapSql),
+    Query("event_retention", eventRetention,
       """WITH e AS (SELECT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
         |           FROM events),
         |f AS (SELECT user_id, min(d) AS fd FROM e GROUP BY user_id)
@@ -1120,8 +1063,8 @@ object LlmQueries {
         |  count(DISTINCT e.user_id) AS n_users
         |FROM e JOIN f USING (user_id)
         |GROUP BY 1, 2
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-    "salted_skew_join" ->
+        |ORDER BY cohort_week, week_offset""".stripMargin),
+    Query("salted_skew_join", saltedSkewJoin,
       s"""WITH dim AS (
          |  SELECT DISTINCT event_type,
          |    upper(substring(event_type, 1, 1)) AS type_group
@@ -1130,24 +1073,24 @@ object LlmQueries {
          |  (CAST(sum(${c0("value")}) AS BIGINT) / 100.0) AS value_sum
          |FROM events JOIN dim USING (event_type)
          |GROUP BY type_group
-         |ORDER BY type_group""".stripMargin,
-    "salted_hot_key_agg" ->
+         |ORDER BY type_group""".stripMargin),
+    Query("salted_hot_key_agg", saltedHotKeyAgg,
       s"""SELECT event_type, count(*) AS n,
          |  (CAST(sum(${c0("value")}) AS BIGINT) / 100.0) AS value_sum
          |FROM events
          |GROUP BY event_type
-         |ORDER BY event_type""".stripMargin,
-    "dedup_exact_prefix" ->
+         |ORDER BY event_type""".stripMargin),
+    Query("dedup_exact_prefix", dedupExactPrefix,
       s"""SELECT md5(array_to_string((string_split(${normSql("text")}, ' '))[1:3], ' ')) AS content_key,
          |  min(doc_id) AS keep_id, count(*) AS n_dups
          |FROM documents
          |GROUP BY 1
          |HAVING count(*) > 1
-         |ORDER BY content_key""".stripMargin,
+         |ORDER BY content_key""".stripMargin),
     // the bloom-gated form computes the identical relation (no false
     // negatives + exact verify), so both keys share one oracle
-    "decon_bloom_gate" -> deconContainmentSql,
-    "dedup_incremental" ->
+    Query("decon_bloom_gate", deconBloomGate, deconContainmentSql),
+    Query("dedup_incremental", dedupIncremental,
       s"""WITH old AS (SELECT DISTINCT md5(${normSql("text")}) AS fp
          |            FROM documents WHERE doc_id % 2 = 0),
          |nw AS (SELECT doc_id, md5(${normSql("text")}) AS fp
@@ -1158,9 +1101,9 @@ object LlmQueries {
          |        row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
          |      FROM unseen)
          |SELECT doc_id FROM k WHERE rn = 1
-         |ORDER BY doc_id""".stripMargin,
-    "decon_containment" -> deconContainmentSql,
-    "decon_cross_pairs" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("decon_containment", deconContainment, deconContainmentSql),
+    Query("decon_cross_pairs", deconCrossPairs,
       s"""WITH ${gramsCteFor("gc", "doc_id < 500 AND doc_id % 2 = 0")},
          |${gramsCteFor("gp", "doc_id < 500 AND doc_id % 2 = 1")},
          |sc AS (SELECT id, $sigCols FROM gc GROUP BY id),
@@ -1186,8 +1129,8 @@ object LlmQueries {
          |JOIN szc sa ON sa.id = i.corpus_id
          |JOIN szp sb ON sb.id = i.probe_id
          |WHERE i.i / (sa.sz + sb.sz - i.i) >= 0.5
-         |ORDER BY corpus_id, probe_id""".stripMargin,
-    "dedup_minhash_lsh" ->
+         |ORDER BY corpus_id, probe_id""".stripMargin),
+    Query("dedup_minhash_lsh", dedupMinhashLsh,
       s"""WITH $gramsCte,
          |sig AS (
          |  SELECT id,
@@ -1222,8 +1165,8 @@ object LlmQueries {
          |JOIN sizes sa ON sa.id = i.id_a
          |JOIN sizes sb ON sb.id = i.id_b
          |WHERE i.i / (sa.sz + sb.sz - i.i) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-    "dedup_simhash" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("dedup_simhash", dedupSimhash,
       s"""WITH $gramsCte,
          |g2 AS (SELECT id, ${hashSql(999, "gram")} AS h FROM grams),
          |votes AS (
@@ -1248,8 +1191,8 @@ object LlmQueries {
          |)
          |SELECT id_a, id_b, hamming FROM pairs
          |WHERE hamming <= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-    "dedup_ngram_jaccard" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("dedup_ngram_jaccard", dedupNgramJaccard,
       """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
         |grams AS (
         |  SELECT doc_id AS id, g.gram
@@ -1269,8 +1212,8 @@ object LlmQueries {
         |JOIN sizes sa ON sa.id = i.id_a
         |JOIN sizes sb ON sb.id = i.id_b
         |WHERE i.i / (sa.sz + sb.sz - i.i) >= 0.55
-        |ORDER BY id_a, id_b""".stripMargin,
-    "dedup_embedding_cosine" ->
+        |ORDER BY id_a, id_b""".stripMargin),
+    Query("dedup_embedding_cosine", dedupEmbeddingCosine,
       s"""WITH a AS (SELECT vec_id, embedding, ${lshBucketSql("embedding")} AS bkt
          |           FROM embeddings),
          |     b AS (SELECT vec_id, embedding, ${lshBucketSql("embedding")} AS bkt
@@ -1279,18 +1222,18 @@ object LlmQueries {
          |  round($cosineExpr, 6) AS sim
          |FROM a JOIN b ON a.vec_id < b.vec_id AND a.bkt = b.bkt
          |WHERE round($cosineExpr, 6) >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin,
-    "dedup_embedding_cosine_exact" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("dedup_embedding_cosine_exact", dedupEmbeddingCosineExact,
       s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |  round($cosineExpr, 6) AS sim
          |FROM embeddings a JOIN embeddings b
          |  ON a.vec_id < b.vec_id AND a.vec_id < 1000 AND b.vec_id < 1000
          |WHERE round($cosineExpr, 6) >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
     // lshTopK(nPlanes = 6, multiProbe): probe set = exact bucket + one
     // xor per plane bit; a corpus vector's single bucket matches at most
     // one of the 7 distinct probes, so no DISTINCT is needed.
-    "sim_lsh_topk" ->
+    Query("sim_lsh_topk", simLshTopk,
       s"""WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
          |    ${lshBucketSql("embedding", 6)} AS bkt
          |  FROM embeddings),
@@ -1306,8 +1249,8 @@ object LlmQueries {
          |      ORDER BY ${ivfCos("qv", "nv")} DESC, neighbor_id) AS rank
          |  FROM cand)
          |WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
-    "sim_brute_topk" ->
+         |ORDER BY query_id, rank""".stripMargin),
+    Query("sim_brute_topk", simBruteTopk,
       s"""SELECT query_id, neighbor_id, sim, rank FROM (
          |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
          |    round($cosineExpr, 6) AS sim,
@@ -1316,8 +1259,8 @@ object LlmQueries {
          |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
          |  WHERE a.vec_id < 10)
          |WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
-    "text_facets" ->
+         |ORDER BY query_id, rank""".stripMargin),
+    Query("text_facets", textFacets,
       s"""WITH prof AS (
          |  SELECT doc_id, source,
          |    $nTokensSql AS n_tokens,
@@ -1328,13 +1271,13 @@ object LlmQueries {
          |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
          |  min(quality) AS min_quality, max(quality) AS max_quality
          |FROM prof GROUP BY source
-         |ORDER BY source""".stripMargin,
-    "text_lang_confusion" ->
+         |ORDER BY source""".stripMargin),
+    Query("text_lang_confusion", textLangConfusion,
       s"""SELECT lang, $langSql AS lang_guess, count(*) AS n
          |FROM documents
          |GROUP BY 1, 2
-         |ORDER BY lang, lang_guess""".stripMargin,
-    "text_profile" ->
+         |ORDER BY lang, lang_guess""".stripMargin),
+    Query("text_profile", textProfile,
       s"""SELECT doc_id,
          |  $nTokensSql AS n_tokens,
          |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS n_subwords,
@@ -1346,15 +1289,15 @@ object LlmQueries {
          |  $langSql AS lang_guess,
          |  md5(${normSql("text")}) AS fingerprint
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "text_robust_fingerprint" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("text_robust_fingerprint", textRobustFingerprint,
       s"""SELECT doc_id,
          |  list_min(list_transform(
          |    generate_series(1, greatest(length(${normSql("text")}) - 7, 1)),
          |    i -> md5(substring(${normSql("text")}, CAST(i AS INTEGER), 8)))) AS rfp
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "mm_binary_features" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("mm_binary_features", mmBinaryFeatures,
       """SELECT doc_id,
         |  CAST(length(text) AS BIGINT) AS byte_len,
         |  CAST(ascii(substring(text, 1, 1)) AS INTEGER) AS first_byte,
@@ -1363,30 +1306,30 @@ object LlmQueries {
         |  CAST(16 + (ascii(substring(text, 1, 1)) & 15) AS INTEGER) AS width,
         |  CAST(16 + (ascii(substring(text, 2, 1)) & 15) AS INTEGER) AS height
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-    "mm_frame_sample" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("mm_frame_sample", mmFrameSample,
       """SELECT doc_id, CAST(r.i // 16 AS INTEGER) AS frame_idx,
         |  CAST(ascii(substring(text, CAST(r.i + 1 AS INTEGER), 1)) AS INTEGER) AS frame_byte
         |FROM documents CROSS JOIN LATERAL
         |  (SELECT unnest(generate_series(0, length(text) - 1, 16)) AS i) r
         |WHERE doc_id < 50
-        |ORDER BY doc_id, frame_idx""".stripMargin,
+        |ORDER BY doc_id, frame_idx""".stripMargin),
     // mirror of Multimodal.synthMjpegAvi's construction formula: the AVI
     // round-trips through a real RIFF+JPEG encode/decode on the Spark
     // side; the oracle recomputes the formula-derived frame geometry.
-    "mm_video_frames" ->
+    Query("mm_video_frames", mmVideoFrames,
       """SELECT doc_id, CAST(r.range AS INTEGER) AS frame_idx,
         |  CAST(16 + doc_id % 8 AS INTEGER) AS width,
         |  CAST(12 + doc_id % 5 AS INTEGER) AS height
         |FROM documents CROSS JOIN range(4) r
         |WHERE doc_id <= 200 AND r.range < 2 + doc_id % 3
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "sample_importance" ->
+        |ORDER BY doc_id, frame_idx""".stripMargin),
+    Query("sample_importance", sampleImportance,
       s"""SELECT doc_id, lang, $qualitySql AS quality
          |FROM documents
          |WHERE ${Curation.hashFractionSql("doc_id", "wsamp")} < $qualitySql
-         |ORDER BY doc_id""".stripMargin,
-    "text_boilerplate" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("text_boilerplate", textBoilerplate,
       s"""WITH b AS (SELECT doc_id, unnest(list_transform(range(len(ws) - 1),
          |        i -> ws[i + 1] || ' ' || ws[i + 2])) AS bigram
          |      FROM (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
@@ -1398,8 +1341,8 @@ object LlmQueries {
          |SELECT doc_id, count(DISTINCT b.bigram) AS n_hot_bigrams
          |FROM b JOIN hot ON b.bigram = hot.bigram
          |GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
-    "text_ngrams" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("text_ngrams", textNgrams,
       s"""WITH d AS (SELECT string_split(${normSql("text")}, ' ') AS ws FROM documents),
          |b AS (SELECT unnest(list_transform(range(len(ws) - 1),
          |        i -> ws[i + 1] || ' ' || ws[i + 2])) AS bigram
@@ -1409,11 +1352,11 @@ object LlmQueries {
          |GROUP BY bigram
          |HAVING count(*) >= 2
          |ORDER BY n DESC, bigram
-         |LIMIT 100""".stripMargin,
+         |LIMIT 100""".stripMargin),
     // The WAV round-trip is opaque to SQL, but the decoded features are
     // fully determined by the synth formula: n = 100 + doc_id % 50 frames
     // of sample_i = ((doc_id*31 + i*7) % 65536) - 32768 at 8 kHz mono.
-    "mm_audio_features" ->
+    Query("mm_audio_features", mmAudioFeatures,
       """SELECT doc_id,
         |  CAST(8000 AS INTEGER) AS sample_rate,
         |  CAST(1 AS INTEGER) AS channels,
@@ -1424,6 +1367,6 @@ object LlmQueries {
         |    / (100 + doc_id % 50)), 6) AS rms
         |FROM documents
         |WHERE doc_id <= 300
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
   )
 }

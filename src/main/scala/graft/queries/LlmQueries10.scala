@@ -140,22 +140,6 @@ object LlmQueries10 {
     graft.ops.Sessions.theilSenSlope(T.events(spark, dir))
       .orderBy(col("user_id"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sft_turn_stats" -> (sftTurnStats _),
-    "sft_role_violations" -> (sftRoleViolations _),
-    "sft_response_dedup" -> (sftResponseDedup _),
-    "sft_pair_ratio" -> (sftPairRatio _),
-    "sft_pack_conversations" -> (sftPackConversations _),
-    "pref_win_matrix" -> (prefWinMatrix _),
-    "pref_bt_scores" -> (prefBtScores _),
-    "pref_bt_calibration" -> (prefBtCalibration _),
-    "text_gazetteer_spans" -> (textGazetteerSpans _),
-    "validation_documents" -> (validationDocuments _),
-    "validation_events" -> (validationEvents _),
-    "decon_min_k_prob" -> (deconMinKProb _),
-    "event_theil_sen" -> (eventTheilSen _),
-  )
-
   // The event-derived comparison log (must mirror
   // Preference.comparisonsFromEvents: adjacent same-user events, differing
   // type and value, higher value wins).
@@ -251,8 +235,8 @@ object LlmQueries10 {
       |         CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
       |  FROM documents)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "sft_turn_stats" ->
+  val all: Seq[Query] = Seq(
+    Query("sft_turn_stats", sftTurnStats,
       s"""WITH $convCte,
          |w AS (SELECT *, lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
          |      FROM conv),
@@ -270,8 +254,8 @@ object LlmQueries10 {
          |  (1000000 * assistant_tokens) // greatest(total_tokens, 1) AS assistant_ratio_micro,
          |  first_role, n_role_repeats,
          |  (n_role_repeats = 0 AND coalesce(first_role = 'user', FALSE)) AS alternation_ok
-         |FROM g ORDER BY conv_id""".stripMargin,
-    "sft_role_violations" ->
+         |FROM g ORDER BY conv_id""".stripMargin),
+    Query("sft_role_violations", sftRoleViolations,
       s"""WITH $convCte,
          |w AS (SELECT conv_id, turn_idx, role,
          |    lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role
@@ -281,8 +265,8 @@ object LlmQueries10 {
          |       ELSE 'repeated_role' END AS violation
          |FROM w
          |WHERE (turn_idx = 0 AND role <> 'user') OR role = prev_role
-         |ORDER BY conv_id, turn_idx""".stripMargin,
-    "sft_response_dedup" ->
+         |ORDER BY conv_id, turn_idx""".stripMargin),
+    Query("sft_response_dedup", sftResponseDedup,
       s"""WITH $convCte,
          |a AS (SELECT conv_id, turn_idx, n_tokens,
          |    array_to_string(string_split_regex(trim(text), '\\s+')[1:8], ' ') AS opening
@@ -294,8 +278,8 @@ object LlmQueries10 {
          |  (a.conv_id * 8 + a.turn_idx) = g.keep_key AS is_canonical,
          |  g.keep_key // 8 AS keep_conv_id, g.keep_key % 8 AS keep_turn_idx
          |FROM a JOIN g ON g.opening = a.opening
-         |ORDER BY conv_id, turn_idx""".stripMargin,
-    "sft_pair_ratio" ->
+         |ORDER BY conv_id, turn_idx""".stripMargin),
+    Query("sft_pair_ratio", sftPairRatio,
       s"""WITH $convCte,
          |p AS (SELECT conv_id, turn_idx, role, n_tokens,
          |    lead(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS next_role,
@@ -305,8 +289,8 @@ object LlmQueries10 {
          |  next_tokens AS response_tokens,
          |  (1000000 * next_tokens) // greatest(n_tokens, 1) AS ratio_micro
          |FROM p WHERE role = 'user' AND next_role = 'assistant'
-         |ORDER BY conv_id, prompt_turn""".stripMargin,
-    "pref_win_matrix" ->
+         |ORDER BY conv_id, prompt_turn""".stripMargin),
+    Query("pref_win_matrix", prefWinMatrix,
       s"""WITH $cmpCte,
          |m AS (SELECT least(a, b) AS model_a, greatest(a, b) AS model_b,
          |    CAST(count(*) AS BIGINT) AS n_games,
@@ -315,12 +299,12 @@ object LlmQueries10 {
          |SELECT model_a, model_b, n_games, wins_a,
          |  n_games - wins_a AS wins_b,
          |  (1000000 * wins_a) // n_games AS win_rate_a_micro
-         |FROM m ORDER BY model_a, model_b""".stripMargin,
-    "pref_bt_scores" -> btSql(5),
-    "pref_bt_calibration" -> btCalibrationSql(5),
+         |FROM m ORDER BY model_a, model_b""".stripMargin),
+    Query("pref_bt_scores", prefBtScores, btSql(5)),
+    Query("pref_bt_calibration", prefBtCalibration, btCalibrationSql(5)),
     // Conversation totals from the conv CTE, then the sample_pack_bins
     // sharded-cumsum recipe keyed by conv_id at 1024 tokens / 8 shards.
-    "sft_pack_conversations" ->
+    Query("sft_pack_conversations", sftPackConversations,
       s"""WITH $convCte,
          |t AS (SELECT conv_id, CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
          |    md5(CAST(conv_id AS VARCHAR)) AS h
@@ -335,10 +319,10 @@ object LlmQueries10 {
          |SELECT conv_id, shard, CAST(strt // 1024 AS BIGINT) AS bin_id,
          |  CAST(strt % 1024 AS BIGINT) AS bin_offset,
          |  total_tokens
-         |FROM c ORDER BY conv_id""".stripMargin,
+         |FROM c ORDER BY conv_id""".stripMargin),
     // Same per-length n-gram construction: 0-based start positions, the
     // range upper bound (2000) exceeds any document's token count.
-    "text_gazetteer_spans" ->
+    Query("text_gazetteer_spans", textGazetteerSpans,
       s"""WITH p(phrase, phrase_len) AS (VALUES
          |  ${gazetteer.map { ph =>
                val t = ph.trim.toLowerCase.split("\\s+")
@@ -356,10 +340,10 @@ object LlmQueries10 {
          |  WHERE r.range + pl.l <= len(toks))
          |SELECT g.doc_id, g.start_token, g.phrase_len, g.phrase
          |FROM g JOIN p ON p.phrase = g.phrase AND p.phrase_len = g.phrase_len
-         |ORDER BY g.doc_id, g.start_token, g.phrase_len""".stripMargin,
+         |ORDER BY g.doc_id, g.start_token, g.phrase_len""".stripMargin),
     // One aggregate row, stacked to one row per constraint — the same
     // exact integer micro fractions, thresholds as BIGINT literals.
-    "validation_documents" ->
+    Query("validation_documents", validationDocuments,
       """WITH a AS (SELECT
         |    CAST(count(doc_id) AS BIGINT) AS n0,
         |    CAST(count(*) AS BIGINT) AS d,
@@ -380,8 +364,8 @@ object LlmQueries10 {
         |  UNION ALL SELECT 'text_complete', (1000000 * n6) // greatest(d, 1), CAST(1000000 AS BIGINT) FROM a)
         |SELECT check_name, metric_micro, min_required_micro,
         |  metric_micro >= min_required_micro AS passed
-        |FROM r ORDER BY check_name""".stripMargin,
-    "validation_events" ->
+        |FROM r ORDER BY check_name""".stripMargin),
+    Query("validation_events", validationEvents,
       """WITH a AS (SELECT
         |    CAST(count(DISTINCT event_id) AS BIGINT) AS n0,
         |    CAST(count(*) AS BIGINT) AS d,
@@ -398,10 +382,10 @@ object LlmQueries10 {
         |  UNION ALL SELECT 'value_in_range', (1000000 * n4) // greatest(d, 1), CAST(1000000 AS BIGINT) FROM a)
         |SELECT check_name, metric_micro, min_required_micro,
         |  metric_micro >= min_required_micro AS passed
-        |FROM r ORDER BY check_name""".stripMargin,
+        |FROM r ORDER BY check_name""".stripMargin),
     // The shared KN chain's per-type occ relation, ranked ascending per
     // doc with the (o, w1, w2) tie pin, bottom ceil(20%) kept.
-    "decon_min_k_prob" ->
+    Query("decon_min_k_prob", deconMinKProb,
       s"""WITH ${LlmQueries7.knCtes},
          |rk AS (SELECT id, o,
          |    row_number() OVER (PARTITION BY id ORDER BY o, w1, w2) AS rn,
@@ -416,14 +400,14 @@ object LlmQueries10 {
          |  coalesce(mk.k_types, 0) AS k_types,
          |  coalesce(mk.min_k_micro, 0) AS min_k_micro
          |FROM documents d LEFT JOIN mk ON mk.id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin),
     // Micro-quantized pairwise slopes, rank-median per user;
     // same-timestamp pairs excluded. The slope division is written
     // magnitude-then-sign (r13 hardening, same class as cosMicroOver):
     // value-identical under a truncating `//`, robust to a flooring
     // build — Spark's `div` twin truncates, so negative slopes with a
     // remainder must truncate here too.
-    "event_theil_sen" ->
+    Query("event_theil_sen", eventTheilSen,
       """WITH e AS (SELECT user_id AS k, epoch_us(CAST(ts AS TIMESTAMP)) AS t,
         |    CAST(round(value * 100, 0) AS BIGINT) AS v FROM events),
         |pr AS (SELECT a.k,
@@ -442,6 +426,6 @@ object LlmQueries10 {
         |  coalesce(med.n_pairs, 0) AS n_pairs,
         |  coalesce(med.slope_micro, 0) AS slope_micro
         |FROM np LEFT JOIN med ON med.k = np.k
-        |ORDER BY user_id""".stripMargin,
+        |ORDER BY user_id""".stripMargin),
   )
 }

@@ -47,11 +47,6 @@ object LlmQueries11 {
     Similarity.ivfRetrainAdvice(mergedState(spark, dir))
       .orderBy(col("cell"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_ivf_incremental" -> (simIvfIncremental _),
-    "sim_ivf_retrain" -> (simIvfRetrain _),
-  )
-
   // Shared exact replay: quantize, assign every vector (base AND
   // extension) against the base-trained stride centroids with the
   // integer-micro cosine argmax, then integer-aggregate per (cell, dim).
@@ -81,14 +76,14 @@ object LlmQueries11 {
        |  FROM assign a JOIN corp c USING (vec_id) CROSS JOIN range(64) r
        |  GROUP BY 1, 2)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "sim_ivf_incremental" ->
+  val all: Seq[Query] = Seq(
+    Query("sim_ivf_incremental", simIvfIncremental,
       s"""WITH $stateCtes
          |SELECT cell, dim_idx, n_vecs, sum_micro,
          |  CAST((sum_micro + n_vecs * 1000000000) // n_vecs
          |       - 1000000000 AS BIGINT) AS centroid_micro
-         |FROM st ORDER BY cell, dim_idx""".stripMargin,
-    "sim_ivf_retrain" ->
+         |FROM st ORDER BY cell, dim_idx""".stripMargin),
+    Query("sim_ivf_retrain", simIvfRetrain,
       s"""WITH $stateCtes,
          |pc AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vecs
          |       FROM assign GROUP BY 1),
@@ -99,6 +94,6 @@ object LlmQueries11 {
          |    AS load_micro,
          |  (n_vecs * cc * 1000000) // greatest(tt, 1) > 4000000
          |    AS needs_retrain
-         |FROM pc CROSS JOIN t ORDER BY cell""".stripMargin,
+         |FROM pc CROSS JOIN t ORDER BY cell""".stripMargin),
   )
 }

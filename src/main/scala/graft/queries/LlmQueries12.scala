@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{Components, Curation, Sketches, TextAnalysis, Valuation}
 import LlmQueries9.ExactSql
+import CommonSql.marginCte
 
 /** Round-12 registry: four new first-class pipeline operators —
   * t-closeness (completing the privacy-audit triad), KMV/theta-sketch
@@ -189,17 +190,6 @@ object LlmQueries12 {
       .orderBy(col("source"), col("bin"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "quality_isotonic_fit" -> (qualityIsotonicFit _),
-    "event_holt_forecast" -> (eventHoltForecast _),
-    "link_fellegi_sunter" -> (linkFellegiSunter _),
-    "privacy_t_closeness" -> (privacyTCloseness _),
-    "sketch_theta_setops" -> (sketchThetaSetops _),
-    "text_textrank_sentences" -> (textTextrank _),
-    "mm_image_phash_dedup" -> (mmImagePhashDedup _),
-    "graph_betweenness" -> (graphBetweenness _),
-  )
-
   /** Shared oracle CTEs for the linkage queries: dirty-twin generation,
     * acctbal-bucket blocking, candidate flags, and the one-row m/u
     * parameter aggregate ([[linkageCands]]'s replay). */
@@ -248,12 +238,12 @@ object LlmQueries12 {
       |      AS BIGINT) AS ua_seg
       |  FROM cands)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val all: Seq[Query] = Seq(
     // The decile-bin CTEs of quality_decile_calibration, then the
     // closed max-min PAV form on floored interval rates: A(j,k) from
     // prefix-sum pairs, min over k ≥ i per j, max over j ≤ i.
-    "quality_isotonic_fit" ->
-      s"""WITH ${LlmQueries2.marginCte},
+    Query("quality_isotonic_fit", qualityIsotonicFit,
+      s"""WITH ${marginCte},
          |lab AS (SELECT s.doc_id, s.margin, d.source,
          |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS label
          |  FROM s JOIN documents d USING (doc_id)),
@@ -287,12 +277,12 @@ object LlmQueries12 {
          |  CAST((1000000 * bn.np) // bn.n AS BIGINT) AS raw_rate_micro,
          |  iso.iso_rate_micro
          |FROM bins bn JOIN iso USING (source, bin)
-         |ORDER BY source, bin""".stripMargin,
+         |ORDER BY source, bin""".stripMargin),
     // The identical Holt trajectory as a recursive CTE: the offset-
     // floored level/trend recursion step-for-step (l2 computed in the
     // inner select so the b update can reference it), final row per
     // group via a rank window, forecasts as l + h·b.
-    "event_holt_forecast" ->
+    Query("event_holt_forecast", eventHoltForecast,
       """WITH RECURSIVE daily AS (
         |  SELECT event_type, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
         |    CAST(count(*) AS BIGINT) AS x
@@ -326,11 +316,11 @@ object LlmQueries12 {
         |  l + 3 * b AS fc3_micro
         |FROM (SELECT *, row_number() OVER (PARTITION BY event_type
         |    ORDER BY n DESC) AS rr FROM rec)
-        |WHERE rr = 1 ORDER BY event_type""".stripMargin,
+        |WHERE rr = 1 ORDER BY event_type""".stripMargin),
     // Dirty-twin generation (md5-draw corruptions), acctbal-bucket
     // blocking, one parameter aggregate, the smoothed likelihood-ratio
     // product in HUGEINT (mirrors the kernel's DECIMAL(38,0) route).
-    "link_fellegi_sunter" ->
+    Query("link_fellegi_sunter", linkFellegiSunter,
       s"""WITH $linkageCandsCtes,
         |scored AS (SELECT key_a, key_b, name_agree, nation_agree, seg_agree,
         |    is_match,
@@ -346,12 +336,12 @@ object LlmQueries12 {
         |      * (m + 2) * (m + 2) * (m + 2)) AS BIGINT) AS ratio_micro
         |  FROM cands CROSS JOIN par)
         |SELECT *, ratio_micro > 1000000 AS is_link
-        |FROM scored ORDER BY key_a, key_b""".stripMargin,
+        |FROM scored ORDER BY key_a, key_b""".stripMargin),
     // Triangular-join cumulatives over the bounded value domain, then
     // the exact EMD rational per class: Σ|N·C_i − n·G_i| scaled to
     // micro by ONE floor division (HUGEINT mirrors Spark's
     // DECIMAL(38,0) route).
-    "privacy_t_closeness" ->
+    Query("privacy_t_closeness", privacyTCloseness,
       """WITH base AS (SELECT lang, source, n_chars // 200 AS v FROM documents),
         |counts AS (SELECT v, CAST(count(*) AS BIGINT) AS g FROM base GROUP BY v),
         |gcum AS (SELECT a.v, CAST(sum(b.g) AS BIGINT) AS gcum
@@ -381,14 +371,14 @@ object LlmQueries12 {
         |  CASE WHEN m <= 1 THEN 0 ELSE
         |    (num * 1000000) // ((m - 1) * CAST(class_size AS HUGEINT) * n_total)
         |  END > 150000 AS at_risk
-        |FROM agg ORDER BY lang, source""".stripMargin,
-    "sketch_theta_setops" ->
-      (Sketches.kmvSetOpsSql("events", "event_type", "user_id", 64)),
+        |FROM agg ORDER BY lang, source""".stripMargin),
+    Query("sketch_theta_setops", sketchThetaSetops,
+      (Sketches.kmvSetOpsSql("events", "event_type", "user_id", 64))),
     // Pixel formula → 32×32 floor-mean milli-luma blocks → two integer
     // DCT stages against the embedded basis table → median-thresholded
     // AC bits → exact-hash clusters. The basis VALUES are generated
     // from the SAME StrictMath table the Scala kernel uses.
-    "mm_image_phash_dedup" ->
+    Query("mm_image_phash_dedup", mmImagePhashDedup,
       s"""WITH ids AS (SELECT doc_id, doc_id % 40 AS seed
          |  FROM documents WHERE doc_id <= 300),
          |px AS (SELECT doc_id, x.range AS x, y.range AS y,
@@ -420,12 +410,12 @@ object LlmQueries12 {
          |SELECT h.doc_id, h.phash, cl.cluster_id,
          |  h.doc_id = cl.cluster_id AS is_canonical
          |FROM hsh h JOIN cl USING (phash)
-         |ORDER BY h.doc_id""".stripMargin,
+         |ORDER BY h.doc_id""".stripMargin),
     // The graph_bfs_hops edge CTEs, then the unrolled Brandes sweep:
     // forward σ accumulation per level (NOT EXISTS = the per-seed
     // visited guard), backward floored dependency terms
     // ⌊σ_v·(10⁶+δ_w)/σ_w⌋ per level, summed over seeds.
-    "graph_betweenness" ->
+    Query("graph_betweenness", graphBetweenness,
       s"""WITH ${LlmQueries.gramsCteFor("grams", "doc_id < 500")},
          |sig AS (SELECT id, ${LlmQueries.sigCols} FROM grams GROUP BY id),
          |bands AS (SELECT id, r.range AS band, ${LlmQueries.bandCase} AS band_key
@@ -488,11 +478,11 @@ object LlmQueries12 {
          |SELECT id AS doc_id, CAST(sum(delta) AS BIGINT) AS bc_micro,
          |  CAST(count(*) AS BIGINT) AS n_seeds
          |FROM allv WHERE id <> seed GROUP BY id
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Sentence explode → distinct whitespace tokens → per-doc overlap
     // clique → Dice-micro weights → the graph_weighted_rank iteration
     // replay (same u0/damping integer arithmetic) → top-2 per doc.
-    "text_textrank_sentences" -> {
+    Query("text_textrank_sentences", textTextrank, {
       val iterCtes = (1 to 3).map { i =>
         s"""c$i AS (SELECT e.dst AS id,
            |    CAST(sum((CAST(p.pr AS HUGEINT) * e.w) // o.st) AS BIGINT)
@@ -543,6 +533,6 @@ object LlmQueries12 {
          |SELECT doc_id, sent_idx, pr, CAST(rank AS BIGINT) AS rank
          |FROM fin WHERE rank <= 2
          |ORDER BY doc_id, rank""".stripMargin
-    },
+    }),
   )
 }

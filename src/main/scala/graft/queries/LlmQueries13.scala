@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.Similarity
 import LlmQueries9.ExactSql
+import CommonSql.normSql
 
 /** Round-13 registry: the `sim_bitext_mine` driver-divergence bisection
   * (VERDICT r12 item 1), the shuffled IVF serve path under the gate,
@@ -201,21 +202,6 @@ object LlmQueries13 {
       .orderBy(col("doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_ivf_shuffled_topk" -> (simIvfShuffledTopk _),
-    "sim_bitext_mine_shuffled" -> (simBitextMineShuffled _),
-    "text_unigram_segment" -> (textUnigramSegment _),
-    "link_fellegi_sunter_logodds" -> (linkFellegiSunterLogOdds _),
-    "link_fellegi_sunter_em" -> (linkFellegiSunterEm _),
-    "value_knn_shapley_truncated" -> (valueKnnShapleyTruncated _),
-    // Stages 1-5 retired from the registry in round 14 (VERDICT r13
-    // item 6) after the divergence was root-caused to oracle HUGEINT
-    // serialization and fixed: the margin probe stays as the standing
-    // confirmation instrument, the stage functions stay callable for
-    // any future bisection.
-    "bitext_probe_margin" -> (bitextProbeMargin _),
-  )
-
   /** Unrolled SQL replay of [[graft.ops.Linkage.log2Micro]] over a
     * `vals(name, v)` CTE: exact bit length (float-log2 seed with the
     * shift-verified ±1 correction, the isqrt discipline), the 32-bit
@@ -321,8 +307,6 @@ object LlmQueries13 {
     * single-char UNK fallback) → per-doc aggregates. Mirrors
     * [[graft.ops.TextAnalysis.unigramSegmentStats]] exactly. */
   private def unigramOracle: String = {
-    val norm = "trim(regexp_replace(regexp_replace(lower(text), " +
-      "'[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
     val dpSteps = (1 to 16).map { k =>
       s"""uc$k AS (SELECT e.chunk, d.sc + e.s AS cs, d.np + 1 AS cn
          |  FROM ed e JOIN ua${k - 1} d ON d.chunk = e.chunk AND d.pos = e.i
@@ -334,7 +318,7 @@ object LlmQueries13 {
          |  GROUP BY c.chunk, m.sc),
          |ua$k AS MATERIALIZED (SELECT * FROM ua${k - 1} UNION ALL SELECT * FROM ud$k)""".stripMargin
     }.mkString(",\n")
-    s"""WITH wz AS (SELECT doc_id, string_split($norm, ' ') AS ws
+    s"""WITH wz AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
        |  FROM documents),
        |w AS (SELECT doc_id AS id, ws[CAST(r.i + 1 AS INTEGER)] AS word
        |  FROM wz CROSS JOIN LATERAL
@@ -450,19 +434,21 @@ object LlmQueries13 {
        |  FROM ($sims)) WHERE rank <= 4""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val all: Seq[Query] = Seq(
     // Same relation as sim_ivf_trained_topk by construction (only the
     // exchange strategy differs), so the oracle is shared verbatim.
-    "sim_ivf_shuffled_topk" -> LlmQueries.oracle("sim_ivf_trained_topk"),
+    Query("sim_ivf_shuffled_topk", simIvfShuffledTopk,
+      Query.byName(LlmQueries.all)("sim_ivf_trained_topk").oracle),
     // Identical relation to sim_bitext_mine (exchange strategy is the
     // only difference) — shared oracle; see simBitextMineShuffled doc
     // for the differential-diagnostic role.
-    "sim_bitext_mine_shuffled" -> LlmQueries9.oracle("sim_bitext_mine"),
-    "text_unigram_segment" -> unigramOracle,
+    Query("sim_bitext_mine_shuffled", simBitextMineShuffled,
+      Query.byName(LlmQueries9.all)("sim_bitext_mine").oracle),
+    Query("text_unigram_segment", textUnigramSegment, unigramOracle),
     // The shared dirty-twin cands/par CTEs, the 14 smoothed counts as a
     // vals relation, the unrolled log2Micro chain, one conditional-agg
     // pivot to per-field weights, then a map-only score per pair.
-    "link_fellegi_sunter_logodds" ->
+    Query("link_fellegi_sunter_logodds", linkFellegiSunterLogOdds,
       s"""WITH ${LlmQueries12.linkageCandsCtes},
          |vals AS (
          |  SELECT 'm2' AS name, m + 2 AS v FROM par
@@ -511,12 +497,12 @@ object LlmQueries13 {
          |    + (CASE WHEN seg_agree THEN l_seg_ma + l_u2 - l_seg_ua - l_m2
          |        ELSE l_seg_md + l_u2 - l_seg_ud - l_m2 END) > 0 AS is_link
          |FROM cands CROSS JOIN wt
-         |ORDER BY key_a, key_b""".stripMargin,
+         |ORDER BY key_a, key_b""".stripMargin),
     // The shared dirty-twin cands CTEs + the unrolled 5-round
     // quantized-integer EM on the 8 pattern counts, final E-step
     // posterior joined back per pair. No labels consumed by the
     // estimation; is_match is an audit column.
-    "link_fellegi_sunter_em" ->
+    Query("link_fellegi_sunter_em", linkFellegiSunterEm,
       s"""WITH ${LlmQueries12.linkageCandsCtes},
          |${fsEmCtes(5)}
          |SELECT pt.key_a, pt.key_b, pt.name_agree, pt.nation_agree,
@@ -524,13 +510,13 @@ object LlmQueries13 {
          |  CAST(ef.post AS BIGINT) AS posterior_micro,
          |  ef.post > 500000 AS is_link
          |FROM pats pt JOIN ef ON ef.pat = pt.pat
-         |ORDER BY pt.key_a, pt.key_b""".stripMargin,
+         |ORDER BY pt.key_a, pt.key_b""".stripMargin),
     // The shared corp/cent/assignment replay restricted to the panel
     // split (assignment is per-row, so computing it over corp and
     // filtering parity in the candidate join is identical to assigning
     // the split relations), the rank <= 16 candidate cut, then the
     // value_knn_shapley recursion with n = the per-test candidate count.
-    "value_knn_shapley_truncated" ->
+    Query("value_knn_shapley_truncated", valueKnnShapleyTruncated,
       s"""WITH $corpCte,
          |$centCte,
          |$scored0Cte,
@@ -573,8 +559,8 @@ object LlmQueries13 {
          |  FROM contrib)
          |SELECT train_id, CAST(count(*) AS BIGINT) AS n_tests,
          |  CAST(sum(shap_nano) AS BIGINT) AS shap_nano_sum
-         |FROM shap GROUP BY train_id ORDER BY train_id""".stripMargin,
-    "bitext_probe_margin" ->
+         |FROM shap GROUP BY train_id ORDER BY train_id""".stripMargin),
+    Query("bitext_probe_margin", bitextProbeMargin,
       s"""WITH $corpCte,
          |$centCte,
          |$scored0Cte,
@@ -604,6 +590,6 @@ object LlmQueries13 {
          |FROM cand c
          |JOIN fagg a ON a.src_id = c.src_id
          |JOIN bagg g ON g.tgt_id = c.tgt_id
-         |ORDER BY c.src_id, c.tgt_id""".stripMargin,
+         |ORDER BY c.src_id, c.tgt_id""".stripMargin),
   )
 }

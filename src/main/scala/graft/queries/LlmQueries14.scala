@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
+import CommonSql.{hashSql, normSql}
 
 /** Round-13 extension registry: exact time-series autocorrelation, the
   * WordPiece tokenizer (completing the BPE / unigram-LM / WordPiece
@@ -367,33 +368,6 @@ object LlmQueries14 {
         etaNum = 256L, etaDen = 1L)
       .orderBy(col("domain"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "event_autocorr" -> (eventAutocorr _),
-    "text_wordpiece_segment" -> (textWordpieceSegment _),
-    "quality_logistic_train" -> (qualityLogisticTrain _),
-    "curation_cartography" -> (curationCartography _),
-    "curation_forgetting" -> (curationForgetting _),
-    "quality_gd_curve" -> (qualityGdCurve _),
-    "curation_data_diet" -> (curationDataDiet _),
-    "curation_rho_loss" -> (curationRhoLoss _),
-    "value_tracin_panel" -> (valueTracinPanel _),
-    "value_datainf_panel" -> (valueDatainfPanel _),
-    "value_tracin_self" -> (valueTracinSelf _),
-    "quality_conformal" -> (qualityConformal _),
-    "quality_temp_scale" -> (qualityTempScale _),
-    "quality_group_loss" -> (qualityGroupLoss _),
-    "quality_ece" -> (qualityEce _),
-    "quality_brier_decomp" -> (qualityBrierDecomp _),
-    "sim_ndcg_eval" -> (simNdcgEval _),
-    "event_pacf" -> (eventPacf _),
-    "event_fano" -> (eventFano _),
-    "sample_coreset_kcenter" -> (sampleCoresetKcenter _),
-    "text_zipf_fit" -> (textZipfFit _),
-    "text_heaps_fit" -> (textHeapsFit _),
-    "graph_ktruss" -> (graphKtruss _),
-    "mix_doremi_weights" -> (mixDoremiWeights _),
-  )
-
   /** Unrolled SQL replay of the WordPiece tokenizer — normalized words
     * → 16-char chunks (the unigram oracle's shared shape) → (piece,
     * cont) candidate counts → pinned top-512 ∪ single-chars vocab →
@@ -403,8 +377,6 @@ object LlmQueries14 {
     * aggregates. Mirrors
     * [[graft.ops.TextAnalysis.wordPieceSegmentStats]] exactly. */
   private def wordpieceOracle: String = {
-    val norm = "trim(regexp_replace(regexp_replace(lower(text), " +
-      "'[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
     val steps = (1 to 16).map { k =>
       s"""wm$k AS (SELECT g.chunk, g.pos, max(l.l) AS ml
          |  FROM wg${k - 1} g
@@ -428,7 +400,7 @@ object LlmQueries14 {
          |  FROM wg${k - 1} g
          |  LEFT JOIN wm$k m ON m.chunk = g.chunk AND m.pos = g.pos)""".stripMargin
     }.mkString(",\n")
-    s"""WITH wz AS (SELECT doc_id, string_split($norm, ' ') AS ws
+    s"""WITH wz AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
        |  FROM documents),
        |w AS (SELECT doc_id AS id, ws[CAST(r.i + 1 AS INTEGER)] AS word
        |  FROM wz CROSS JOIN LATERAL
@@ -478,12 +450,6 @@ object LlmQueries14 {
   // ---------------------------------------------------------------------
   // Exact-GD / exp2 oracle machinery
   // ---------------------------------------------------------------------
-
-  private[queries] def hashSql(seed: Int, e: String) =
-    s"CAST('0x' || substring(md5('$seed|' || $e), 1, 15) AS BIGINT)"
-
-  private val normText = "trim(regexp_replace(regexp_replace(lower(text), " +
-    "'[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
 
   /** The 20 exp2 fixed-point constants 2^(2⁻ⁱ)·2³² rebuilt from the
     * shared ±1-corrected isqrt, exactly as
@@ -600,7 +566,7 @@ object LlmQueries14 {
     val shared = if (pfx.nonEmpty) "" else
       s"""laba AS MATERIALIZED (SELECT doc_id,
          |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y FROM documents),
-         |nrm AS (SELECT doc_id, $normText AS norm FROM documents),
+         |nrm AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |wds AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS wd FROM nrm),
          |f AS MATERIALIZED (SELECT doc_id, ${hashSql(77, "wd")} % 64 AS bucket,
          |    CAST(count(*) AS BIGINT) AS n
@@ -1270,7 +1236,7 @@ object LlmQueries14 {
        |FROM d""".stripMargin
 
   private def zipfOracle: String =
-    s"""WITH nrm AS (SELECT $normText AS norm FROM documents),
+    s"""WITH nrm AS (SELECT ${normSql("text")} AS norm FROM documents),
        |wds AS (SELECT unnest(string_split(norm, ' ')) AS w FROM nrm),
        |cnt AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM wds
        |  WHERE w <> '' GROUP BY 1),
@@ -1285,7 +1251,7 @@ object LlmQueries14 {
        |${fitTailSql("n_words")}""".stripMargin
 
   private def heapsOracle: String =
-    s"""WITH nrm AS (SELECT doc_id, $normText AS norm FROM documents),
+    s"""WITH nrm AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
        |w AS (SELECT doc_id AS id, unnest(string_split(norm, ' ')) AS wd
        |  FROM nrm),
        |wf AS MATERIALIZED (SELECT id, wd FROM w WHERE wd <> ''),
@@ -1365,7 +1331,7 @@ object LlmQueries14 {
          |  FROM u$r CROSS JOIN s$r)""".stripMargin
     }.mkString(",\n")
     s"""WITH RECURSIVE $exp2ConstsCtes,
-       |nrm AS (SELECT doc_id, lang, $normText AS norm FROM documents),
+       |nrm AS (SELECT doc_id, lang, ${normSql("text")} AS norm FROM documents),
        |tk AS (SELECT lang AS domain, unnest(string_split(norm, ' ')) AS w
        |  FROM nrm),
        |cdw AS MATERIALIZED (SELECT domain, w, CAST(count(*) AS BIGINT) AS c
@@ -1412,31 +1378,31 @@ object LlmQueries14 {
        |FROM a4 ORDER BY domain""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "text_wordpiece_segment" -> wordpieceOracle,
-    "quality_logistic_train" -> logisticTrainOracle,
-    "curation_cartography" -> cartographyOracle,
-    "curation_forgetting" -> forgettingOracle,
-    "quality_gd_curve" -> gdCurveOracle,
-    "curation_data_diet" -> dataDietOracle,
-    "curation_rho_loss" -> rhoLossOracle,
-    "value_tracin_panel" -> tracinOracle(c => s"$c IN $tracinPanelSub"),
-    "value_datainf_panel" -> datainfOracle(c => s"$c IN $tracinPanelSub"),
-    "value_tracin_self" -> tracinSelfOracle,
-    "quality_conformal" -> conformalOracle,
-    "quality_temp_scale" -> tempScaleOracle,
-    "quality_group_loss" -> groupLossOracle,
-    "quality_ece" -> eceOracle,
-    "quality_brier_decomp" -> brierOracle,
-    "sim_ndcg_eval" -> ndcgOracle,
-    "event_pacf" -> pacfOracle,
-    "event_fano" -> fanoOracle,
-    "sample_coreset_kcenter" -> coresetOracle,
-    "text_zipf_fit" -> zipfOracle,
-    "text_heaps_fit" -> heapsOracle,
-    "graph_ktruss" -> ktrussOracle,
-    "mix_doremi_weights" -> doremiOracle,
-    "event_autocorr" ->
+  val all: Seq[Query] = Seq(
+    Query("text_wordpiece_segment", textWordpieceSegment, wordpieceOracle),
+    Query("quality_logistic_train", qualityLogisticTrain, logisticTrainOracle),
+    Query("curation_cartography", curationCartography, cartographyOracle),
+    Query("curation_forgetting", curationForgetting, forgettingOracle),
+    Query("quality_gd_curve", qualityGdCurve, gdCurveOracle),
+    Query("curation_data_diet", curationDataDiet, dataDietOracle),
+    Query("curation_rho_loss", curationRhoLoss, rhoLossOracle),
+    Query("value_tracin_panel", valueTracinPanel, tracinOracle(c => s"$c IN $tracinPanelSub")),
+    Query("value_datainf_panel", valueDatainfPanel, datainfOracle(c => s"$c IN $tracinPanelSub")),
+    Query("value_tracin_self", valueTracinSelf, tracinSelfOracle),
+    Query("quality_conformal", qualityConformal, conformalOracle),
+    Query("quality_temp_scale", qualityTempScale, tempScaleOracle),
+    Query("quality_group_loss", qualityGroupLoss, groupLossOracle),
+    Query("quality_ece", qualityEce, eceOracle),
+    Query("quality_brier_decomp", qualityBrierDecomp, brierOracle),
+    Query("sim_ndcg_eval", simNdcgEval, ndcgOracle),
+    Query("event_pacf", eventPacf, pacfOracle),
+    Query("event_fano", eventFano, fanoOracle),
+    Query("sample_coreset_kcenter", sampleCoresetKcenter, coresetOracle),
+    Query("text_zipf_fit", textZipfFit, zipfOracle),
+    Query("text_heaps_fit", textHeapsFit, heapsOracle),
+    Query("graph_ktruss", graphKtruss, ktrussOracle),
+    Query("mix_doremi_weights", mixDoremiWeights, doremiOracle),
+    Query("event_autocorr", eventAutocorr,
       """WITH cnt AS (
         |  SELECT event_type AS g,
         |    CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS h,
@@ -1462,6 +1428,6 @@ object LlmQueries14 {
         |       WHEN num >= 0 THEN (num * 1000000) // den.d
         |       ELSE -((-num * 1000000) // den.d) END AS BIGINT) AS acf_micro
         |FROM pr JOIN den ON den.g = pr.g
-        |ORDER BY event_type, lag""".stripMargin,
+        |ORDER BY event_type, lag""".stripMargin),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
 import LlmQueries9.ExactSql
+import CommonSql.hashSql
 
 /** Round-14 registry: UniMax budget-waterfilling language sampling and
   * the Mann–Kendall trend test — two exact-integer operators a
@@ -106,15 +107,6 @@ object LlmQueries15 {
       .orderBy(col("vec_id"), col("idx"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mix_unimax_plan" -> (mixUnimaxPlan _),
-    "event_mann_kendall" -> (eventMannKendall _),
-    "quality_auc_bootstrap" -> (qualityAucBootstrap _),
-    "value_knn_shapley_panel" -> (valueKnnShapleyPanel _),
-    "quality_psi_drift" -> (qualityPsiDrift _),
-    "emb_abtt" -> (embAbtt _),
-  )
-
   /** Replay of the full ABTT trajectory: train-slice milli mean
     * (sign-split floored division), centered training relation, the
     * LlmQueries3 unrolled power-iteration template for direction 1,
@@ -174,7 +166,7 @@ object LlmQueries15 {
        |  FROM (SELECT vec_id, label, ${ExactSql.microList("embedding")} AS vm
        |        FROM embeddings)),
        |pnl AS (SELECT vec_id FROM (SELECT vec_id, row_number() OVER (
-       |    ORDER BY ${LlmQueries14.hashSql(19, "CAST(vec_id AS VARCHAR)")},
+       |    ORDER BY ${hashSql(19, "CAST(vec_id AS VARCHAR)")},
        |      vec_id) AS rk FROM corp) WHERE rk <= 32),
        |tr AS (SELECT * FROM corp
        |  WHERE vec_id NOT IN (SELECT vec_id FROM pnl)),
@@ -217,7 +209,7 @@ object LlmQueries15 {
     * quality_auc construction, rank-k CI bounds via the triangular join
     * on the 20-row replicate relation, unweighted point estimate. */
   private def aucBootstrapOracle: String = {
-    val u = LlmQueries14.hashSql(23,
+    val u = hashSql(23,
       "CAST(doc_id AS VARCHAR) || '|' || CAST(rep AS VARCHAR)") +
       " % 1000000"
     val wCase = graft.ops.QualityModel.poissonCdfMicro.zipWithIndex
@@ -275,16 +267,16 @@ object LlmQueries15 {
        |FROM point CROSS JOIN ci""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "quality_auc_bootstrap" -> aucBootstrapOracle,
-    "value_knn_shapley_panel" -> knnShapleyPanelOracle,
-    "quality_psi_drift" -> graft.ops.Sketches.psiDriftSql("documents",
-      "lang", "n_chars", "en", "zh", LlmQueries14.log2ValueCtes),
-    "emb_abtt" -> abttOracle,
+  val all: Seq[Query] = Seq(
+    Query("quality_auc_bootstrap", qualityAucBootstrap, aucBootstrapOracle),
+    Query("value_knn_shapley_panel", valueKnnShapleyPanel, knnShapleyPanelOracle),
+    Query("quality_psi_drift", qualityPsiDrift, graft.ops.Sketches.psiDriftSql("documents",
+      "lang", "n_chars", "en", "zh", LlmQueries14.log2ValueCtes)),
+    Query("emb_abtt", embAbtt, abttOracle),
     // Waterfilling replay, construct-parallel with planMixUnimax: the
     // triangular rank/prefix join, the DECIMAL fit test, the maximal
     // fitting prefix k, the floored equal share, the leftover dust.
-    "mix_unimax_plan" ->
+    Query("mix_unimax_plan", mixUnimaxPlan,
       s"""WITH counts AS (SELECT lang,
          |    CAST(sum(n_chars) AS BIGINT) AS n_tokens,
          |    CAST(2 * sum(n_chars) AS BIGINT) AS cap_tokens
@@ -319,11 +311,11 @@ object LlmQueries15 {
          |  CAST(CAST(alloc_tokens AS HUGEINT) * 1000000
          |    // greatest(n_tokens, 1) AS BIGINT) AS epochs_micro,
          |  leftover_tokens
-         |FROM plan CROSS JOIN lo ORDER BY lang""".stripMargin,
+         |FROM plan CROSS JOIN lo ORDER BY lang""".stripMargin),
     // Daily counts in cents (the kernel's T.cents convention), the
     // strict-ordered pair sign sum, tie-corrected 18·Var, and the
     // HUGEINT cross-multiplied significance comparison.
-    "event_mann_kendall" ->
+    Query("event_mann_kendall", eventMannKendall,
       s"""WITH d AS (SELECT event_type, date_trunc('day', ts) AS t,
          |    CAST(round(CAST(count(*) AS DOUBLE) * 100, 0) AS BIGINT)
          |      AS v
@@ -352,6 +344,6 @@ object LlmQueries15 {
          |       ELSE 'none' END AS trend,
          |  CAST(18 AS HUGEINT) * s_stat * s_stat * 1000000000000
          |    > CAST(1959964 AS HUGEINT) * 1959964 * var18 AS significant
-         |FROM j ORDER BY event_type""".stripMargin,
+         |FROM j ORDER BY event_type""".stripMargin),
   )
 }

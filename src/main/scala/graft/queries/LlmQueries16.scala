@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
+import CommonSql.{normSql, hashSql}
 
 /** Round-15 registry: the ExactSubstr family (spans / decontamination /
   * per-source profile / removal — the suffix-array-exact method the
@@ -12,11 +13,6 @@ import graft.T
   * Church–Gale burstiness.
   */
 object LlmQueries16 {
-
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
-  private def hashSql(seed: Int, e: String) =
-    s"CAST('0x' || substring(md5('$seed|' || $e), 1, 15) AS BIGINT)"
 
   /** Exact duplicated-substring spans (Lee et al. ACL 2022,
     * [[graft.ops.Dedup.exactSubstringSpans]]): every maximal character
@@ -192,22 +188,6 @@ object LlmQueries16 {
         lambdaMicro = 500000L)
       .orderBy(col("query_id"), col("rk"))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_rm3_retrieve" -> (textRm3Retrieve _),
-    "text_rm3_expansion" -> (textRm3Expansion _),
-    "text_dirichlet_ql" -> (textDirichletQl _),
-    "text_sgt_fit" -> (textSgtFit _),
-    "mix_dsir_eval" -> (mixDsirEval _),
-    "dedup_exact_substring" -> (dedupExactSubstring _),
-    "decon_exact_substring" -> (deconExactSubstring _),
-    "decon_exact_substring_bloom" -> (deconExactSubstringBloom _),
-    "dedup_substring_profile" -> (dedupSubstringProfile _),
-    "dedup_substring_removal" -> (dedupSubstringRemoval _),
-    "text_good_turing" -> (textGoodTuring _),
-    "text_burstiness" -> (textBurstiness _),
-    "mix_dsir_weights" -> (mixDsirWeights _)
-  )
 
   /** Per-position L-char window hash CTE via unnest(range(...))
     * (DuckDB 1.0.0 range/generate_series reject lateral column bounds;
@@ -722,20 +702,21 @@ object LlmQueries16 {
        |WHERE rk <= $kFinal
        |ORDER BY query_id, rk""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "text_rm3_retrieve" -> rm3RetrieveOracle(100L, 5, 10, 10, 500000L,
-      1000000L),
-    "text_rm3_expansion" -> rm3Oracle(100L, 5, 10, 500000L, 1000000L),
-    "text_dirichlet_ql" -> dirichletQlOracle(100L, 10),
-    "text_sgt_fit" -> sgtOracle(1000000L),
-    "mix_dsir_eval" -> dsirEvalOracle(256, 200, 29, 1000000L),
-    "dedup_exact_substring" -> exactSubstringOracle(30),
-    "decon_exact_substring" -> deconExactSubstringOracle(30, 50L),
-    "decon_exact_substring_bloom" -> deconExactSubstringOracle(30, 50L),
-    "dedup_substring_profile" -> substringProfileOracle(30),
-    "dedup_substring_removal" -> substringRemovalOracle(30),
-    "text_good_turing" -> goodTuringOracle(1000000L),
-    "text_burstiness" -> burstinessOracle(3L, 100, 1000000L),
-    "mix_dsir_weights" -> dsirOracle(256, 200, 29, 1000000L)
+  val all: Seq[Query] = Seq(
+    Query("text_rm3_retrieve", textRm3Retrieve, rm3RetrieveOracle(100L, 5, 10, 10, 500000L,
+      1000000L)),
+    Query("text_rm3_expansion", textRm3Expansion, rm3Oracle(100L, 5, 10, 500000L, 1000000L)),
+    Query("text_dirichlet_ql", textDirichletQl, dirichletQlOracle(100L, 10)),
+    Query("text_sgt_fit", textSgtFit, sgtOracle(1000000L)),
+    Query("mix_dsir_eval", mixDsirEval, dsirEvalOracle(256, 200, 29, 1000000L)),
+    Query("dedup_exact_substring", dedupExactSubstring, exactSubstringOracle(30)),
+    Query("decon_exact_substring", deconExactSubstring, deconExactSubstringOracle(30, 50L)),
+    Query("decon_exact_substring_bloom", deconExactSubstringBloom,
+      deconExactSubstringOracle(30, 50L)),
+    Query("dedup_substring_profile", dedupSubstringProfile, substringProfileOracle(30)),
+    Query("dedup_substring_removal", dedupSubstringRemoval, substringRemovalOracle(30)),
+    Query("text_good_turing", textGoodTuring, goodTuringOracle(1000000L)),
+    Query("text_burstiness", textBurstiness, burstinessOracle(3L, 100, 1000000L)),
+    Query("mix_dsir_weights", mixDsirWeights, dsirOracle(256, 200, 29, 1000000L))
   )
 }

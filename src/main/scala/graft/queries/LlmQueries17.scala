@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
+import CommonSql.normSql
 
 /** Round-16 registry: the incremental exact-substring window ledger
   * (VERDICT r15 item 3 — the decon-service posture where the train
@@ -13,9 +14,6 @@ import graft.T
   * closing the mix family's fresh-tokens-only gap).
   */
 object LlmQueries17 {
-
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
 
   /** Exact-substring decon AGAINST THE WINDOW LEDGER
     * ([[graft.ops.Dedup.substringWindowLedger]] /
@@ -124,16 +122,6 @@ object LlmQueries17 {
         threshold = 0.4, keepNum = 1, keepDen = 2)
       .orderBy(col("vec_id"))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "decon_substring_ledger" -> (deconSubstringLedger _),
-    "text_kn_lm_score" -> (textKnLmScore _),
-    "mix_repeat_plan" -> (mixRepeatPlan _),
-    "dedup_substring_tokens" -> (dedupSubstringTokens _),
-    "mix_repeat_optimal" -> (mixRepeatOptimal _),
-    "decon_substring_tokens" -> (deconSubstringTokens _),
-    "curation_d4_select" -> (curationD4Select _)
-  )
 
   /** KN trigram replay: the text_lm_trigram exploded-trigram CTE, then
     * the three-level chain — trigram type counts, continuation counts
@@ -416,17 +404,17 @@ object LlmQueries17 {
        |  rank_in_cell * 2 <= n AS kept
        |FROM rkd ORDER BY vec_id""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val all: Seq[Query] = Seq(
     // the ledger probe's value semantics ARE the scan decon's at L=40
     // over the same train slice — distinct-of-union equals union-of-
     // distincts under a semi-join, so the shared replay is exact
-    "decon_substring_ledger" ->
-      LlmQueries16.deconExactSubstringOracle(40, 50L),
-    "text_kn_lm_score" -> knTrigramOracle,
-    "mix_repeat_plan" -> mixRepeatOracle(300000L, 937000L),
-    "dedup_substring_tokens" -> tokenSubstringOracle(6),
-    "mix_repeat_optimal" -> mixRepeatOptimalOracle(3000000L, 937000L),
-    "decon_substring_tokens" -> tokenDeconOracle(8, 50L),
-    "curation_d4_select" -> d4Oracle(0.4)
+    Query("decon_substring_ledger", deconSubstringLedger,
+      LlmQueries16.deconExactSubstringOracle(40, 50L)),
+    Query("text_kn_lm_score", textKnLmScore, knTrigramOracle),
+    Query("mix_repeat_plan", mixRepeatPlan, mixRepeatOracle(300000L, 937000L)),
+    Query("dedup_substring_tokens", dedupSubstringTokens, tokenSubstringOracle(6)),
+    Query("mix_repeat_optimal", mixRepeatOptimal, mixRepeatOptimalOracle(3000000L, 937000L)),
+    Query("decon_substring_tokens", deconSubstringTokens, tokenDeconOracle(8, 50L)),
+    Query("curation_d4_select", curationD4Select, d4Oracle(0.4))
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
 import LlmQueries9.ExactSql
+import CommonSql.{normSql, hashSql}
 
 /** Round-16 registry, second batch: per-source vocabulary coverage
   * (Good–Turing missing mass + Chao1 richness — the "which source is
@@ -15,9 +16,6 @@ import LlmQueries9.ExactSql
   * estimator and exact Jaccard).
   */
 object LlmQueries18 {
-
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
 
   /** Per-source Good–Turing missing mass and Chao1 vocabulary richness
     * ([[graft.ops.TextAnalysis.missingMassBySource]]): p₀ = N₁/N per
@@ -105,16 +103,6 @@ object LlmQueries18 {
         epsMicro = 1000000L, seed = 47)
       .orderBy(col("stratum"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_missing_mass" -> (textMissingMass _),
-    "quality_pass_at_k" -> (qualityPassAtK _),
-    "privacy_dp_counts" -> (privacyDpCounts _),
-    "mix_source_jsd" -> (mixSourceJsd _),
-    "dedup_minhash_bbit" -> (dedupMinhashBbit _),
-    "curation_facility_select" -> (curationFacilitySelect _),
-    "mix_class_balanced" -> (mixClassBalanced _)
-  )
-
   /** Missing-mass replay: non-distinct token explode, (source, word)
     * counts, then the per-source spectrum head (N₁, N₂) and both
     * rational estimators as floor divisions. */
@@ -143,7 +131,7 @@ object LlmQueries18 {
     * per-pair signed term sum floored magnitude-then-sign by 2·10⁶. */
   private def sourceJsdOracle(buckets: Int, seed: Int): String =
     s"""WITH toks AS (SELECT source AS src,
-       |    ${LlmQueries14.hashSql(seed, "t.w")} % $buckets AS b
+       |    ${hashSql(seed, "t.w")} % $buckets AS b
        |  FROM documents, unnest(string_split(${normSql("text")}, ' ')) AS t(w)
        |  WHERE t.w <> ''),
        |cnt AS (SELECT src, b, CAST(count(*) AS BIGINT) AS c
@@ -184,7 +172,7 @@ object LlmQueries18 {
   private def bbitOracle(b: Int, k: Int): String = {
     val mask = 1L << b
     val sigCols16 = (0 until k)
-      .map(i => s"min(${LlmQueries14.hashSql(i, "gram")}) AS h$i")
+      .map(i => s"min(${hashSql(i, "gram")}) AS h$i")
       .mkString(",\n    ")
     val hvCase = (0 until k)
       .map(i => s"WHEN $i THEN h$i").mkString("\n      ")
@@ -353,8 +341,8 @@ object LlmQueries18 {
     s"""WITH cnt AS (SELECT source AS stratum,
        |    CAST(count(*) AS BIGINT) AS n_true FROM documents GROUP BY 1),
        |dr AS (SELECT stratum, n_true,
-       |    ${LlmQueries14.hashSql(seed, "stratum")} % $unit + 1 AS u1,
-       |    ${LlmQueries14.hashSql(seed + 1, "stratum")} % $unit + 1 AS u2
+       |    ${hashSql(seed, "stratum")} % $unit + 1 AS u1,
+       |    ${hashSql(seed + 1, "stratum")} % $unit + 1 AS u2
        |  FROM cnt),
        |vals AS MATERIALIZED (SELECT DISTINCT v FROM (
        |  SELECT u1 AS v FROM dr UNION ALL SELECT u2 FROM dr)),
@@ -368,13 +356,13 @@ object LlmQueries18 {
        |FROM x ORDER BY stratum""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "text_missing_mass" -> missingMassOracle,
-    "quality_pass_at_k" -> passAtKOracle,
-    "privacy_dp_counts" -> dpCountsOracle(1000000L, 47),
-    "mix_source_jsd" -> sourceJsdOracle(256, 31),
-    "dedup_minhash_bbit" -> bbitOracle(2, 16),
-    "curation_facility_select" -> facilityOracle(8, 64L),
-    "mix_class_balanced" -> classBalancedOracle(999000L)
+  val all: Seq[Query] = Seq(
+    Query("text_missing_mass", textMissingMass, missingMassOracle),
+    Query("quality_pass_at_k", qualityPassAtK, passAtKOracle),
+    Query("privacy_dp_counts", privacyDpCounts, dpCountsOracle(1000000L, 47)),
+    Query("mix_source_jsd", mixSourceJsd, sourceJsdOracle(256, 31)),
+    Query("dedup_minhash_bbit", dedupMinhashBbit, bbitOracle(2, 16)),
+    Query("curation_facility_select", curationFacilitySelect, facilityOracle(8, 64L)),
+    Query("mix_class_balanced", mixClassBalanced, classBalancedOracle(999000L))
   )
 }

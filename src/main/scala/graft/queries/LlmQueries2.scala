@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{Chunking, Components, Curation, Dedup, QualityModel, Similarity, TextAnalysis}
+import CommonSql.{normSql, hashSql, marginCte}
 
 /** Round-4/5 training-data-pipeline operators (SURVEY §2.10 extensions):
   * duplicated-span scoring and removal, repetition metrics, chunking,
@@ -16,10 +17,6 @@ import graft.ops.{Chunking, Components, Curation, Dedup, QualityModel, Similarit
   * engines).
   */
 object LlmQueries2 {
-
-  // DuckDB mirror of Dedup.normalize.
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
 
   /** Cross-doc duplicated-shingle scoring over the corpus (word 5-grams,
     * drop above 70% duplicated) — the repeated-span dedup signal. */
@@ -367,57 +364,6 @@ object LlmQueries2 {
         bucketDocs = 50)
       .orderBy(col("bucket"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_readability" -> (textReadability _),
-    "text_vocab_growth" -> (textVocabGrowth _),
-    "text_fuzzy_pairs" -> (textFuzzyPairs _),
-    "dedup_span_within" -> (dedupSpanWithin _),
-    "artifact_train_serve" -> (artifactTrainServe _),
-    "text_lm_bigram" -> (textLmBigram _),
-    "text_lm_trigram" -> (textLmTrigram _),
-    "text_drift_chisq" -> (textDriftChisq _),
-    "quality_pr_curve" -> (qualityPrCurve _),
-    "quality_auc" -> (qualityAuc _),
-    "text_hash_embedding" -> (textHashEmbedding _),
-    "text_cluster_assign" -> (textClusterAssign _),
-    "emb_mean_pool" -> (embMeanPool _),
-    "emb_label_centroids" -> (embLabelCentroids _),
-    "emb_quantize_int8" -> (embQuantizeInt8 _),
-    "text_bpe_train" -> (textBpeTrain _),
-    "text_bpe_fertility" -> (textBpeFertility _),
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_triangles" -> (graphTriangles _),
-    "mine_contrastive_pairs" -> (mineContrastive _),
-    "sample_token_budget" -> (sampleTokenBudget _),
-    "sim_semantic_dedup" -> (simSemanticDedup _),
-    "emb_sign_project" -> (embSignProject _),
-    "quality_model_score" -> (qualityModelScore _),
-    "dedup_span_exact" -> (dedupSpanExact _),
-    "dedup_shingle_xdoc" -> (dedupShingleXdoc _),
-    "text_repetition" -> (textRepetition _),
-    "text_pmi_pairs" -> (textPmiPairs _),
-    "doc_chunks" -> (docChunks _),
-    "text_tfidf_topk" -> (textTfidfTopk _),
-    "sample_pack_bins" -> (samplePackBins _),
-  )
-
-  // DuckDB mirror of Dedup.hashStr (60-bit md5-prefix hash under a seed).
-  private def hashSql(seed: Int, e: String) =
-    s"CAST('0x' || substring(md5('$seed|' || $e), 1, 15) AS BIGINT)"
-
-  // Shared margin CTE of the integer-weight quality scorer (used by the
-  // score query and the PR-curve sweep).
-  private[queries] val marginCte =
-    s"""n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
-       |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS wd FROM n),
-       |f AS (SELECT doc_id, ${hashSql(77, "wd")} % 256 AS bucket,
-       |        count(*) AS cnt
-       |      FROM w WHERE wd <> '' GROUP BY 1, 2),
-       |s AS (SELECT doc_id, count(*) AS n_features,
-       |        CAST(sum(cnt * ((${hashSql(55, "CAST(bucket AS VARCHAR)")} % 21) - 10))
-       |          AS BIGINT) AS margin
-       |      FROM f GROUP BY doc_id)""".stripMargin
-
   // DuckDB cosine between two DOUBLE[]-cast embeddings (left-to-right
   // fold, matching the VecDot kernel).
   private def cosDuck(a: String, b: String) =
@@ -428,8 +374,8 @@ object LlmQueries2 {
   // DuckDB mirror of TextAnalysis.tokenCount.
   private val nTokensSql = "len(string_split_regex(trim(text), '\\s+'))"
 
-  val oracle: Map[String, String] = Map(
-    "text_readability" ->
+  val all: Seq[Query] = Seq(
+    Query("text_readability", textReadability,
       s"""WITH n AS (SELECT doc_id, text, ${normSql("text")} AS norm
          |  FROM documents),
          |c AS (SELECT doc_id,
@@ -452,8 +398,8 @@ object LlmQueries2 {
          |  CAST(greatest(0, (390 * words * words
          |      + 11800 * syllables * sentences - 15590 * sentences * words)
          |    // (sentences * words)) AS BIGINT) AS fkgl_milli
-         |FROM m ORDER BY doc_id""".stripMargin,
-    "text_vocab_growth" ->
+         |FROM m ORDER BY doc_id""".stripMargin),
+    Query("text_vocab_growth", textVocabGrowth,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm
          |  FROM documents),
          |w AS (SELECT doc_id, string_split(norm, ' ') AS ws FROM n),
@@ -472,11 +418,11 @@ object LlmQueries2 {
          |  CAST(new_grams AS BIGINT) AS new_grams,
          |  CAST((SELECT sum(j2.new_grams) FROM j j2
          |        WHERE j2.bucket <= j.bucket) AS BIGINT) AS cum_vocab
-         |FROM j ORDER BY bucket""".stripMargin,
+         |FROM j ORDER BY bucket""".stripMargin),
     // Brute-force ground truth for the FastSS deletion-neighborhood join:
     // the same typo-planted corpus, then a direct levenshtein self-join
     // over the vocabulary (length band |Δlen| ≤ 1 is implied by lev ≤ 1).
-    "text_fuzzy_pairs" ->
+    Query("text_fuzzy_pairs", textFuzzyPairs,
       s"""WITH base AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |fw AS (SELECT doc_id, norm, string_split(norm, ' ')[1] AS w FROM base),
          |aug AS (SELECT concat(norm, ' ',
@@ -491,17 +437,18 @@ object LlmQueries2 {
          |FROM vocab a JOIN vocab b
          |  ON a.w < b.w AND abs(length(a.w) - length(b.w)) <= 1
          |  AND levenshtein(a.w, b.w) <= 1
-         |ORDER BY w1, w2""".stripMargin,
+         |ORDER BY w1, w2""".stripMargin),
     // Full BPE training + serving replay (BpeSql): 8 unrolled training
     // rounds over the vocabulary, delimited-string merge application,
     // corpus-wide token counts.
-    "text_bpe_train" -> BpeSql.textBpeTrainSql(normSql("text"), k = 8),
-    "text_bpe_fertility" -> BpeSql.textBpeFertilitySql(normSql("text"), k = 8),
+    Query("text_bpe_train", textBpeTrain, BpeSql.textBpeTrainSql(normSql("text"), k = 8)),
+    Query("text_bpe_fertility", textBpeFertility,
+      BpeSql.textBpeFertilitySql(normSql("text"), k = 8)),
     // Replay of the micro-unit k-means trajectory (3 iterations), serve
     // assignment, in-cell pair generation, recursive-CTE connected
     // components, and min-id survivor selection — the full SemDeDup
     // decision, bit-for-bit.
-    "sim_semantic_dedup" ->
+    Query("sim_semantic_dedup", simSemanticDedup,
       s"""WITH RECURSIVE src AS (
          |  SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |${KmeansSql.trainCtes("src", "TRUE", k = 16, iters = 3, dim = 64)},
@@ -523,10 +470,10 @@ object LlmQueries2 {
          |  WHERE component <> id)
          |SELECT vec_id, label FROM embeddings
          |WHERE vec_id NOT IN (SELECT id FROM losers)
-         |ORDER BY vec_id""".stripMargin,
+         |ORDER BY vec_id""".stripMargin),
     // Dense hashing-trick embeddings rebuilt from the hash formula, then
     // the 2-iteration micro-unit k-means replay and corpus-wide serve.
-    "text_cluster_assign" ->
+    Query("text_cluster_assign", textClusterAssign,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS wd FROM n),
          |f AS (SELECT doc_id,
@@ -545,11 +492,11 @@ object LlmQueries2 {
          |cent AS (SELECT cell, cm FROM c2),
          |asg AS (${KmeansSql.assignSql("src", "cent")})
          |SELECT vid AS doc_id, cell FROM asg
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Served artifacts replayed: micro k-means training + assignment for
     // `cell`, the seeded integer weight list for `margin`/`keep`,
     // whitespace token counts for `n_tokens`.
-    "artifact_train_serve" -> {
+    Query("artifact_train_serve", artifactTrainServe, {
       val wList = servedWeights.mkString("[", ", ", "]")
       s"""WITH src AS (
          |  SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -572,8 +519,8 @@ object LlmQueries2 {
          |LEFT JOIN ss USING (doc_id)
          |JOIN asg a ON a.vid = d.doc_id
          |ORDER BY doc_id""".stripMargin
-    },
-    "dedup_span_within" ->
+    }),
+    Query("dedup_span_within", dedupSpanWithin,
       s"""WITH w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |s AS (SELECT doc_id, CAST((r.range - 1) // 2 AS INTEGER) AS span_idx,
@@ -587,8 +534,8 @@ object LlmQueries2 {
          |SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_spans,
          |  CAST(sum(occ - 1) AS BIGINT) AS n_dropped,
          |  string_agg(span, ' ' ORDER BY first_idx) AS kept_text
-         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "text_hash_embedding" ->
+         |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("text_hash_embedding", textHashEmbedding,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS wd FROM n),
          |f AS (SELECT doc_id,
@@ -597,8 +544,8 @@ object LlmQueries2 {
          |      FROM w WHERE wd <> '')
          |SELECT doc_id, idx, CAST(sum(sgn) AS BIGINT) AS value
          |FROM f GROUP BY doc_id, idx
-         |ORDER BY doc_id, idx""".stripMargin,
-    "quality_auc" ->
+         |ORDER BY doc_id, idx""".stripMargin),
+    Query("quality_auc", qualityAuc,
       s"""WITH $marginCte,
          |lab AS (SELECT s.doc_id, s.margin,
          |          CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS label
@@ -618,11 +565,11 @@ object LlmQueries2 {
          |  CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0
          |    ELSE (1000000 * concordant + 500000 * tied) // (n_pos * n_neg)
          |    END AS BIGINT) AS auc_micro
-         |FROM t CROSS JOIN conc""".stripMargin,
+         |FROM t CROSS JOIN conc""".stripMargin),
     // Laplace-smoothed bigram conditionals in integer micro-units; the
     // 100k-position range cap matches the doc_chunks convention (the
     // corpus stays far below it, ChunkingSpec-asserted).
-    "text_lm_bigram" ->
+    Query("text_lm_bigram", textLmBigram,
       s"""WITH w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |bg AS (SELECT doc_id,
@@ -644,7 +591,7 @@ object LlmQueries2 {
          |SELECT d.doc_id, CAST(coalesce(s.n_bigrams, 0) AS BIGINT) AS n_bigrams,
          |  CAST(coalesce(s.lm_micro, 0) AS BIGINT) AS lm_micro
          |FROM documents d LEFT JOIN s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Trigram replay: every count relation re-derived from the same
     // exploded trigram pass; each order's Laplace conditional floored
     // separately, then the 4:2:1 // 7 combine — all operands
@@ -652,7 +599,7 @@ object LlmQueries2 {
     // (MATERIALIZED: the trigram relation feeds 7 consumers — inlined,
     // DuckDB re-plans the explode per consumer and the gate runs >90 s;
     // materialized it runs in ~0.1 s.)
-    "text_lm_trigram" ->
+    Query("text_lm_trigram", textLmTrigram,
       s"""WITH w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |tg AS MATERIALIZED (SELECT doc_id,
@@ -687,11 +634,11 @@ object LlmQueries2 {
          |SELECT d.doc_id, CAST(coalesce(s.n_trigrams, 0) AS BIGINT) AS n_trigrams,
          |  CAST(coalesce(s.lm3_micro, 0) AS BIGINT) AS lm3_micro
          |FROM documents d LEFT JOIN s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // χ² drift replay: same closed-form per-word contribution, HUGEINT
     // intermediates mirroring Spark's DECIMAL(38,0); dividend sign —
     // the squared difference — is non-negative, so // and div agree.
-    "text_drift_chisq" ->
+    Query("text_drift_chisq", textDriftChisq,
       s"""WITH wa AS (SELECT unnest(string_split(${normSql("text")}, ' ')) AS word
          |           FROM documents WHERE lang = 'en'),
          |wb AS (SELECT unnest(string_split(${normSql("text")}, ' ')) AS word
@@ -711,12 +658,12 @@ object LlmQueries2 {
          |    AS BIGINT) AS chi2_micro
          |FROM j CROSS JOIN t
          |ORDER BY chi2_micro DESC, j.word
-         |LIMIT 50""".stripMargin,
+         |LIMIT 50""".stripMargin),
     // Mean pooling in exact micro-units; +1e9 offset keeps the dividend
     // non-negative so DuckDB's flooring // matches Spark's truncating div.
     // Centroid separation: the same offset-mean as emb_mean_pool keyed
     // by label, then pairwise cosine from exact integer dot/norm sums.
-    "emb_label_centroids" ->
+    Query("emb_label_centroids", embLabelCentroids,
       """WITH x AS (SELECT label AS g, CAST(r.range AS INTEGER) AS idx,
         |    CAST(floor(CAST(embedding[CAST(r.range + 1 AS INTEGER)] AS DOUBLE)
         |      * 1000000) AS BIGINT) + 1000000000 AS m
@@ -732,8 +679,8 @@ object LlmQueries2 {
         |     sqrt(CAST(greatest(sum(x2 * x2), 1) AS DOUBLE))), 6)
         |    AS cos_centroid
         |FROM p GROUP BY g1, g2
-        |ORDER BY g1, g2""".stripMargin,
-    "emb_mean_pool" ->
+        |ORDER BY g1, g2""".stripMargin),
+    Query("emb_mean_pool", embMeanPool,
       """WITH x AS (SELECT vec_id // 4 AS group_id, CAST(r.range AS INTEGER) AS idx,
         |    CAST(floor(CAST(embedding[CAST(r.range + 1 AS INTEGER)] AS DOUBLE)
         |      * 1000000) AS BIGINT) + 1000000000 AS m
@@ -742,8 +689,8 @@ object LlmQueries2 {
         |  CAST(sum(m) // count(*) - 1000000000 AS BIGINT) AS mean_micro,
         |  count(*) AS n_vecs
         |FROM x GROUP BY group_id, idx
-        |ORDER BY group_id, idx""".stripMargin,
-    "emb_quantize_int8" ->
+        |ORDER BY group_id, idx""".stripMargin),
+    Query("emb_quantize_int8", embQuantizeInt8,
       """WITH a AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |    list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x)))
         |      AS amax
@@ -755,8 +702,8 @@ object LlmQueries2 {
         |    ELSE CAST(round(v[CAST(r.range + 1 AS INTEGER)] / (amax / 127.0))
         |      AS INTEGER) END AS qv
         |FROM a CROSS JOIN range(64) r
-        |ORDER BY vec_id, idx""".stripMargin,
-    "graph_triangles" ->
+        |ORDER BY vec_id, idx""".stripMargin),
+    Query("graph_triangles", graphTriangles,
       s"""WITH ${LlmQueries.gramsCteFor("grams", "doc_id < 500")},
          |sig AS (SELECT id, ${LlmQueries.sigCols} FROM grams GROUP BY id),
          |bands AS (SELECT id, r.range AS band, ${LlmQueries.bandCase} AS band_key
@@ -793,8 +740,8 @@ object LlmQueries2 {
          |  SELECT a AS id FROM tri UNION ALL SELECT b FROM tri
          |  UNION ALL SELECT c FROM tri) GROUP BY id)
          |SELECT id AS doc_id, CAST(n_tri AS BIGINT) AS n_tri
-         |FROM pv ORDER BY doc_id""".stripMargin,
-    "graph_pagerank" -> {
+         |FROM pv ORDER BY doc_id""".stripMargin),
+    Query("graph_pagerank", graphPagerank, {
       val iterCtes = (1 to 3).map { i =>
         s"""c$i AS (SELECT e.dst AS id, CAST(sum(p.pr // o.outdeg) AS BIGINT) AS s
            |  FROM edges e JOIN p${i - 1} p ON p.id = e.src
@@ -831,8 +778,8 @@ object LlmQueries2 {
          |$iterCtes
          |SELECT id AS doc_id, CAST(pr AS BIGINT) AS pr
          |FROM p3 ORDER BY doc_id""".stripMargin
-    },
-    "mine_contrastive_pairs" ->
+    }),
+    Query("mine_contrastive_pairs", mineContrastive,
       s"""WITH ring AS (
          |  SELECT vec_id AS pair_id, embedding, md5(CAST(vec_id AS VARCHAR)) AS ch,
          |    CAST('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 4) AS BIGINT) % 64
@@ -865,8 +812,8 @@ object LlmQueries2 {
          |  FROM draws w JOIN panel p USING (idx)
          |  WHERE p.pair_id <> w.query_id)
          |SELECT * FROM pos UNION ALL SELECT * FROM neg
-         |ORDER BY query_id, pair_type, draw, pair_id""".stripMargin,
-    "sample_token_budget" -> {
+         |ORDER BY query_id, pair_type, draw, pair_id""".stripMargin),
+    Query("sample_token_budget", sampleTokenBudget, {
       val budgetRows = mixBudgets
         .map { case (s, t) => s"('$s', CAST($t AS BIGINT))" }.mkString(", ")
       s"""WITH t AS (SELECT doc_id, source,
@@ -892,8 +839,8 @@ object LlmQueries2 {
          |JOIN b ON c.source = b.source
          |WHERE c.cum + o2.off <= b.budget
          |ORDER BY doc_id""".stripMargin
-    },
-    "emb_sign_project" -> {
+    }),
+    Query("emb_sign_project", embSignProject, {
       // the same seeded ±1 matrix the Spark expression carries
       val m = Similarity.signMatrix(8, 64)
       val elems = m.map(r =>
@@ -907,12 +854,12 @@ object LlmQueries2 {
          |  proj[CAST(r.range + 1 AS INTEGER)] AS pv
          |FROM p CROSS JOIN range(8) r
          |ORDER BY vec_id, idx""".stripMargin
-    },
-    "quality_model_score" ->
+    }),
+    Query("quality_model_score", qualityModelScore,
       s"""WITH $marginCte
          |SELECT doc_id, n_features, margin, margin > 0 AS keep
-         |FROM s ORDER BY doc_id""".stripMargin,
-    "quality_pr_curve" ->
+         |FROM s ORDER BY doc_id""".stripMargin),
+    Query("quality_pr_curve", qualityPrCurve,
       s"""WITH $marginCte,
          |lab AS (SELECT s.doc_id, s.margin,
          |          CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS label
@@ -931,8 +878,8 @@ object LlmQueries2 {
          |  CAST(CASE WHEN (SELECT p FROM tot) = 0 THEN 0
          |    ELSE tp * 1000000 // (SELECT p FROM tot) END AS BIGINT)
          |    AS recall_micro
-         |FROM cum ORDER BY threshold""".stripMargin,
-    "dedup_span_exact" ->
+         |FROM cum ORDER BY threshold""".stripMargin),
+    Query("dedup_span_exact", dedupSpanExact,
       s"""WITH w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |s AS (SELECT doc_id, CAST((r.range - 1) // 20 AS INTEGER) AS span_idx,
@@ -949,8 +896,8 @@ object LlmQueries2 {
          |  CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
          |  coalesce(string_agg(CASE WHEN NOT dup THEN span END, ' '
          |    ORDER BY span_idx), '') AS kept_text
-         |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "dedup_shingle_xdoc" ->
+         |FROM f GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("dedup_shingle_xdoc", dedupShingleXdoc,
       s"""WITH w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |s AS (
@@ -967,8 +914,8 @@ object LlmQueries2 {
          |  round(CAST(coalesce(p.n_dup, 0) AS DOUBLE) / t.n_shingles, 6) AS dup_fraction,
          |  (round(CAST(coalesce(p.n_dup, 0) AS DOUBLE) / t.n_shingles, 6) <= 0.7) AS keep
          |FROM tot t LEFT JOIN dup p USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "text_pmi_pairs" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("text_pmi_pairs", textPmiPairs,
       s"""WITH d AS (SELECT string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |b AS (SELECT unnest(list_transform(range(len(ws) - 1),
@@ -986,8 +933,8 @@ object LlmQueries2 {
          |FROM c12 JOIN c1 USING (w1) JOIN c2 USING (w2) CROSS JOIN nn
          |WHERE c12.c12 >= 5
          |ORDER BY pmi_ratio_micro DESC, c12.w1, c12.w2
-         |LIMIT 100""".stripMargin,
-    "text_repetition" ->
+         |LIMIT 100""".stripMargin),
+    Query("text_repetition", textRepetition,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS wd FROM n),
          |wf AS (SELECT * FROM w WHERE wd <> ''),
@@ -1009,20 +956,20 @@ object LlmQueries2 {
          |  coalesce(round(1.0 - CAST(ba.n_distinct_bigrams AS DOUBLE) / ba.n_bigrams, 6),
          |    0.0) AS dup_bigram_share
          |FROM wa LEFT JOIN ba USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // range(0, 100000, 48) silently caps the mirror at 100k-char
     // documents (the engine itself has no such bound); ChunkingSpec
     // asserts the gate corpus stays far below the cap. The same bound
     // applies to dedup_span_exact's range(1, 100001, 20) over WORD
     // counts (words <= chars, so the chunk assertion covers it).
-    "doc_chunks" ->
+    Query("doc_chunks", docChunks,
       """SELECT doc_id, CAST(r.range // 48 AS INTEGER) AS chunk_idx,
         |  CAST(length(substring(text, CAST(r.range + 1 AS INTEGER), 64)) AS INTEGER) AS chunk_len,
         |  md5(substring(text, CAST(r.range + 1 AS INTEGER), 64)) AS chunk_md5
         |FROM documents CROSS JOIN range(0, 100000, 48) r
         |WHERE r.range <= greatest(length(text) - 1, 0)
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "sample_pack_bins" ->
+        |ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("sample_pack_bins", samplePackBins,
       """WITH t AS (SELECT doc_id,
         |    CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) AS n_tokens,
         |    md5(CAST(doc_id AS VARCHAR)) AS h
@@ -1037,8 +984,8 @@ object LlmQueries2 {
         |SELECT doc_id, shard, CAST(strt // 512 AS BIGINT) AS bin_id,
         |  CAST(strt % 512 AS BIGINT) AS bin_offset,
         |  n_tokens
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "text_tfidf_topk" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Query("text_tfidf_topk", textTfidfTopk,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS wd FROM n),
          |tf AS (SELECT doc_id, wd, count(*) AS tf FROM w WHERE wd <> ''
@@ -1052,6 +999,6 @@ object LlmQueries2 {
          |        ORDER BY score DESC, term) AS rk FROM s)
          |SELECT doc_id, term, tf, df, score, CAST(rk AS INTEGER) AS rank
          |FROM r WHERE rk <= 3
-         |ORDER BY doc_id, rank""".stripMargin,
+         |ORDER BY doc_id, rank""".stripMargin),
   )
 }

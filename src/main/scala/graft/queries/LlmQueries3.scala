@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{Components, Dedup, Pca, TextAnalysis}
+import CommonSql.normSql
 
 /** Round-8 training-data-pipeline operators: BM25 lexical retrieval,
   * power-iteration PCA projection, label-propagation community
@@ -14,10 +15,6 @@ import graft.ops.{Components, Dedup, Pca, TextAnalysis}
   * included (unrolled like `graph_pagerank`'s).
   */
 object LlmQueries3 {
-
-  // DuckDB mirror of Dedup.normalize (same as the sibling registries).
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
 
   /** Query terms for the BM25 demo query — common corpus words so the
     * candidate set spans sources; shared with the oracle literal list. */
@@ -121,17 +118,6 @@ object LlmQueries3 {
         n = 3, k = 128)
       .orderBy(col("s1"), col("s2"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_bm25_topk" -> (textBm25TopK _),
-    "text_bm25_multiquery" -> (textBm25MultiQuery _),
-    "emb_pca_project" -> (embPcaProject _),
-    "emb_pca_topr" -> (embPcaTopR _),
-    "artifact_lm_serve" -> (artifactLmServe _),
-    "graph_label_prop" -> (graphLabelProp _),
-    "graph_modularity" -> (graphModularity _),
-    "dedup_lsh_recall" -> (dedupLshRecall _),
-    "source_bottomk_sim" -> (sourceBottomkSim _))
-
   // ---- DuckDB oracles ---------------------------------------------------
 
   // Unrolled power-iteration replay: y = X·v, u = Xᵀ·y, then the
@@ -196,8 +182,8 @@ object LlmQueries3 {
        |l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM edges),
        |$lpaIterCtes""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "text_bm25_topk" ->
+  val all: Seq[Query] = Seq(
+    Query("text_bm25_topk", textBm25TopK,
       s"""WITH wf AS (
          |  SELECT doc_id AS id, w.w
          |  FROM documents,
@@ -219,8 +205,8 @@ object LlmQueries3 {
          |  CAST(sum((CAST(idf AS HUGEINT) * tfp) // 1000000) AS BIGINT) AS bm25_micro
          |FROM sc GROUP BY id
          |ORDER BY bm25_micro DESC, doc_id
-         |LIMIT 50""".stripMargin,
-    "text_bm25_multiquery" ->
+         |LIMIT 50""".stripMargin),
+    Query("text_bm25_multiquery", textBm25MultiQuery,
       s"""WITH qt(qid, w) AS (VALUES ${Bm25Queries.flatMap { case (q, ts) =>
               ts.map(t => s"($q, '$t')") }.mkString(", ")}),
          |wf AS (
@@ -250,8 +236,8 @@ object LlmQueries3 {
          |FROM (SELECT *, row_number() OVER (PARTITION BY qid
          |        ORDER BY bm25_micro DESC, id) AS rk FROM agg)
          |WHERE rk <= 10
-         |ORDER BY query_id, rk""".stripMargin,
-    "emb_pca_project" ->
+         |ORDER BY query_id, rk""".stripMargin),
+    Query("emb_pca_project", embPcaProject,
       s"""WITH xm AS (SELECT vec_id, CAST(r.range AS INTEGER) AS idx,
          |    CAST(floor(CAST(embedding[CAST(r.range + 1 AS INTEGER)] AS DOUBLE)
          |      * 1000) AS BIGINT) AS x
@@ -266,12 +252,12 @@ object LlmQueries3 {
          |SELECT x.vec_id, CAST(sum(x.x * v3.v) AS BIGINT) AS proj_micro
          |FROM xall x JOIN v3 ON v3.idx = x.idx
          |GROUP BY x.vec_id
-         |ORDER BY x.vec_id""".stripMargin,
+         |ORDER BY x.vec_id""".stripMargin),
     // Train/serve trigram-LM replay: counts from the doc_id < 500 slice,
     // scoring over the full corpus with LEFT joins + Laplace floors for
     // unseen n-grams (coalesce(c, 0) + 1). MATERIALIZED for the same
     // multi-consumer reason as text_lm_trigram's oracle.
-    "artifact_lm_serve" ->
+    Query("artifact_lm_serve", artifactLmServe,
       s"""WITH w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |tg AS MATERIALIZED (SELECT doc_id,
@@ -312,8 +298,8 @@ object LlmQueries3 {
          |SELECT d.doc_id, CAST(coalesce(s.n_trigrams, 0) AS BIGINT) AS n_trigrams,
          |  CAST(coalesce(s.lm3_micro, 0) AS BIGINT) AS lm3_micro
          |FROM documents d LEFT JOIN s USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "emb_pca_topr" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("emb_pca_topr", embPcaTopR,
       s"""WITH xm AS MATERIALIZED (SELECT vec_id, CAST(r.range AS INTEGER) AS idx,
          |    CAST(floor(CAST(embedding[CAST(r.range + 1 AS INTEGER)] AS DOUBLE)
          |      * 1000) AS BIGINT) AS x
@@ -342,15 +328,15 @@ object LlmQueries3 {
          |  CAST(sum(x.x * b.v) AS BIGINT) AS pc2_micro
          |FROM xall x JOIN v3 a ON a.idx = x.idx JOIN bv3 b ON b.idx = x.idx
          |GROUP BY x.vec_id
-         |ORDER BY x.vec_id""".stripMargin,
-    "graph_label_prop" ->
+         |ORDER BY x.vec_id""".stripMargin),
+    Query("graph_label_prop", graphLabelProp,
       s"""WITH $lpaChainCtes
          |SELECT id AS doc_id, CAST(lbl AS BIGINT) AS community
-         |FROM l2 ORDER BY doc_id""".stripMargin,
+         |FROM l2 ORDER BY doc_id""".stripMargin),
     // LSH band-recall replay: exact >= 0.5 pairs from the brute shingle
     // self-join, banded candidates from the same signature CTEs, and the
     // verified intersection (cand ∩ exact = the pipeline's output).
-    "dedup_lsh_recall" ->
+    Query("dedup_lsh_recall", dedupLshRecall,
       s"""WITH ${LlmQueries.gramsCteFor("grams", "doc_id < 300")},
          |sizes AS (SELECT id, count(*) AS sz FROM grams GROUP BY id),
          |inter AS (SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
@@ -373,12 +359,12 @@ object LlmQueries3 {
          |  CAST((1000000 * sum(coalesce(h.h, 0))) // greatest(count(*), 1)
          |    AS BIGINT) AS recall_micro
          |FROM ex e LEFT JOIN hit h
-         |  ON h.id_a = e.id_a AND h.id_b = e.id_b""".stripMargin,
+         |  ON h.id_a = e.id_a AND h.id_b = e.id_b""".stripMargin),
     // Modularity replay over the same LPA chain: m / intra-community
     // edges / community degree sums, then the sign-split
     // common-denominator q_micro (negative when a community is sparser
     // than chance — abs before //, so floor == truncate).
-    "graph_modularity" ->
+    Query("graph_modularity", graphModularity,
       s"""WITH $lpaChainCtes,
          |wc AS (SELECT p.id_a, p.id_b, la.lbl AS cu, lb.lbl AS cv
          |  FROM pairs p JOIN l2 la ON la.id = p.id_a
@@ -400,8 +386,8 @@ object LlmQueries3 {
          |                     - dc.d_c * dc.d_c)) // (4 * mm.m * mm.m)
          |    END AS BIGINT) AS q_micro
          |FROM dc LEFT JOIN ec ON ec.c = dc.c CROSS JOIN mm
-         |ORDER BY community""".stripMargin,
-    "source_bottomk_sim" ->
+         |ORDER BY community""".stripMargin),
+    Query("source_bottomk_sim", sourceBottomkSim,
       s"""WITH w AS (SELECT source, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |g AS (SELECT DISTINCT source,
@@ -433,5 +419,5 @@ object LlmQueries3 {
          |SELECT s1, s2,
          |  CAST((1000000 * sum(a * b)) // count(*) AS BIGINT) AS j_micro
          |FROM r WHERE rn <= 128 GROUP BY s1, s2
-         |ORDER BY s1, s2""".stripMargin)
+         |ORDER BY s1, s2""".stripMargin))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{Chunking, Components, Curation, Dedup, QualityModel,
   Similarity, TextAnalysis}
+import CommonSql.{normSql, hashSql, marginCte}
 
 /** Round-9 training-data-pipeline operators: the cluster-quality triad
   * (simplified silhouette / Davies–Bouldin / purity), trained
@@ -21,10 +22,6 @@ import graft.ops.{Chunking, Components, Curation, Dedup, QualityModel,
   * traversals included.
   */
 object LlmQueries4 {
-
-  // DuckDB mirror of Dedup.normalize (same as the sibling registries).
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
 
   /** Per-cell simplified silhouette of the trained micro k-means
     * clustering (k=8, 2 iterations, trained on the bounded vec_id<2000
@@ -284,33 +281,7 @@ object LlmQueries4 {
       .orderBy(col("doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_audio_fingerprint_dedup" -> (mmAudioFingerprintDedup _),
-    "sample_rank_normalize" -> (sampleRankNormalize _),
-    "mm_image_dhash_dedup" -> (mmImageDhashDedup _),
-    "text_html_strip" -> (textHtmlStrip _),
-    "dedup_connected_best" -> (dedupConnectedBest _),
-    "emb_kcenter_coreset" -> (embKcenterCoreset _),
-    "emb_cluster_purity" -> (embClusterPurity _),
-    "sim_mmr_rerank" -> (simMmrRerank _),
-    "mm_image_ahash_dedup" -> (mmImageAhashDedup _),
-    "quality_reliability" -> (qualityReliability _),
-    "emb_silhouette" -> (embSilhouette _),
-    "text_ct_langid" -> (textCtLangid _),
-    "sample_weighted" -> (sampleWeighted _),
-    "curation_dsir_select" -> (curationDsirSelect _),
-    "rag_chunk_retrieve" -> (ragChunkRetrieve _),
-    "text_novelty" -> (textNovelty _),
-    "emb_anisotropy" -> (embAnisotropy _),
-    "graph_kcore" -> (graphKcore _),
-    "emb_davies_bouldin" -> (embDaviesBouldin _),
-    "mix_plan_uniform" -> (mixPlanUniform _))
-
   // ---- DuckDB oracles ---------------------------------------------------
-
-  // DuckDB mirror of Dedup.hashStr (60-bit md5-prefix hash under a seed).
-  private def hashSql(seed: Int, e: String) =
-    s"CAST('0x' || substring(md5('$seed|' || $e), 1, 15) AS BIGINT)"
 
   // Rounded-6 cosine between two DOUBLE[] exprs (the ivfTopK re-rank
   // metric — same fixed-order double arithmetic as the Spark VecDot).
@@ -372,19 +343,6 @@ object LlmQueries4 {
        |  JOIN k$i b ON b.src = e.dst)""".stripMargin
   }.mkString(",\n")
 
-  // The integer-weight margin CTEs (mirror of LlmQueries2's marginCte —
-  // kept textually identical so the scorer has ONE cross-registry shape).
-  private lazy val marginCte =
-    s"""n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
-       |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS wd FROM n),
-       |f AS (SELECT doc_id, ${hashSql(77, "wd")} % 256 AS bucket,
-       |        count(*) AS cnt
-       |      FROM w WHERE wd <> '' GROUP BY 1, 2),
-       |s AS (SELECT doc_id, count(*) AS n_features,
-       |        CAST(sum(cnt * ((${hashSql(55, "CAST(bucket AS VARCHAR)")} % 21) - 10))
-       |          AS BIGINT) AS margin
-       |      FROM f GROUP BY doc_id)""".stripMargin
-
   // Unrolled k-center greedy steps 2..k: per-vector min distance to the
   // selected set, argmax by (d desc, vid).
   private def kcenterSteps(k: Int) = (2 to k).map { i =>
@@ -415,12 +373,12 @@ object LlmQueries4 {
     s"trim(regexp_replace($decoded, '\\s+', ' ', 'g'))"
   }
 
-  val oracle: Map[String, String] = Map(
+  val all: Seq[Query] = Seq(
     // Audio-fingerprint replay: the WAV round-trip is lossless 16-bit
     // PCM, so sample i = ((seed*31 + i*7) % 65536) - 32768 rebuilds
     // exactly; 16 floor-mapped windows of |sample|, neighbor
     // cross-multiplied bits, min-id clusters.
-    "mm_audio_fingerprint_dedup" ->
+    Query("mm_audio_fingerprint_dedup", mmAudioFingerprintDedup,
       """WITH ids AS (SELECT doc_id, doc_id % 40 AS seed
         |  FROM documents WHERE doc_id <= 300),
         |sm AS (SELECT doc_id, seed, s.i AS i,
@@ -443,10 +401,10 @@ object LlmQueries4 {
         |SELECT h.doc_id, h.aprint, cl.cluster_id,
         |  h.doc_id = cl.cluster_id AS is_canonical
         |FROM hsh h JOIN cl USING (aprint)
-        |ORDER BY h.doc_id""".stripMargin,
+        |ORDER BY h.doc_id""".stripMargin),
     // Rank-normalization replay: per-source (score asc, id) ranks →
     // integer percentile.
-    "sample_rank_normalize" ->
+    Query("sample_rank_normalize", sampleRankNormalize,
       """SELECT doc_id, source, n_chars,
         |  CAST((1000000 * (rk - 1)) // greatest(n - 1, 1) AS BIGINT)
         |    AS n_chars_pct_micro
@@ -455,11 +413,11 @@ object LlmQueries4 {
         |      ORDER BY n_chars, doc_id) AS rk,
         |    count(*) OVER (PARTITION BY source) AS n
         |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // dHash replay: same 32x24 synthesis formula, 9x8 floor-mapped
     // cells, right-neighbor cross-multiplied comparisons in row-major
     // bit order, min-id clusters.
-    "mm_image_dhash_dedup" ->
+    Query("mm_image_dhash_dedup", mmImageDhashDedup,
       """WITH ids AS (SELECT doc_id, doc_id % 40 AS seed
         |  FROM documents WHERE doc_id <= 300),
         |px AS (SELECT doc_id, seed, x.range AS x, y.range AS y,
@@ -482,10 +440,10 @@ object LlmQueries4 {
         |SELECT h.doc_id, h.dhash, cl.cluster_id,
         |  h.doc_id = cl.cluster_id AS is_canonical
         |FROM hsh h JOIN cl USING (dhash)
-        |ORDER BY h.doc_id""".stripMargin,
+        |ORDER BY h.doc_id""".stripMargin),
     // HTML-strip replay: rebuild the synthesized page, run the same
     // strip chain, hash the extracted text.
-    "text_html_strip" ->
+    Query("text_html_strip", textHtmlStrip,
       s"""SELECT doc_id,
          |  CAST(length(t) AS INTEGER) AS text_len, md5(t) AS text_md5
          |FROM (SELECT doc_id, ${stripHtmlSql(
@@ -494,11 +452,11 @@ object LlmQueries4 {
                " || '</h1><!-- comment --><p>' || text" +
                " || ' &lt;tag&gt; &amp;amp; done</p></body></html>'")} AS t
          |  FROM documents)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Keep-best connected dedup replay: the shared MinHash pair chain →
     // recursive-CTE components → argmax (n_chars desc, id) representative
     // per component → surviving corpus.
-    "dedup_connected_best" ->
+    Query("dedup_connected_best", dedupConnectedBest,
       s"""WITH RECURSIVE $pairChainCtes,
          |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
          |          UNION ALL SELECT id_b, id_a FROM pairs),
@@ -517,9 +475,9 @@ object LlmQueries4 {
          |  WHERE id NOT IN (SELECT id FROM rep))
          |SELECT doc_id, n_chars FROM documents
          |WHERE doc_id < 500 AND doc_id NOT IN (SELECT id FROM losers)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // k-center replay: min-id seed, then 5 unrolled farthest-point picks.
-    "emb_kcenter_coreset" ->
+    Query("emb_kcenter_coreset", embKcenterCoreset,
       s"""WITH src AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
          |            FROM embeddings),
          |g1 AS MATERIALIZED (SELECT vid, v, CAST(0 AS BIGINT) AS d
@@ -535,10 +493,10 @@ object LlmQueries4 {
          |  UNION ALL SELECT vid, 4, d FROM g4
          |  UNION ALL SELECT vid, 5, d FROM g5
          |  UNION ALL SELECT vid, 6, d FROM g6)
-         |ORDER BY rank""".stripMargin,
+         |ORDER BY rank""".stripMargin),
     // Purity replay: trained cells + serve assignment, per-(cell, label)
     // counts, argmax by (count desc, label asc), integer purity.
-    "emb_cluster_purity" ->
+    Query("emb_cluster_purity", embClusterPurity,
       s"""WITH src AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
          |            FROM embeddings),
          |${KmeansSql.trainCtes("src", "vid < 2000", k = 8, iters = 2, dim = 64)},
@@ -558,10 +516,10 @@ object LlmQueries4 {
          |  CAST((1000000 * t.c) // tot.n AS BIGINT) AS purity_micro
          |FROM top t JOIN tot USING (cell)
          |WHERE t.rn = 1
-         |ORDER BY t.cell""".stripMargin,
+         |ORDER BY t.cell""".stripMargin),
     // MMR replay: micro query sims, top-30 first stage, then 5 unrolled
     // greedy steps with the exact long score λμ·sq − (10⁶−λμ)·max_sel.
-    "sim_mmr_rerank" ->
+    Query("sim_mmr_rerank", simMmrRerank,
       s"""WITH src AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
          |            FROM embeddings),
          |q AS (SELECT v FROM src WHERE vid = 0),
@@ -582,12 +540,12 @@ object LlmQueries4 {
          |  UNION ALL SELECT vid, 3, sq, score FROM p3
          |  UNION ALL SELECT vid, 4, sq, score FROM p4
          |  UNION ALL SELECT vid, 5, sq, score FROM p5)
-         |ORDER BY rank""".stripMargin,
+         |ORDER BY rank""".stripMargin),
     // aHash replay from the synthesis formula: the PNG round-trip is
     // lossless, so pixel (x,y) = (seed*13 + x*31 + y*7) % 256 rebuilds
     // exactly; 8x8 floor-mapped cells, cross-multiplied threshold, the
     // 64-char bit string, min-id clusters.
-    "mm_image_ahash_dedup" ->
+    Query("mm_image_ahash_dedup", mmImageAhashDedup,
       """WITH ids AS (SELECT doc_id, doc_id % 40 AS seed
         |  FROM documents WHERE doc_id <= 300),
         |px AS (SELECT doc_id, seed, x.range AS x, y.range AS y,
@@ -611,10 +569,10 @@ object LlmQueries4 {
         |SELECT h.doc_id, h.ahash, cl.cluster_id,
         |  h.doc_id = cl.cluster_id AS is_canonical
         |FROM hsh h JOIN cl USING (ahash)
-        |ORDER BY h.doc_id""".stripMargin,
+        |ORDER BY h.doc_id""".stripMargin),
     // Reliability replay: margins + is-English labels, sign-split
     // floor bins of width 50, integer rates and means.
-    "quality_reliability" ->
+    Query("quality_reliability", qualityReliability,
       s"""WITH $marginCte,
          |lab AS (SELECT s.doc_id, s.margin,
          |          CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS label
@@ -631,12 +589,12 @@ object LlmQueries4 {
          |    THEN -((-sum(margin)) // count(*))
          |    ELSE sum(margin) // count(*) END AS BIGINT) AS mean_score
          |FROM b GROUP BY bin
-         |ORDER BY bin""".stripMargin,
+         |ORDER BY bin""".stripMargin),
     // Silhouette replay: the KmeansSql unrolled training (2 iterations,
     // vid<2000 slice), then per (vector, cell) micro cosine distances,
     // rank-1/rank-2 via the per-vector window, and the per-cell integer
     // means. d = 10⁶ − round(cos·10⁶) mirrors silhouetteByCell exactly.
-    "emb_silhouette" ->
+    Query("emb_silhouette", embSilhouette,
       s"""WITH src AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
          |            FROM embeddings),
          |${KmeansSql.trainCtes("src", "vid < 2000", k = 8, iters = 2, dim = 64)},
@@ -661,12 +619,12 @@ object LlmQueries4 {
          |  CAST(sum(db) // count(*) AS BIGINT) AS mean_inter_micro,
          |  CAST(sum(s) // count(*) AS BIGINT) AS mean_sil_micro
          |FROM ab GROUP BY cell
-         |ORDER BY cell""".stripMargin,
+         |ORDER BY cell""".stripMargin),
     // Cavnar–Trenkle replay: char trigrams of the normalized text, the
     // per-language top-40 rank profile from the doc_id<250 slice, the
     // per-document top-40 profile, out-of-place distance with penalty 40
     // for profile misses, argmin by (dist, lang).
-    "text_ct_langid" ->
+    Query("text_ct_langid", textCtLangid,
       s"""WITH nt AS (SELECT doc_id, lang, ${normSql("text")} AS t
          |            FROM documents),
          |tg AS (SELECT doc_id, lang, substring(t, CAST(r.i AS INTEGER), 3) AS g
@@ -696,10 +654,10 @@ object LlmQueries4 {
          |FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
          |        ORDER BY dist, cand) AS rn FROM sc)
          |WHERE rn = 1
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Sequential Poisson replay: integer priority hash // weight, the
     // 200 lowest (priority, doc_id) rows.
-    "sample_weighted" ->
+    Query("sample_weighted", sampleWeighted,
       s"""SELECT doc_id, source, n_chars FROM (
          |  SELECT doc_id, source, n_chars,
          |    row_number() OVER (ORDER BY
@@ -708,11 +666,11 @@ object LlmQueries4 {
          |      doc_id) AS rn
          |  FROM documents WHERE n_chars > 0)
          |WHERE rn <= 200
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // DSIR replay: hashed unigram+bigram buckets, Laplace-smoothed
     // target/raw ratio per bucket in HUGEINT (the DECIMAL(38,0) mirror),
     // per-doc mean ratio, top-100 by (score desc, id).
-    "curation_dsir_select" ->
+    Query("curation_dsir_select", curationDsirSelect,
       s"""WITH w AS (SELECT doc_id, lang, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |uni AS (SELECT doc_id, lang, u.w AS g
@@ -743,12 +701,12 @@ object LlmQueries4 {
          |  CAST(ds.sr // ds.n_grams AS BIGINT) AS ratio_micro
          |FROM ds JOIN documents d USING (doc_id)
          |ORDER BY ratio_micro DESC, d.doc_id
-         |LIMIT 100""".stripMargin,
+         |LIMIT 100""".stripMargin),
     // RAG composition replay: chunk windows → signed hash-bucket dense
     // vectors (the text_cluster_assign embedding CTEs, keyed by chunk
     // vid) → unrolled micro k-means → probe-2 IVF → rounded-cosine
     // re-rank top-5 (the sim_ivf_trained_topk serve shape).
-    "rag_chunk_retrieve" ->
+    Query("rag_chunk_retrieve", ragChunkRetrieve,
       s"""WITH ck AS (
          |  SELECT doc_id * 1000 + o.i // 48 AS vid,
          |    substring(text, CAST(o.i + 1 AS INTEGER), 64) AS t
@@ -787,10 +745,10 @@ object LlmQueries4 {
          |  JOIN src q ON q.vid = cd.query_id
          |  JOIN src n ON n.vid = cd.neighbor_id)
          |WHERE rank <= 5
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
     // Novelty replay: distinct per-doc bigrams, min-doc-id first
     // occurrence, per-doc novel share; gram-less docs keep zeros.
-    "text_novelty" ->
+    Query("text_novelty", textNovelty,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm
          |  FROM documents),
          |w AS (SELECT doc_id, string_split(norm, ' ') AS ws FROM n),
@@ -807,10 +765,10 @@ object LlmQueries4 {
          |  CAST((1000000 * coalesce(per.n_novel, 0))
          |    // greatest(coalesce(per.n_grams, 0), 1) AS BIGINT) AS novelty_micro
          |FROM documents d LEFT JOIN per USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Anisotropy replay: micro means per (label, idx) with the offset
     // division, per-vector squared micro norms, group ratio in HUGEINT.
-    "emb_anisotropy" ->
+    Query("emb_anisotropy", embAnisotropy,
       """WITH x AS (SELECT vec_id, label AS g, CAST(r.range AS INTEGER) AS idx,
         |    CAST(floor(CAST(embedding[CAST(r.range + 1 AS INTEGER)] AS DOUBLE)
         |      * 1000000) AS BIGINT) AS m
@@ -831,11 +789,11 @@ object LlmQueries4 {
         |  CAST((CAST(1000000 AS HUGEINT) * ms.mu_sq)
         |    // greatest(nrm.mean_sq_norm, 1) AS BIGINT) AS aniso_micro
         |FROM ms JOIN nrm USING (g)
-        |ORDER BY group_id""".stripMargin,
+        |ORDER BY group_id""".stripMargin),
     // Davies–Bouldin replay: the silhouette chain's own-cell distances
     // → per-cell mean intra, plus the k×k centroid-distance matrix and
     // the max (S_i+S_j)/M_ij ratio.
-    "emb_davies_bouldin" ->
+    Query("emb_davies_bouldin", embDaviesBouldin,
       s"""WITH src AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
          |            FROM embeddings),
          |${KmeansSql.trainCtes("src", "vid < 2000", k = 8, iters = 2, dim = 64)},
@@ -869,10 +827,10 @@ object LlmQueries4 {
          |FROM percell p JOIN mm ON mm.ci = p.cell
          |JOIN percell q ON q.cell = mm.cj
          |GROUP BY p.cell, p.n, p.s
-         |ORDER BY p.cell""".stripMargin,
+         |ORDER BY p.cell""".stripMargin),
     // Mix-plan replay: per-source whitespace token masses, uniform
     // quota = budget div P, integer rate/epoch/shortfall arithmetic.
-    "mix_plan_uniform" ->
+    Query("mix_plan_uniform", mixPlanUniform,
       s"""WITH c AS (SELECT source,
          |    CAST(sum(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT)
          |      AS n_tokens
@@ -887,10 +845,10 @@ object LlmQueries4 {
          |  CAST(greatest(0, (30000 // p.p) - n_tokens) AS BIGINT)
          |    AS shortfall_tokens
          |FROM c CROSS JOIN p
-         |ORDER BY source""".stripMargin,
+         |ORDER BY source""".stripMargin),
     // k-core replay: the shared MinHash pair chain → symmetric edges →
     // 3 unrolled peeling sweeps → surviving within-core degrees.
-    "graph_kcore" ->
+    Query("graph_kcore", graphKcore,
       s"""WITH $pairChainCtes,
          |e0 AS (SELECT DISTINCT src, dst FROM (
          |  SELECT id_a AS src, id_b AS dst FROM pairs
@@ -898,5 +856,5 @@ object LlmQueries4 {
          |${kcoreSweeps(k = 3, sweeps = 3)}
          |SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS core_degree
          |FROM e3 GROUP BY src
-         |ORDER BY doc_id""".stripMargin)
+         |ORDER BY doc_id""".stripMargin))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{Chunking, Components, Curation, Dedup, Pca, QualityModel,
   Similarity, Sketches, TextAnalysis}
+import CommonSql.{normSql, hashSql, marginCte}
 
 /** Round-9 (second batch) training-data-pipeline operators: hybrid
   * lexical+dense retrieval fused by reciprocal rank (the production RAG
@@ -25,12 +26,6 @@ import graft.ops.{Chunking, Components, Curation, Dedup, Pca, QualityModel,
   * integer / DECIMAL(38,0) arithmetic only, so every query carries a
   * full DuckDB replay oracle. */
 object LlmQueries5 {
-
-  // DuckDB mirrors of Dedup.normalize / Dedup.hashStr (same as siblings).
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
-  private def hashSql(seed: Int, e: String) =
-    s"CAST('0x' || substring(md5('$seed|' || $e), 1, 15) AS BIGINT)"
 
   /** Hybrid retrieval: the BM25 lexical leg and the sparse dense-hash
     * cosine leg run over the same 4-query catalog
@@ -441,44 +436,15 @@ object LlmQueries5 {
       .orderBy(col("shard"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pack_efficiency" -> (packEfficiency _),
-    "sketch_wau_mau" -> (sketchWauMau _),
-    "text_watermark_detect" -> (textWatermarkDetect _),
-    "emb_whiten_outliers" -> (embWhitenOutliers _),
-    "layout_bucketed_join" -> (layoutBucketedJoin _),
-    "split_leakage_check" -> (splitLeakageCheck _),
-    "interval_merge_activity" -> (intervalMergeActivity _),
-    "asof_tolerance_click" -> (asofToleranceClick _),
-    "quality_threshold_select" -> (qualityThresholdSelect _),
-    "mm_scene_keyframes" -> (mmSceneKeyframes _),
-    "mm_video_scene_cuts" -> (mmVideoSceneCuts _),
-    "sketch_hist_merge" -> (sketchHistMerge _),
-    "text_script_profile" -> (textScriptProfile _),
-    "pipeline_pretrain_prep" -> (pipelinePretrainPrep _),
-    "text_code_detect" -> (textCodeDetect _),
-    "source_jsonl_roundtrip" -> (sourceJsonlRoundtrip _),
-    "rag_sentence_chunks" -> (ragSentenceChunks _),
-    "quality_auc_by_source" -> (qualityAucBySource _),
-    "dedup_cluster_sizes" -> (dedupClusterSizes _),
-    "dedup_repeated_runs" -> (dedupRepeatedRuns _),
-    "text_simpson_diversity" -> (textSimpsonDiversity _),
-    "quality_gopher_gate" -> (qualityGopherGate _),
-    "sim_rrf_hybrid" -> (simRrfHybrid _),
-    "emb_whiten" -> (embWhiten _),
-    "quality_ks_drift" -> (qualityKsDrift _),
-    "sample_curriculum" -> (sampleCurriculum _),
-    "mix_epoch_plan" -> (mixEpochPlan _))
-
   // Shared VALUES list for the query catalog (kept adjacent to the
   // Spark-side constant it mirrors).
   private val qtValues = LlmQueries3.Bm25Queries
     .flatMap { case (q, ts) => ts.map(t => s"($q, '$t')") }.mkString(", ")
 
-  def oracle: Map[String, String] = Map(
+  def all: Seq[Query] = Seq(
     // sample_pack_bins' cumsum chain + the per-shard roll-up; a doc's
     // last touched bin is (start + tokens - 1) div 512.
-    "pack_efficiency" ->
+    Query("pack_efficiency", packEfficiency,
       """WITH t AS (SELECT doc_id,
         |    CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER)
         |      AS n_tokens,
@@ -504,10 +470,10 @@ object LlmQueries5 {
         |  CAST(n_bins * 512 AS BIGINT) AS capacity_tokens,
         |  CAST((1000000 * total_tokens) // greatest(n_bins * 512, 1)
         |    AS BIGINT) AS util_micro
-        |FROM r ORDER BY shard""".stripMargin,
+        |FROM r ORDER BY shard""".stripMargin),
     // Weekly HLL ledger + trailing-window register merge, all the same
     // md5/integer arithmetic as Sketches.hllCardinalitySql.
-    "sketch_wau_mau" -> {
+    Query("sketch_wau_mau", sketchWauMau, {
       val b = Sketches.HllB; val m = 1 << b
       val wDiv = 1L << (60 - b); val rankMax = 60 - b + 1
       val alphaNum = BigInt(7213) * m
@@ -544,8 +510,8 @@ object LlmQueries5 {
          |    greatest(mau.mau_micro, 1) AS BIGINT) AS stickiness_micro
          |FROM wau JOIN mau USING (week)
          |ORDER BY week""".stripMargin
-    },
-    "text_watermark_detect" ->
+    }),
+    Query("text_watermark_detect", textWatermarkDetect,
       s"""WITH w AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS ws
          |           FROM documents),
          |bg AS (SELECT doc_id,
@@ -568,10 +534,10 @@ object LlmQueries5 {
          |        >= 1600 * per.n
          |    THEN 1 ELSE 0 END, 0) AS BIGINT) AS is_watermarked
          |FROM documents d LEFT JOIN per USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin),
     // emb_whiten's stats chain served corpus-wide, rolled up to the
     // per-vector mean squared whitened coordinate.
-    "emb_whiten_outliers" ->
+    Query("emb_whiten_outliers", embWhitenOutliers,
       s"""WITH xm AS (SELECT vec_id, CAST(r.range AS INTEGER) AS idx,
          |    CAST(floor(CAST(embedding[CAST(r.range + 1 AS INTEGER)] AS DOUBLE)
          |      * 1000) AS BIGINT) AS x
@@ -600,18 +566,18 @@ object LlmQueries5 {
          |  CAST(CASE WHEN m2_microsq >
          |      2 * CAST(1000000 AS BIGINT) * 1000000
          |    THEN 1 ELSE 0 END AS BIGINT) AS is_outlier
-         |FROM m ORDER BY vec_id""".stripMargin,
+         |FROM m ORDER BY vec_id""".stripMargin),
     // A plain join over the ORIGINAL parquet — layout must not change
     // results, only plans.
-    "layout_bucketed_join" ->
+    Query("layout_bucketed_join", layoutBucketedJoin,
       s"""SELECT c_nationkey, count(*) AS n_orders,
          |  ${T.sql.moneySum("o_totalprice")} AS total_price
          |FROM customer JOIN orders ON c_custkey = o_custkey
          |GROUP BY c_nationkey
-         |ORDER BY c_nationkey""".stripMargin,
+         |ORDER BY c_nationkey""".stripMargin),
     // The dedup_minhash_lsh chain + the split CASE + cross-split
     // filtering and the two roll-ups.
-    "split_leakage_check" ->
+    Query("split_leakage_check", splitLeakageCheck,
       s"""WITH ${LlmQueries.gramsCteFor("grams", "doc_id < 500")},
          |sig AS (
          |  SELECT id,
@@ -668,9 +634,9 @@ object LlmQueries5 {
          |  GROUP BY 1, 2)
          |SELECT split_lo, split_hi, np.n_pairs, nd.n_docs
          |FROM np JOIN nd USING (split_lo, split_hi)
-         |ORDER BY split_lo, split_hi""".stripMargin,
+         |ORDER BY split_lo, split_hi""".stripMargin),
     // Island detection with the same running-max/running-count windows.
-    "interval_merge_activity" ->
+    Query("interval_merge_activity", intervalMergeActivity,
       s"""WITH iv AS (SELECT user_id,
          |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS s,
          |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) + 1800 AS e
@@ -690,11 +656,11 @@ object LlmQueries5 {
          |SELECT user_id, CAST(min(s) AS BIGINT) AS start_sec,
          |  CAST(max(e) AS BIGINT) AS end_sec, count(*) AS n_intervals
          |FROM isl GROUP BY user_id, island
-         |ORDER BY user_id, start_sec""".stripMargin,
+         |ORDER BY user_id, start_sec""".stripMargin),
     // DuckDB ASOF + tolerance as a post-filter: backward as-of picks the
     // LATEST match <= ts, so nulling the stale one is exactly bounded
     // staleness (no older candidate could qualify either).
-    "asof_tolerance_click" ->
+    Query("asof_tolerance_click", asofToleranceClick,
       """SELECT p.event_id, p.user_id,
         |  CASE WHEN c.ts >= p.ts - INTERVAL 1 HOUR THEN c.ts END
         |    AS click_ts,
@@ -706,11 +672,11 @@ object LlmQueries5 {
         |     (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
         |      FROM events WHERE event_type = 'click') c
         |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
+        |ORDER BY p.event_id""".stripMargin),
     // The PR sweep (quality_pr_curve's chain) + the operating-point
     // pick: qualifying rows rank by recall, the fallback by precision.
-    "quality_threshold_select" ->
-      s"""WITH ${LlmQueries2.marginCte},
+    Query("quality_threshold_select", qualityThresholdSelect,
+      s"""WITH ${marginCte},
          |lab AS (SELECT s.doc_id, s.margin,
          |          CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS label
          |        FROM s JOIN documents d USING (doc_id)),
@@ -737,10 +703,10 @@ object LlmQueries5 {
          |  CASE WHEN precision_micro >= 600000 THEN recall_micro
          |    ELSE precision_micro END DESC,
          |  precision_micro DESC, threshold ASC
-         |LIMIT 1""".stripMargin,
+         |LIMIT 1""".stripMargin),
     // The scene-cut replay + inclusive running cut count + per-scene
     // roll-up.
-    "mm_scene_keyframes" ->
+    Query("mm_scene_keyframes", mmSceneKeyframes,
       s"""WITH fr AS (SELECT v.range AS vid, f.range AS f
          |  FROM range(5) v CROSS JOIN range(10) f),
          |lv AS (SELECT vid, f, (f // 4) * 80 + (f % 4) * 2 AS level FROM fr),
@@ -768,11 +734,11 @@ object LlmQueries5 {
          |  CAST(min(f) AS INTEGER) AS keyframe_idx,
          |  count(*) AS n_frames
          |FROM sc GROUP BY vid, scene_id
-         |ORDER BY video_id, scene_id""".stripMargin,
+         |ORDER BY video_id, scene_id""".stripMargin),
     // Analytic replay of the gradient frames (no wrap, no clamp by
     // construction), block sums, and the lag diff — the decode path is
     // what Spark adds; the pixels are exact through the lossless PNG.
-    "mm_video_scene_cuts" ->
+    Query("mm_video_scene_cuts", mmVideoSceneCuts,
       s"""WITH fr AS (SELECT v.range AS vid, f.range AS f
          |  FROM range(5) v CROSS JOIN range(10) f),
          |lv AS (SELECT vid, f, (f // 4) * 80 + (f % 4) * 2 AS level FROM fr),
@@ -793,10 +759,10 @@ object LlmQueries5 {
          |  CAST(CASE WHEN coalesce(df.d, 0) >= 20000 THEN 1 ELSE 0 END
          |    AS BIGINT) AS is_cut
          |FROM fr LEFT JOIN df ON df.vid = fr.vid AND df.f = fr.f
-         |ORDER BY video_id, frame_idx""".stripMargin,
+         |ORDER BY video_id, frame_idx""".stripMargin),
     // One-pass direct histogram — equality with Spark's two-half merge
     // IS the mergeability statement.
-    "sketch_hist_merge" ->
+    Query("sketch_hist_merge", sketchHistMerge,
       s"""WITH src AS (SELECT event_type AS g,
          |    CAST(floor(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT) AS x
          |  FROM events WHERE value IS NOT NULL),
@@ -808,8 +774,8 @@ object LlmQueries5 {
          |  FROM src)
          |SELECT g AS event_type, bin, count(*) AS cnt
          |FROM binned GROUP BY 1, 2
-         |ORDER BY event_type, bin""".stripMargin,
-    "text_script_profile" ->
+         |ORDER BY event_type, bin""".stripMargin),
+    Query("text_script_profile", textScriptProfile,
       s"""WITH m AS (SELECT doc_id,
          |    CAST(len(regexp_extract_all(text, '[A-Za-z]', 0)) AS BIGINT)
          |      AS n_latin,
@@ -848,9 +814,9 @@ object LlmQueries5 {
          |      AND n_greek >= n_hangul THEN 'greek'
          |    ELSE 'none'
          |  END AS dominant_script
-         |FROM m ORDER BY doc_id""".stripMargin,
+         |FROM m ORDER BY doc_id""".stripMargin),
     // Gate + exact dedup + epoch mix, per-source attrition spine.
-    "pipeline_pretrain_prep" ->
+    Query("pipeline_pretrain_prep", pipelinePretrainPrep,
       s"""WITH gw AS (SELECT doc_id,
          |    list_filter(string_split(${normSql("text")}, ' '),
          |      x -> x <> '') AS ws
@@ -904,8 +870,8 @@ object LlmQueries5 {
          |    + p.partial_tokens, 0) AS BIGINT) AS planned_tokens
          |FROM spine LEFT JOIN gc USING (source) LEFT JOIN dc USING (source)
          |  LEFT JOIN e2 USING (source) LEFT JOIN p USING (source)
-         |ORDER BY source""".stripMargin,
-    "text_code_detect" ->
+         |ORDER BY source""".stripMargin),
+    Query("text_code_detect", textCodeDetect,
       s"""WITH m AS (SELECT doc_id,
          |    CAST(len(regexp_extract_all(text, '[{}\\[\\]();=<>]', 0))
          |      AS BIGINT) AS n_sym,
@@ -923,14 +889,14 @@ object LlmQueries5 {
          |    AS BIGINT) AS code_score,
          |  CAST(CASE WHEN (1000 * (4 * n_kw + 2 * n_ident + n_sym))
          |      // n_words >= 350 THEN 1 ELSE 0 END AS BIGINT) AS is_code
-         |FROM m ORDER BY doc_id""".stripMargin,
+         |FROM m ORDER BY doc_id""".stripMargin),
     // The round trip is lossless iff the re-read fingerprints equal the
     // originals', which is exactly what this oracle states.
-    "source_jsonl_roundtrip" ->
+    Query("source_jsonl_roundtrip", sourceJsonlRoundtrip,
       """SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // Sentence split + word-offset chunk assignment + ordered reassembly.
-    "rag_sentence_chunks" ->
+    Query("rag_sentence_chunks", ragSentenceChunks,
       s"""WITH s0 AS (SELECT doc_id, CAST(r.i AS INTEGER) AS i,
          |    trim(sp[CAST(r.i + 1 AS INTEGER)]) AS s
          |  FROM (SELECT doc_id, string_split_regex(text, '\\.\\s+') AS sp
@@ -948,10 +914,10 @@ object LlmQueries5 {
          |  count(*) AS n_sentences, CAST(sum(nw) AS BIGINT) AS n_words,
          |  string_agg(s, ' ' ORDER BY i) AS chunk_text
          |FROM o GROUP BY doc_id, off // 40
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
-    // marginCte (LlmQueries2) + the grouped pairwise AUC.
-    "quality_auc_by_source" ->
-      s"""WITH ${LlmQueries2.marginCte},
+         |ORDER BY doc_id, chunk_idx""".stripMargin),
+    // marginCte + the grouped pairwise AUC.
+    Query("quality_auc_by_source", qualityAucBySource,
+      s"""WITH ${marginCte},
          |lab AS (SELECT s.doc_id, s.margin, d.source,
          |          CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS label
          |        FROM s JOIN documents d USING (doc_id)),
@@ -974,10 +940,10 @@ object LlmQueries5 {
          |    ELSE (1000000 * coalesce(conc.concordant, 0) + 500000 * t.tied)
          |      // (t.n_pos * t.n_neg) END AS BIGINT) AS auc_micro
          |FROM t LEFT JOIN conc ON conc.g = t.g
-         |ORDER BY source""".stripMargin,
+         |ORDER BY source""".stripMargin),
     // Same recursive-CTE CC replay as dedup_cc_clusters, aggregated to
     // the size histogram; singletons from the total-count difference.
-    "dedup_cluster_sizes" ->
+    Query("dedup_cluster_sizes", dedupClusterSizes,
       s"""WITH RECURSIVE bkt AS (
          |  SELECT vec_id, embedding, ${LlmQueries.lshBucketSql("embedding")} AS bkt
          |  FROM embeddings),
@@ -1006,10 +972,10 @@ object LlmQueries5 {
          |FROM hist
          |UNION ALL
          |SELECT 1, t - c, t - c FROM tot, cl
-         |ORDER BY cluster_size""".stripMargin,
+         |ORDER BY cluster_size""".stripMargin),
     // ExactSubstr replay: positional shingle hashes, corpus occurrence
     // counts, the pos − row_number() consecutive-run trick.
-    "dedup_repeated_runs" ->
+    Query("dedup_repeated_runs", dedupRepeatedRuns,
       s"""WITH wr AS (SELECT doc_id,
          |    string_split(${normSql("text")}, ' ') AS ws
          |  FROM documents),
@@ -1029,8 +995,8 @@ object LlmQueries5 {
          |  CAST(count(*) + 3 AS BIGINT) AS len_words,
          |  CAST(count(*) AS BIGINT) AS n_shingles
          |FROM runs GROUP BY doc_id, grp
-         |ORDER BY doc_id, start_word""".stripMargin,
-    "text_simpson_diversity" ->
+         |ORDER BY doc_id, start_word""".stripMargin),
+    Query("text_simpson_diversity", textSimpsonDiversity,
       s"""WITH w AS (SELECT doc_id, w.w
          |  FROM documents,
          |       unnest(string_split(${normSql("text")}, ' ')) AS w(w)
@@ -1049,8 +1015,8 @@ object LlmQueries5 {
          |  coalesce(m.simpson_micro, 0) AS simpson_micro,
          |  coalesce(1000000 - m.simpson_micro, 0) AS diversity_micro
          |FROM documents d LEFT JOIN m USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-    "quality_gopher_gate" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Query("quality_gopher_gate", qualityGopherGate,
       s"""WITH w AS (SELECT doc_id,
          |    list_filter(string_split(${normSql("text")}, ' '),
          |      x -> x <> '') AS ws
@@ -1082,11 +1048,11 @@ object LlmQueries5 {
          |    * (CASE WHEN 10 * n_alpha >= 8 * n_words AND n_words > 0
          |      THEN 1 ELSE 0 END)
          |    * (CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS keep
-         |FROM m ORDER BY doc_id""".stripMargin,
+         |FROM m ORDER BY doc_id""".stripMargin),
     // Full replay: the BM25 multiquery chain (LlmQueries3's oracle, k=10)
     // + the sparse hash-cosine chain (text_hash_embedding's feature CTE on
     // both sides, HUGEINT signed-squared cosine) + integer RRF fusion.
-    "sim_rrf_hybrid" ->
+    Query("sim_rrf_hybrid", simRrfHybrid,
       s"""WITH qt(qid, w) AS (VALUES $qtValues),
          |wf AS (
          |  SELECT doc_id AS id, w.w
@@ -1149,13 +1115,13 @@ object LlmQueries5 {
          |FROM (SELECT *, row_number() OVER (PARTITION BY qid
          |        ORDER BY rrf_micro DESC, id) AS rank FROM fz)
          |WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
+         |ORDER BY query_id, rank""".stripMargin),
     // Whitening replay: integer per-dim stats on the train slice, exact
     // isqrt re-derived from floor(sqrt(double)) with a ±1 correction
     // (sqrt can round across an integer boundary near perfect squares),
     // then the sign-split serve division. greatest(sd, 1) mirrors the
     // constant-dimension clamp.
-    "emb_whiten" ->
+    Query("emb_whiten", embWhiten,
       s"""WITH xm AS (SELECT vec_id, CAST(r.range AS INTEGER) AS idx,
          |    CAST(floor(CAST(embedding[CAST(r.range + 1 AS INTEGER)] AS DOUBLE)
          |      * 1000) AS BIGINT) AS x
@@ -1179,10 +1145,10 @@ object LlmQueries5 {
          |  END AS BIGINT) AS z_micro
          |FROM xm x JOIN sdx USING (idx)
          |WHERE x.vec_id < 300
-         |ORDER BY vec_id, idx""".stripMargin,
-    "quality_ks_drift" ->
-      Sketches.ksDriftSql("documents", "lang", "n_chars", "en", "zh"),
-    "sample_curriculum" ->
+         |ORDER BY vec_id, idx""".stripMargin),
+    Query("quality_ks_drift", qualityKsDrift,
+      Sketches.ksDriftSql("documents", "lang", "n_chars", "en", "zh")),
+    Query("sample_curriculum", sampleCurriculum,
       s"""WITH r AS (SELECT doc_id, source, n_chars,
          |    row_number() OVER (PARTITION BY source
          |      ORDER BY n_chars, doc_id) AS rk,
@@ -1195,8 +1161,8 @@ object LlmQueries5 {
          |  FROM b)
          |SELECT doc_id, source, n_chars, bucket, pos_in_bucket,
          |  CAST(pos_in_bucket * 10 + bucket AS BIGINT) AS sched_rank
-         |FROM p ORDER BY source, sched_rank, doc_id""".stripMargin,
-    "mix_epoch_plan" ->
+         |FROM p ORDER BY source, sched_rank, doc_id""".stripMargin),
+    Query("mix_epoch_plan", mixEpochPlan,
       s"""WITH c AS (SELECT source, count(*) AS n_docs,
          |    CAST(sum(n_chars) AS BIGINT) AS n_tokens_tot
          |  FROM documents GROUP BY source),
@@ -1220,5 +1186,5 @@ object LlmQueries5 {
          |  e.full_epochs, e.frac_micro, p.partial_docs, p.partial_tokens,
          |  CAST(e.full_epochs * e.n_tokens_tot + p.partial_tokens
          |    AS BIGINT) AS planned_tokens
-         |FROM e JOIN p USING (source) ORDER BY source""".stripMargin)
+         |FROM e JOIN p USING (source) ORDER BY source""".stripMargin))
 }

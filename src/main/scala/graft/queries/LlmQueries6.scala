@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{AsOf, Cdc, Components, Curation, Dedup, Sessions, Sketches, TextAnalysis}
+import CommonSql.normSql
 
 /** Round-9 (third batch) operators: exact set-similarity self-join via
   * prefix filtering (the PPJoin family — LSH-free, false-negative-free
@@ -18,10 +19,6 @@ import graft.ops.{AsOf, Cdc, Components, Curation, Dedup, Sessions, Sketches, Te
   * arithmetic in every similarity predicate, explicit unique tie-breakers
   * in every window, so each query carries a full DuckDB replay oracle. */
 object LlmQueries6 {
-
-  // DuckDB mirror of Dedup.normalize (same as siblings).
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
 
   /** Exact word-Jaccard ≥ 0.9 pairs via prefix filtering
     * ([[Dedup.prefixFilterJaccardPairs]]) over the bounded corpus slice.
@@ -276,25 +273,6 @@ object LlmQueries6 {
       .orderBy(col("source"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mix_source_gini" -> (mixSourceGini _),
-    "dedup_ppjoin" -> (dedupPpjoin _),
-    "cdc_latest_snapshot" -> (cdcLatestSnapshot _),
-    "scd2_history" -> (scd2History _),
-    "privacy_k_anonymity" -> (privacyKAnonymity _),
-    "graph_bfs_hops" -> (graphBfsHops _),
-    "event_decayed_counts" -> (eventDecayedCounts _),
-    "corpus_snapshot_diff" -> (corpusSnapshotDiff _),
-    "split_by_cluster" -> (splitByCluster _),
-    "text_mixed_lang" -> (textMixedLang _),
-    "source_orc_roundtrip" -> (sourceOrcRoundtrip _),
-    "graph_host_rank" -> (graphHostRank _),
-    "text_topic_segments" -> (textTopicSegments _),
-    "asof_nearest_click" -> (asofNearestClick _),
-    "event_trimmed_mean" -> (eventTrimmedMean _),
-    "graph_ppr" -> (graphPpr _),
-    "sketch_join_size" -> (sketchJoinSize _))
-
   // Split CASE keyed by the cluster representative — the same exact IEEE
   // bound values assignSplit bakes into the Spark plan (splitBounds).
   private def splitCaseOn(keyExpr: String): String = {
@@ -345,11 +323,11 @@ object LlmQueries6 {
        |  FROM nodes n LEFT JOIN c$i c USING (id))""".stripMargin
   }.mkString(",\n")
 
-  def oracle: Map[String, String] = Map(
+  def all: Seq[Query] = Seq(
     // Rank-form Gini in micro-units: G = (2R - (n+1)S) / (nS) with
     // R = sum(rank * x) over the (value, doc_id)-sorted order; HUGEINT
     // mirrors Spark's DECIMAL(38,0) intermediates exactly.
-    "mix_source_gini" ->
+    Query("mix_source_gini", mixSourceGini,
       """WITH t AS (SELECT source, doc_id,
         |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
         |      AS n_tokens
@@ -368,10 +346,10 @@ object LlmQueries6 {
         |  CAST(CASE WHEN s = 0 THEN 0 ELSE
         |    (1000000 * (2 * rr - CAST(n + 1 AS HUGEINT) * s))
         |      // (CAST(n AS HUGEINT) * s) END AS BIGINT) AS gini_micro
-        |FROM a ORDER BY source""".stripMargin,
+        |FROM a ORDER BY source""".stripMargin),
     // CMS replay (seeds 91..94, 2^10 buckets, md5 60-bit hash) for both
     // sides + min-over-rows dot product; exact side is the count join.
-    "sketch_join_size" ->
+    Query("sketch_join_size", sketchJoinSize,
       """WITH p AS (SELECT CAST(user_id AS VARCHAR) AS v FROM events
         |  WHERE event_type = 'purchase'),
         |c AS (SELECT CAST(user_id AS VARCHAR) AS v FROM events
@@ -395,10 +373,10 @@ object LlmQueries6 {
         |    LEFT JOIN dots ON dots.hr = r.range) AS BIGINT)
         |    AS est_join_size,
         |  ex.exact_join_size
-        |FROM ex""".stripMargin,
+        |FROM ex""".stripMargin),
     // MinHash edge chain + seed-flagged node set + the unrolled
     // walk-with-restart rounds (teleport mass on seeds only).
-    "graph_ppr" ->
+    Query("graph_ppr", graphPpr,
       s"""WITH ${LlmQueries.gramsCteFor("grams", "doc_id < 500")},
          |sig AS (SELECT id, ${LlmQueries.sigCols} FROM grams GROUP BY id),
          |bands AS (SELECT id, r.range AS band, ${LlmQueries.bandCase} AS band_key
@@ -430,11 +408,11 @@ object LlmQueries6 {
          |p0 AS (SELECT id, seed, seed * (SELECT u0 FROM k) AS pr FROM nodes),
          |$pprIters
          |SELECT id AS doc_id, CAST(pr AS BIGINT) AS ppr
-         |FROM p3 ORDER BY doc_id""".stripMargin,
+         |FROM p3 ORDER BY doc_id""".stripMargin),
     // The nearest-join DEFINITION: all candidates within ±1 h, ranked by
     // (|Δµs|, backward-first, then each side's struct resolution —
     // backward greatest (value, ts), forward least).
-    "asof_nearest_click" ->
+    Query("asof_nearest_click", asofNearestClick,
       """WITH p AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |  FROM events WHERE event_type = 'purchase'),
         |c AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
@@ -455,8 +433,8 @@ object LlmQueries6 {
         |SELECT p.event_id, p.user_id, b.cts AS click_ts,
         |  b.cv AS click_value
         |FROM p LEFT JOIN best b ON b.event_id = p.event_id
-        |ORDER BY p.event_id""".stripMargin,
-    "event_trimmed_mean" ->
+        |ORDER BY p.event_id""".stripMargin),
+    Query("event_trimmed_mean", eventTrimmedMean,
       """WITH e AS (SELECT event_type, event_id,
         |    CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
         |r AS (SELECT event_type, cents,
@@ -470,10 +448,10 @@ object LlmQueries6 {
         |  CAST(count(*) AS BIGINT) AS n_kept,
         |  CAST(sum(cents) AS DOUBLE) / count(*) AS trimmed_mean_cents
         |FROM k GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
+        |ORDER BY event_type""".stripMargin),
     // Sentence CTE + per-sentence distinct word lists + lag adjacency —
     // the exact 1-sentence-block TextTiling reduction, integer threshold.
-    "text_topic_segments" ->
+    Query("text_topic_segments", textTopicSegments,
       s"""WITH s0 AS (SELECT doc_id, CAST(r.i AS INTEGER) AS i,
          |    trim(sp[CAST(r.i + 1 AS INTEGER)]) AS s
          |  FROM (SELECT doc_id, string_split_regex(text, '\\.\\s+') AS sp
@@ -500,10 +478,10 @@ object LlmQueries6 {
          |  CAST(sum(CASE WHEN hasprev AND inter * 5 < uni * 1
          |    THEN 1 ELSE 0 END) + 1 AS BIGINT) AS n_segments
          |FROM m GROUP BY doc_id
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // Page synthesis + regexp_extract_all replayed in SQL, then the
     // unrolled integer PageRank chain (graph_pagerank's form, directed).
-    "graph_host_rank" ->
+    Query("graph_host_rank", graphHostRank,
       s"""WITH pg AS (SELECT doc_id,
          |    '<html><body><a href="http://h' || ((doc_id * 7 + 1) % 50)
          |    || '.ex.com/a">a</a><a href="http://h' || ((doc_id * 7 + 2) % 50)
@@ -520,14 +498,14 @@ object LlmQueries6 {
          |p0 AS (SELECT id, (SELECT u0 FROM k) AS pr FROM nodes),
          |$hostRankIters
          |SELECT id AS host_id, CAST(pr AS BIGINT) AS pr
-         |FROM p3 ORDER BY host_id""".stripMargin,
-    "source_orc_roundtrip" ->
+         |FROM p3 ORDER BY host_id""".stripMargin),
+    Query("source_orc_roundtrip", sourceOrcRoundtrip,
       """SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // MinHash pair chain (graph_triangles CTEs) → recursive components
     // (min-label reach, the dedup_cc_clusters oracle form) → singleton
     // fallback → the exact-IEEE split CASE on the representative.
-    "split_by_cluster" ->
+    Query("split_by_cluster", splitByCluster,
       s"""WITH RECURSIVE ${LlmQueries.gramsCteFor("grams", "doc_id < 500")},
          |sig AS (SELECT id, ${LlmQueries.sigCols} FROM grams GROUP BY id),
          |bands AS (SELECT id, r.range AS band, ${LlmQueries.bandCase} AS band_key
@@ -556,12 +534,12 @@ object LlmQueries6 {
          |  ${splitCaseOn("coalesce(c.component, d.doc_id)")} AS split
          |FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
          |WHERE d.doc_id < 500
-         |ORDER BY d.doc_id""".stripMargin,
+         |ORDER BY d.doc_id""".stripMargin),
     // Sentence split (rag_sentence_chunks CTE form) → per-sentence lang
     // vote → adjacent-switch window + (doc, lang) counts → argmax by
     // (count, lang) — Spark's max(struct) tie-break replayed as
     // ORDER BY c DESC, lang DESC.
-    "text_mixed_lang" ->
+    Query("text_mixed_lang", textMixedLang,
       s"""WITH s0 AS (SELECT doc_id, CAST(r.i AS INTEGER) AS i,
          |    trim(sp[CAST(r.i + 1 AS INTEGER)]) AS s
          |  FROM (SELECT doc_id, string_split_regex(text, '\\.\\s+') AS sp
@@ -587,8 +565,8 @@ object LlmQueries6 {
          |  CAST((1000000 * dom.c) // sw.n_sentences AS BIGINT)
          |    AS dominant_micro
          |FROM sw JOIN dom ON dom.doc_id = sw.doc_id
-         |ORDER BY sw.doc_id""".stripMargin,
-    "event_decayed_counts" ->
+         |ORDER BY sw.doc_id""".stripMargin),
+    Query("event_decayed_counts", eventDecayedCounts,
       """WITH e AS (SELECT user_id, event_type,
         |    CAST(round(value * 100, 0) AS BIGINT) AS cents,
         |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS sec
@@ -601,8 +579,8 @@ object LlmQueries6 {
         |    AS BIGINT) AS decayed_micro
         |FROM e CROSS JOIN m
         |GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-    "corpus_snapshot_diff" ->
+        |ORDER BY user_id, event_type""".stripMargin),
+    Query("corpus_snapshot_diff", corpusSnapshotDiff,
       s"""WITH o AS (SELECT doc_id AS id, md5(${normSql("text")}) AS h_old
          |  FROM documents WHERE doc_id % 10 <> 7),
          |n AS (SELECT doc_id AS id,
@@ -617,11 +595,11 @@ object LlmQueries6 {
          |SELECT s.source, d.status, CAST(count(*) AS BIGINT) AS n_docs
          |FROM d JOIN documents s ON s.doc_id = d.id
          |GROUP BY s.source, d.status
-         |ORDER BY s.source, d.status""".stripMargin,
+         |ORDER BY s.source, d.status""".stripMargin),
     // The oracle is the DEFINITION (all shared-token pairs, exact
     // rational threshold), not a replay of the prefix filter — the
     // filter is provably lossless, so both must agree bit-for-bit.
-    "dedup_ppjoin" ->
+    Query("dedup_ppjoin", dedupPpjoin,
       s"""WITH w AS (
          |  SELECT DISTINCT doc_id AS id, u.w
          |  FROM documents, unnest(string_split(${normSql("text")}, ' ')) AS u(w)
@@ -635,8 +613,8 @@ object LlmQueries6 {
          |FROM inter
          |JOIN sz sa ON sa.id = id_a JOIN sz sb ON sb.id = id_b
          |WHERE c * 10 >= 9 * (sa.n + sb.n - c)
-         |ORDER BY id_a, id_b""".stripMargin,
-    "cdc_latest_snapshot" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("cdc_latest_snapshot", cdcLatestSnapshot,
       """SELECT user_id, event_id, ts, event_type, value FROM (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,
         |    event_type, value,
@@ -644,8 +622,8 @@ object LlmQueries6 {
         |      ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
         |  FROM events)
         |WHERE rn = 1 AND event_type <> 'error'
-        |ORDER BY user_id""".stripMargin,
-    "scd2_history" ->
+        |ORDER BY user_id""".stripMargin),
+    Query("scd2_history", scd2History,
       """SELECT user_id, event_id,
         |  CAST(row_number() OVER w AS BIGINT) AS version,
         |  ts AS valid_from,
@@ -654,15 +632,15 @@ object LlmQueries6 {
         |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |      FROM events)
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, version""".stripMargin,
-    "privacy_k_anonymity" ->
+        |ORDER BY user_id, version""".stripMargin),
+    Query("privacy_k_anonymity", privacyKAnonymity,
       """SELECT lang, source, CAST(count(*) AS BIGINT) AS class_size,
         |  count(*) < 5 AS at_risk
         |FROM documents GROUP BY lang, source
-        |ORDER BY lang, source""".stripMargin,
+        |ORDER BY lang, source""".stripMargin),
     // Same MinHash edge CTEs as graph_triangles, then 3 unrolled
     // level-synchronous BFS rounds (frontier = newly-reached only).
-    "graph_bfs_hops" ->
+    Query("graph_bfs_hops", graphBfsHops,
       s"""WITH ${LlmQueries.gramsCteFor("grams", "doc_id < 500")},
          |sig AS (SELECT id, ${LlmQueries.sigCols} FROM grams GROUP BY id),
          |bands AS (SELECT id, r.range AS band, ${LlmQueries.bandCase} AS band_key
@@ -697,5 +675,5 @@ object LlmQueries6 {
          |  UNION ALL SELECT id, 1 FROM f1
          |  UNION ALL SELECT id, 2 FROM f2
          |  UNION ALL SELECT id, 3 FROM f3)
-         |ORDER BY doc_id""".stripMargin)
+         |ORDER BY doc_id""".stripMargin))
 }

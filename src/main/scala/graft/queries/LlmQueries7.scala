@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{Components, Dedup, Sketches, TextAnalysis}
+import CommonSql.{normSql, hashSql}
 
 /** Round-10 registry: batch replays of the STREAMING kernels, giving the
   * in-flight operators the same DuckDB-oracle discipline as the batch
@@ -14,14 +15,6 @@ import graft.ops.{Components, Dedup, Sketches, TextAnalysis}
   * scoring) is hash-checked, with only the micro-batch plumbing left to
   * the streaming specs. */
 object LlmQueries7 {
-
-  // DuckDB mirror of Dedup.normalize (same as siblings).
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
-
-  // DuckDB mirror of Dedup.hashStr (seeded 60-bit md5 prefix).
-  private def hashSql(seed: Int, e: String) =
-    s"CAST('0x' || substring(md5('$seed|' || $e), 1, 15) AS BIGINT)"
 
   /** The full Kneser–Ney per-doc score replay as a reusable CTE chain
     * ending in `kn(doc_id, n_bigrams, kn_micro)` — consumed by
@@ -124,12 +117,6 @@ object LlmQueries7 {
       .orderBy(col("host_id"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "streaming_sig_dedup" -> (streamingSigDedup _),
-    "streaming_drift_replay" -> (streamingDriftReplay _),
-    "text_lm_kneser_ney" -> (textLmKneserNey _),
-    "graph_hits" -> (graphHits _))
-
   // histRegisters binning, DuckDB form (shared with Sketches.ksDriftSql).
   private val binCase =
     s"""CASE WHEN x <= 0 THEN 0
@@ -137,8 +124,8 @@ object LlmQueries7 {
        |         ELSE ${Sketches.QSubBins} * length(bin(x)) + (x >> (length(bin(x)) - 5)) - 16
        |    END""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "streaming_sig_dedup" ->
+  val all: Seq[Query] = Seq(
+    Query("streaming_sig_dedup", streamingSigDedup,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |w AS (SELECT doc_id, norm,
          |    list_filter(list_distinct(string_split(norm, ' ')), g -> g <> '') AS gs
@@ -154,8 +141,8 @@ object LlmQueries7 {
          |SELECT doc_id, sig_key,
          |  row_number() OVER (PARTITION BY sig_key ORDER BY doc_id) = 1 AS kept
          |FROM sig
-         |ORDER BY doc_id""".stripMargin,
-    "streaming_drift_replay" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("streaming_drift_replay", streamingDriftReplay,
       s"""WITH rx AS (SELECT CAST(floor(CAST(value AS DOUBLE) * 1000000.0) AS BIGINT) AS x
          |  FROM events WHERE event_type = 'view' AND value IS NOT NULL),
          |ref AS (SELECT $binCase AS bin, CAST(count(*) AS BIGINT) AS cb
@@ -192,12 +179,12 @@ object LlmQueries7 {
          |      << (CAST(arg.ks_bin // ${Sketches.QSubBins} AS INTEGER) - 5)
          |  END AS BIGINT) AS ks_at_micro
          |FROM tot t JOIN m USING (g) JOIN arg USING (g)
-         |ORDER BY batch_id""".stripMargin,
-    "text_lm_kneser_ney" ->
+         |ORDER BY batch_id""".stripMargin),
+    Query("text_lm_kneser_ney", textLmKneserNey,
       s"""WITH $knCtes
          |SELECT doc_id, n_bigrams, kn_micro FROM kn
-         |ORDER BY doc_id""".stripMargin,
-    "graph_hits" -> {
+         |ORDER BY doc_id""".stripMargin),
+    Query("graph_hits", graphHits, {
       val iterCtes = (1 to 3).map { i =>
         s"""ar$i AS (SELECT e.dst AS id, CAST(sum(h.h) AS BIGINT) AS a
            |  FROM edges e JOIN h${i - 1} h ON h.id = e.src GROUP BY e.dst),
@@ -230,5 +217,5 @@ object LlmQueries7 {
          |SELECT n.id AS host_id, h3.h AS hub_micro, a3.a AS auth_micro
          |FROM nodes n JOIN h3 USING (id) JOIN a3 USING (id)
          |ORDER BY host_id""".stripMargin
-    })
+    }))
 }

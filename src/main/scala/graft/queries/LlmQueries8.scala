@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.T
 import graft.ops.{Components, Curation, Dedup, QualityModel, Sessions, Similarity, Sketches, TextAnalysis, UrlOps}
+import CommonSql.{normSql, hashSql, marginCte}
 
 /** Round-10 registry batch 8: graph link prediction, CUSUM changepoint
   * monitoring, chance-corrected model-agreement + per-source calibration
@@ -11,26 +12,6 @@ import graft.ops.{Components, Curation, Dedup, QualityModel, Sessions, Similarit
   * exact-integer, all DuckDB-replayed.
   */
 object LlmQueries8 {
-
-  // DuckDB mirror of Dedup.normalize (same as sibling batches).
-  private def normSql(c: String) =
-    s"trim(regexp_replace(regexp_replace(lower($c), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
-
-  // DuckDB mirror of Dedup.hashStr (seeded 60-bit md5 prefix).
-  private def hashSql(seed: Int, e: String) =
-    s"CAST('0x' || substring(md5('$seed|' || $e), 1, 15) AS BIGINT)"
-
-  // Integer-weight margin CTEs (mirror of LlmQueries2/4's marginCte).
-  private lazy val marginCte =
-    s"""n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
-       |w AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS wd FROM n),
-       |f AS (SELECT doc_id, ${hashSql(77, "wd")} % 256 AS bucket,
-       |        count(*) AS cnt
-       |      FROM w WHERE wd <> '' GROUP BY 1, 2),
-       |s AS (SELECT doc_id, count(*) AS n_features,
-       |        CAST(sum(cnt * ((${hashSql(55, "CAST(bucket AS VARCHAR)")} % 21) - 10))
-       |          AS BIGINT) AS margin
-       |      FROM f GROUP BY doc_id)""".stripMargin
 
   /** The deterministic crawl-URL fixture: every document gets a URL whose
     * spelling varies in exactly the ways canonicalization must erase —
@@ -635,47 +616,8 @@ object LlmQueries8 {
       .orderBy(col("host_id"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_link_predict" -> (graphLinkPredict _),
-    "event_cusum_drift" -> (eventCusumDrift _),
-    "quality_cohens_kappa" -> (qualityCohensKappa _),
-    "quality_decile_calibration" -> (qualityDecileCalibration _),
-    "url_parse_profile" -> (urlParseProfile _),
-    "dedup_url_canonical" -> (dedupUrlCanonical _),
-    "url_host_rollup" -> (urlHostRollup _),
-    "text_rake_keywords" -> (textRakeKeywords _),
-    "text_blocklist_filter" -> (textBlocklistFilter _),
-    "event_seasonal_error" -> (eventSeasonalError _),
-    "mine_hard_negatives" -> (mineHardNegatives _),
-    "quality_robust_scale" -> (qualityRobustScale _),
-    "dedup_cdc_chunks" -> (dedupCdcChunks _),
-    "emb_matryoshka_eval" -> (embMatryoshkaEval _),
-    "curation_prototype_prune" -> (curationPrototypePrune _),
-    "quality_label_noise" -> (qualityLabelNoise _),
-    "event_hourly_profile" -> (eventHourlyProfile _),
-    "graph_weighted_rank" -> (graphWeightedRank _),
-    "rag_retrieval_eval" -> (ragRetrievalEval _),
-    "dedup_line_c4" -> (dedupLineC4 _),
-    "privacy_l_diversity" -> (privacyLDiversity _),
-    "event_interarrival" -> (eventInterarrival _),
-    "text_oov_rate" -> (textOovRate _),
-    "graph_degree_profile" -> (graphDegreeProfile _),
-    "graph_harmonic" -> (graphHarmonic _),
-    "dedup_token_impact" -> (dedupTokenImpact _),
-    "dedup_cross_source_matrix" -> (dedupCrossSourceMatrix _),
-    "text_dup_ngram_coverage" -> (textDupNgramCoverage _),
-    "graph_assortativity" -> (graphAssortativity _),
-    "corpus_datacard" -> (corpusDatacard _),
-    "pipeline_web_curation" -> (pipelineWebCuration _),
-    "graph_rich_club" -> (graphRichClub _),
-    "event_top_paths" -> (eventTopPaths _),
-    "emb_snapshot_shift" -> (embSnapshotShift _),
-    "quality_length_bias" -> (qualityLengthBias _),
-    "event_churn_cohorts" -> (eventChurnCohorts _),
-    "graph_clustering_coeff" -> (graphClusteringCoeff _))
-
-  val oracle: Map[String, String] = Map(
-    "graph_link_predict" ->
+  val all: Seq[Query] = Seq(
+    Query("graph_link_predict", graphLinkPredict,
       s"""WITH lk AS (
          |  SELECT doc_id % 50 AS src, (doc_id * 7 + 1) % 50 AS dst FROM documents
          |  UNION ALL
@@ -704,8 +646,8 @@ object LlmQueries8 {
          |  CAST((1000000 * c.cn) // (da.d + db.d - c.cn) AS BIGINT)
          |    AS jaccard_micro
          |FROM cand2 c JOIN deg da ON da.id = c.a JOIN deg db ON db.id = c.b
-         |ORDER BY id_a, id_b""".stripMargin,
-    "event_cusum_drift" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("event_cusum_drift", eventCusumDrift,
       s"""WITH d AS (SELECT event_type,
          |    strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
          |    CAST(count(*) AS BIGINT) AS x
@@ -721,8 +663,8 @@ object LlmQueries8 {
          |      ORDER BY day)) AS BIGINT) AS cusum
          |  FROM p)
          |SELECT event_type, day, x, cusum, cusum > 2 * k AS alarm
-         |FROM s ORDER BY event_type, day""".stripMargin,
-    "quality_cohens_kappa" ->
+         |FROM s ORDER BY event_type, day""".stripMargin),
+    Query("quality_cohens_kappa", qualityCohensKappa,
       s"""WITH $marginCte,
          |lab AS (SELECT s.doc_id,
          |    CASE WHEN s.margin > 0 THEN 1 ELSE 0 END AS pred,
@@ -750,8 +692,8 @@ object LlmQueries8 {
          |    ELSE (1000000 * (CAST(n AS HUGEINT) * d - e.e))
          |         // (CAST(n AS HUGEINT) * n - e.e)
          |  END AS BIGINT) AS kappa_micro
-         |FROM t CROSS JOIN e""".stripMargin,
-    "quality_decile_calibration" ->
+         |FROM t CROSS JOIN e""".stripMargin),
+    Query("quality_decile_calibration", qualityDecileCalibration,
       s"""WITH $marginCte,
          |lab AS (SELECT s.doc_id, s.margin, d.source,
          |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS label
@@ -773,8 +715,8 @@ object LlmQueries8 {
          |  CAST(abs((1000000 * sum(label)) // count(*)
          |    - (1000000 * (2 * bin - 1)) // 20) AS BIGINT) AS gap_micro
          |FROM b GROUP BY source, bin
-         |ORDER BY source, bin""".stripMargin,
-    "url_parse_profile" ->
+         |ORDER BY source, bin""".stripMargin),
+    Query("url_parse_profile", urlParseProfile,
       s"""SELECT doc_id,
          |  $urlFixtureSql AS url,
          |  'https' AS scheme,
@@ -798,8 +740,8 @@ object LlmQueries8 {
          |  2 AS path_depth,
          |  CASE WHEN doc_id % 2 = 0 THEN 2 ELSE 1 END AS n_params
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "dedup_url_canonical" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("dedup_url_canonical", dedupUrlCanonical,
       s"""WITH c AS (SELECT doc_id,
          |    $canonicalFixtureSql AS canonical_url
          |  FROM documents),
@@ -808,8 +750,8 @@ object LlmQueries8 {
          |SELECT c.doc_id, c.canonical_url, k.keeper_id,
          |  c.doc_id = k.keeper_id AS is_canonical
          |FROM c JOIN k USING (canonical_url)
-         |ORDER BY c.doc_id""".stripMargin,
-    "url_host_rollup" ->
+         |ORDER BY c.doc_id""".stripMargin),
+    Query("url_host_rollup", urlHostRollup,
       s"""WITH c AS (SELECT doc_id, n_chars,
          |    'example.'
          |      || CASE WHEN doc_id % 4 = 0 THEN 'com'
@@ -825,8 +767,8 @@ object LlmQueries8 {
          |  CAST((1000000 * (count(*) - count(DISTINCT canonical_url)))
          |    // count(*) AS BIGINT) AS dup_ratio_micro
          |FROM c GROUP BY 1
-         |ORDER BY registered_domain""".stripMargin,
-    "text_rake_keywords" ->
+         |ORDER BY registered_domain""".stripMargin),
+    Query("text_rake_keywords", textRakeKeywords,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |sp AS (SELECT doc_id, string_split(norm, ' ') AS ws FROM n),
          |tk AS (SELECT doc_id AS id, CAST(r.i - 1 AS BIGINT) AS pos,
@@ -862,8 +804,8 @@ object LlmQueries8 {
          |  FROM dp)
          |SELECT id AS doc_id, rnk AS "rank", phrase, score_micro
          |FROM rk WHERE rnk <= 3
-         |ORDER BY doc_id, rnk""".stripMargin,
-    "text_blocklist_filter" ->
+         |ORDER BY doc_id, rnk""".stripMargin),
+    Query("text_blocklist_filter", textBlocklistFilter,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |tk AS (SELECT doc_id AS id, u.w
          |  FROM (SELECT doc_id, string_split(norm, ' ') AS ws FROM n),
@@ -882,8 +824,8 @@ object LlmQueries8 {
          |  (1000000 * coalesce(agg.n_flagged, 0))
          |    // greatest(coalesce(agg.n_tokens, 0), 1) <= 100000 AS kept
          |FROM documents d LEFT JOIN agg ON agg.id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "event_seasonal_error" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Query("event_seasonal_error", eventSeasonalError,
       s"""WITH d AS (SELECT event_type,
          |    strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
          |    CAST(count(*) AS BIGINT) AS x
@@ -894,8 +836,8 @@ object LlmQueries8 {
          |  FROM d)
          |SELECT event_type, day, x, forecast, abs(x - forecast) AS abs_err
          |FROM l WHERE forecast IS NOT NULL
-         |ORDER BY event_type, day""".stripMargin,
-    "mine_hard_negatives" ->
+         |ORDER BY event_type, day""".stripMargin),
+    Query("mine_hard_negatives", mineHardNegatives,
       s"""WITH qt(qid, w) AS (VALUES ${HardNegQueries.flatMap { case (q, ts) =>
               ts.map(t => s"($q, '$t')") }.mkString(", ")}),
          |wf AS (
@@ -930,8 +872,8 @@ object LlmQueries8 {
          |SELECT qid AS query_id, CAST(neg_rank AS INTEGER) AS neg_rank,
          |  id AS doc_id, bm25_micro
          |FROM neg WHERE neg_rank <= 10
-         |ORDER BY query_id, neg_rank""".stripMargin,
-    "quality_robust_scale" ->
+         |ORDER BY query_id, neg_rank""".stripMargin),
+    Query("quality_robust_scale", qualityRobustScale,
       s"""WITH $marginCte,
          |lab AS (SELECT s.doc_id, s.margin, d.source
          |  FROM s JOIN documents d USING (doc_id)),
@@ -956,8 +898,8 @@ object LlmQueries8 {
          |    ELSE (1000000 * (margin - median)) // greatest(q3 - q1, 1)
          |  END AS BIGINT) AS robust_micro
          |FROM qs
-         |ORDER BY doc_id""".stripMargin,
-    "dedup_cdc_chunks" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("dedup_cdc_chunks", dedupCdcChunks,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |sp AS (SELECT doc_id, string_split(norm, ' ') AS ws FROM n),
          |tk AS (SELECT doc_id AS id, CAST(r.i - 1 AS BIGINT) AS pos,
@@ -988,8 +930,8 @@ object LlmQueries8 {
          |    // greatest(coalesce(pd.n_chunks, 0), 1) AS BIGINT)
          |    AS shared_frac_micro
          |FROM documents d LEFT JOIN pd ON pd.id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "emb_matryoshka_eval" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Query("emb_matryoshka_eval", embMatryoshkaEval,
       s"""WITH xm AS (SELECT vec_id, CAST(r.range AS INTEGER) AS idx,
          |    CAST(floor(CAST(embedding[CAST(r.range + 1 AS INTEGER)] AS DOUBLE)
          |      * 1000) AS BIGINT) AS x
@@ -1014,11 +956,11 @@ object LlmQueries8 {
          |  CAST(sum(cosm) // count(*) AS BIGINT) AS mean_cos_micro,
          |  CAST(min(cosm) AS BIGINT) AS min_cos_micro
          |FROM c GROUP BY r
-         |ORDER BY r""".stripMargin,
+         |ORDER BY r""".stripMargin),
     // Prototype-prune replay: the silhouette oracle's trained centroids
     // (KmeansSql, vid<2000, k=8, 2 iters) + rounded-cosine distances,
     // then the per-cell hardest-half keep rule.
-    "curation_prototype_prune" ->
+    Query("curation_prototype_prune", curationPrototypePrune,
       s"""WITH src AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
          |            FROM embeddings),
          |${KmeansSql.trainCtes("src", "vid < 2000", k = 8, iters = 2, dim = 64)},
@@ -1041,8 +983,8 @@ object LlmQueries8 {
          |SELECT vid AS vec_id, cell, d AS dist_micro,
          |  CAST(rank_in_cell AS INTEGER) AS rank_in_cell,
          |  rank_in_cell * 2 <= n AS kept
-         |FROM rkd ORDER BY vec_id""".stripMargin,
-    "quality_label_noise" ->
+         |FROM rkd ORDER BY vec_id""".stripMargin),
+    Query("quality_label_noise", qualityLabelNoise,
       s"""WITH $marginCte,
          |lab AS (SELECT s.doc_id, s.margin,
          |    CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS given
@@ -1077,8 +1019,8 @@ object LlmQueries8 {
          |  FROM lab CROSS JOIN th)
          |SELECT given, suggested, CAST(count(*) AS BIGINT) AS n
          |FROM cl GROUP BY 1, 2
-         |ORDER BY given, suggested""".stripMargin,
-    "event_hourly_profile" ->
+         |ORDER BY given, suggested""".stripMargin),
+    Query("event_hourly_profile", eventHourlyProfile,
       s"""WITH h AS (SELECT event_type,
          |    CAST(EXTRACT(hour FROM CAST(ts AS TIMESTAMP)) AS INTEGER)
          |      AS hour,
@@ -1091,8 +1033,8 @@ object LlmQueries8 {
          |  CAST((1000000 * h.n) // t.tot AS BIGINT) AS pct_micro,
          |  h.n = t.mx AS is_peak
          |FROM h JOIN t USING (event_type)
-         |ORDER BY event_type, hour""".stripMargin,
-    "graph_weighted_rank" -> {
+         |ORDER BY event_type, hour""".stripMargin),
+    Query("graph_weighted_rank", graphWeightedRank, {
       val iterCtes = (1 to 3).map { i =>
         s"""c$i AS (SELECT e.dst AS id,
            |    CAST(sum((CAST(p.pr AS HUGEINT) * e.w) // o.st) AS BIGINT)
@@ -1123,8 +1065,8 @@ object LlmQueries8 {
          |$iterCtes
          |SELECT id AS host_id, CAST(pr AS BIGINT) AS pr
          |FROM p3 ORDER BY host_id""".stripMargin
-    },
-    "rag_retrieval_eval" -> {
+    }),
+    Query("rag_retrieval_eval", ragRetrievalEval, {
       val disc = graft.ops.Similarity.discountTable(10)
         .map { case (r, d, pd) => s"($r, $d, $pd)" }.mkString(", ")
       s"""WITH qt(qid, w) AS (VALUES ${HardNegQueries.flatMap { case (q, ts) =>
@@ -1177,8 +1119,8 @@ object LlmQueries8 {
          |FROM perq p JOIN nrel n ON n.qid = p.qid
          |LEFT JOIN disc d2 ON d2.r = least(10, CAST(n.n_rel AS INTEGER))
          |ORDER BY query_id""".stripMargin
-    },
-    "dedup_line_c4" ->
+    }),
+    Query("dedup_line_c4", dedupLineC4,
       s"""WITH aug AS (SELECT doc_id,
          |    text || '$Boilerplate' AS t FROM documents),
          |sx AS (SELECT doc_id AS id, CAST(r.i - 1 AS BIGINT) AS pos,
@@ -1207,16 +1149,16 @@ object LlmQueries8 {
          |    AS dropped_frac_micro,
          |  md5(coalesce(pd.kept_text, '')) AS kept_md5
          |FROM documents d LEFT JOIN pd ON pd.id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "privacy_l_diversity" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Query("privacy_l_diversity", privacyLDiversity,
       s"""SELECT event_type,
          |  strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
          |  CAST(count(*) AS BIGINT) AS class_size,
          |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_sensitive,
          |  count(DISTINCT user_id) < 5 AS at_risk
          |FROM events GROUP BY 1, 2
-         |ORDER BY event_type, day""".stripMargin,
-    "event_interarrival" ->
+         |ORDER BY event_type, day""".stripMargin),
+    Query("event_interarrival", eventInterarrival,
       s"""WITH g AS (SELECT user_id, event_id,
          |    CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)
          |      - lag(CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT))
@@ -1238,8 +1180,8 @@ object LlmQueries8 {
          |    AS BIGINT) AS p90_gap_s,
          |  CAST(max(gap_s) AS BIGINT) AS max_gap_s
          |FROM rk GROUP BY user_id
-         |ORDER BY user_id""".stripMargin,
-    "text_oov_rate" ->
+         |ORDER BY user_id""".stripMargin),
+    Query("text_oov_rate", textOovRate,
       s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS norm FROM documents),
          |tk AS (SELECT doc_id AS id, u.w
          |  FROM (SELECT doc_id, string_split(norm, ' ') AS ws FROM n),
@@ -1259,8 +1201,8 @@ object LlmQueries8 {
          |    // greatest(coalesce(agg.n_tokens, 0), 1) AS BIGINT)
          |    AS oov_frac_micro
          |FROM documents d LEFT JOIN agg ON agg.id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "graph_degree_profile" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Query("graph_degree_profile", graphDegreeProfile,
       s"""WITH lk AS (
          |  SELECT doc_id % 50 AS src, (doc_id * 7 + 1) % 50 AS dst FROM documents
          |  UNION ALL
@@ -1273,8 +1215,8 @@ object LlmQueries8 {
          |    SELECT u AS id FROM und UNION ALL SELECT v FROM und)
          |  GROUP BY 1)
          |SELECT d, CAST(count(*) AS BIGINT) AS n_vertices
-         |FROM deg GROUP BY d ORDER BY d""".stripMargin,
-    "graph_harmonic" -> {
+         |FROM deg GROUP BY d ORDER BY d""".stripMargin),
+    Query("graph_harmonic", graphHarmonic, {
       val rounds = (1 to 3).map { i =>
         s"""f$i AS (SELECT DISTINCT d.seed, e.v AS id
            |  FROM edges e JOIN f${i - 1} d ON d.id = e.u
@@ -1304,8 +1246,8 @@ object LlmQueries8 {
          |  coalesce(a.harmonic_micro, 0) AS harmonic_micro
          |FROM seeds s LEFT JOIN agg a ON a.seed = s.seed
          |ORDER BY s.seed""".stripMargin
-    },
-    "dedup_token_impact" ->
+    }),
+    Query("dedup_token_impact", dedupTokenImpact,
       s"""WITH k AS (SELECT doc_id AS id, source,
          |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
          |      AS tok,
@@ -1324,10 +1266,10 @@ object LlmQueries8 {
          |    AS savings_micro
          |FROM k JOIN kp USING (ck)
          |GROUP BY k.source
-         |ORDER BY k.source""".stripMargin,
+         |ORDER BY k.source""".stripMargin),
     // The graph_pagerank MinHash verified-pair chain, rolled up per
     // unordered source pair.
-    "dedup_cross_source_matrix" ->
+    Query("dedup_cross_source_matrix", dedupCrossSourceMatrix,
       s"""WITH ${LlmQueries.gramsCteFor("grams", "doc_id < 500")},
          |sig AS (SELECT id, ${LlmQueries.sigCols} FROM grams GROUP BY id),
          |bands AS (SELECT id, r.range AS band, ${LlmQueries.bandCase} AS band_key
@@ -1352,8 +1294,8 @@ object LlmQueries8 {
          |JOIN documents da ON da.doc_id = p.id_a
          |JOIN documents db ON db.doc_id = p.id_b
          |GROUP BY 1, 2
-         |ORDER BY source_a, source_b""".stripMargin,
-    "text_dup_ngram_coverage" -> {
+         |ORDER BY source_a, source_b""".stripMargin),
+    Query("text_dup_ngram_coverage", textDupNgramCoverage, {
       val gram = (1 to 8).map(j => s"ws[i + $j]").mkString(" || ' ' || ")
       s"""WITH d AS (SELECT source,
          |    string_split(${normSql("text")}, ' ') AS ws FROM documents),
@@ -1368,8 +1310,8 @@ object LlmQueries8 {
          |    AS repeat_frac_micro
          |FROM c GROUP BY 1
          |ORDER BY source""".stripMargin
-    },
-    "graph_assortativity" ->
+    }),
+    Query("graph_assortativity", graphAssortativity,
       s"""WITH lk AS (
          |  SELECT doc_id % 50 AS src, (doc_id * 7 + 1) % 50 AS dst FROM documents
          |  UNION ALL
@@ -1398,8 +1340,8 @@ object LlmQueries8 {
          |           // (m * sxx - sx * sx))
          |    ELSE (1000000 * (m * sxy - sx * sx)) // (m * sxx - sx * sx)
          |  END AS BIGINT) AS assortativity_micro
-         |FROM s""".stripMargin,
-    "corpus_datacard" ->
+         |FROM s""".stripMargin),
+    Query("corpus_datacard", corpusDatacard,
       s"""WITH k AS (SELECT doc_id, lang, source,
          |    CAST(n_chars AS BIGINT) AS ch,
          |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
@@ -1424,11 +1366,11 @@ object LlmQueries8 {
          |    AS BIGINT) AS dup_frac_micro,
          |  CAST(base.total_tokens // greatest(base.n_docs, 1) AS BIGINT)
          |    AS mean_doc_tokens
-         |FROM base CROSS JOIN tl""".stripMargin,
+         |FROM base CROSS JOIN tl""".stripMargin),
     // The batch-8 stage oracles chained: URL-canonical keeper, line
     // dedup on the boilerplate-planted text, blocklist on the CLEANED
     // text, the integer-weight margin, and the conjunction.
-    "pipeline_web_curation" ->
+    Query("pipeline_web_curation", pipelineWebCuration,
       s"""WITH uc AS (SELECT doc_id,
          |    $canonicalFixtureSql AS cu FROM documents),
          |uk AS (SELECT c.doc_id, (c.doc_id = k.keep) AS url_keep
@@ -1483,8 +1425,8 @@ object LlmQueries8 {
          |JOIN pdl ON pdl.id = d.doc_id
          |JOIN blk ON blk.id = d.doc_id
          |JOIN s ON s.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "graph_rich_club" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Query("graph_rich_club", graphRichClub,
       s"""WITH lk AS (
          |  SELECT doc_id % 50 AS src, (doc_id * 7 + 1) % 50 AS dst FROM documents
          |  UNION ALL
@@ -1512,8 +1454,8 @@ object LlmQueries8 {
          |         // (nr.n_rich * (nr.n_rich - 1)) END AS BIGINT)
          |    AS density_micro
          |FROM ks LEFT JOIN nr USING (k) LEFT JOIN mr USING (k)
-         |ORDER BY k""".stripMargin,
-    "event_top_paths" ->
+         |ORDER BY k""".stripMargin),
+    Query("event_top_paths", eventTopPaths,
       s"""WITH p AS (SELECT event_type,
          |    lead(event_type, 1) OVER (PARTITION BY user_id
          |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS e2,
@@ -1525,8 +1467,8 @@ object LlmQueries8 {
          |FROM p WHERE e2 IS NOT NULL AND e3 IS NOT NULL
          |GROUP BY 1
          |ORDER BY n DESC, path
-         |LIMIT 20""".stripMargin,
-    "emb_snapshot_shift" ->
+         |LIMIT 20""".stripMargin),
+    Query("emb_snapshot_shift", embSnapshotShift,
       s"""WITH mid AS (SELECT CAST(max(vec_id) // 2 AS BIGINT) AS m
          |  FROM embeddings),
          |xa AS (SELECT CAST(r.range AS INTEGER) AS idx,
@@ -1549,8 +1491,8 @@ object LlmQueries8 {
          |  FROM xa JOIN xb USING (idx))
          |SELECT idx, mean_a_milli, mean_b_milli,
          |  abs(mean_a_milli - mean_b_milli) AS shift_milli
-         |FROM m ORDER BY idx""".stripMargin,
-    "quality_length_bias" ->
+         |FROM m ORDER BY idx""".stripMargin),
+    Query("quality_length_bias", qualityLengthBias,
       s"""WITH $marginCte,
          |lab AS (SELECT s.doc_id, s.margin, d.source,
          |    CAST(len(string_split_regex(trim(d.text), '\\s+')) AS BIGINT)
@@ -1578,15 +1520,15 @@ object LlmQueries8 {
          |           - 6 * s2))
          |         // (CAST(n AS HUGEINT) * (CAST(n AS HUGEINT) * n - 1))
          |  END AS BIGINT) AS spearman_micro
-         |FROM a ORDER BY source""".stripMargin,
-    "event_churn_cohorts" ->
+         |FROM a ORDER BY source""".stripMargin),
+    Query("event_churn_cohorts", eventChurnCohorts,
       s"""WITH u AS (SELECT user_id,
          |    max(strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d')) AS last_day
          |  FROM events GROUP BY 1)
          |SELECT last_day, CAST(count(*) AS BIGINT) AS n_users
          |FROM u GROUP BY 1
-         |ORDER BY last_day""".stripMargin,
-    "graph_clustering_coeff" ->
+         |ORDER BY last_day""".stripMargin),
+    Query("graph_clustering_coeff", graphClusteringCoeff,
       s"""WITH lk AS (
          |  SELECT doc_id % 50 AS src, (doc_id * 7 + 1) % 50 AS dst FROM documents
          |  UNION ALL
@@ -1611,5 +1553,5 @@ object LlmQueries8 {
          |         // (deg.d * (deg.d - 1)) END AS BIGINT)
          |    AS clustering_micro
          |FROM deg LEFT JOIN tv ON tv.id = deg.id
-         |ORDER BY host_id""".stripMargin)
+         |ORDER BY host_id""".stripMargin))
 }

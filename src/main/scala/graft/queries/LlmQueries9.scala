@@ -111,14 +111,6 @@ object LlmQueries9 {
         maxDist = 8)
       .orderBy(col("id_a"), col("id_b"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_bitext_mine" -> (simBitextMine _),
-    "dedup_lsh_calibration" -> (dedupLshCalibration _),
-    "curation_ccnet_buckets" -> (curationCcnetBuckets _),
-    "dedup_edit_pairs" -> (dedupEditPairs _),
-    "dedup_edit_passjoin" -> (dedupEditPassjoin _),
-  )
-
   // Same IVF oracle fragment as LlmQueries.ivfCos (double-cast vectors,
   // cosine rounded to 6 between aliases).
   private def ivfCos(a: String, b: String) =
@@ -165,12 +157,12 @@ object LlmQueries9 {
          |    FROM ($fromSql)))""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "dedup_lsh_calibration" -> graft.ops.Dedup.lshBandPlanCurveSql(),
+  val all: Seq[Query] = Seq(
+    Query("dedup_lsh_calibration", dedupLshCalibration, graft.ops.Dedup.lshBandPlanCurveSql()),
     // Length-band blocking (len//32 ± 1 via the range(2) explode), the
     // |Δlen| <= 24 lossless filter, then DuckDB's own levenshtein as the
     // verify kernel. INTEGER casts match Spark's int length/levenshtein.
-    "dedup_edit_pairs" ->
+    Query("dedup_edit_pairs", dedupEditPairs,
       """WITH docs AS (SELECT doc_id, text, CAST(length(text) AS INTEGER) AS len
         |              FROM documents WHERE doc_id < 2000),
         |keys AS (SELECT doc_id, len, (len // 32) + r.range AS k
@@ -184,13 +176,13 @@ object LlmQueries9 {
         |FROM cand c JOIN docs da ON da.doc_id = c.id_a
         |JOIN docs db ON db.doc_id = c.id_b
         |WHERE levenshtein(da.text, db.text) <= 24
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
     // The same segmentation arithmetic as the Spark side, all integer
     // (// and % truncate identically): k = 9 segments in the partner
     // length's scheme, probe substrings from the static (Δ, i, δ) grid
     // with the lossless |δ| + |Δ−δ| <= 8 shift window, then the shared
     // levenshtein verify.
-    "dedup_edit_passjoin" ->
+    Query("dedup_edit_passjoin", dedupEditPassjoin,
       """WITH docs AS (SELECT doc_id, text, CAST(length(text) AS INTEGER) AS len
         |              FROM documents WHERE doc_id < 2000),
         |grid AS (SELECT CAST(dd.range AS INTEGER) AS dl, CAST(i.range AS INTEGER) AS i,
@@ -225,12 +217,12 @@ object LlmQueries9 {
         |FROM cand c JOIN docs da ON da.doc_id = c.id_a
         |JOIN docs db ON db.doc_id = c.id_b
         |WHERE levenshtein(da.text, db.text) <= 8
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
     // The shared Kneser–Ney CTE chain (LlmQueries7.knCtes) + language
     // join + the same ntile tercile window (standard-SQL ntile: equal
     // sizes, earlier buckets take the remainder — identical in both
     // engines; ties pinned by doc_id).
-    "curation_ccnet_buckets" ->
+    Query("curation_ccnet_buckets", curationCcnetBuckets,
       s"""WITH ${LlmQueries7.knCtes},
          |j AS (SELECT k.doc_id, d.lang, k.kn_micro
          |  FROM kn k JOIN documents d USING (doc_id)),
@@ -241,7 +233,7 @@ object LlmQueries9 {
          |SELECT doc_id, lang, kn_micro,
          |  CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
          |    ELSE 'tail' END AS bucket
-         |FROM b ORDER BY doc_id""".stripMargin,
+         |FROM b ORDER BY doc_id""".stripMargin),
     // Full BIT-EXACT replay (round-12 migration): floor(x·10⁶) micro
     // quantization, exact integer dot/norms, trunc(dt·10⁶/isqrt(na·nb))
     // sims via the ±1-corrected isqrt — no round(double) anywhere, so
@@ -256,7 +248,7 @@ object LlmQueries9 {
     // id pair instead of relying on triple-level DISTINCT).
     // LlmQueries13's bitext_probe_* queries replay each stage of this
     // chain in isolation so a driver-side divergence names its stage.
-    "sim_bitext_mine" ->
+    Query("sim_bitext_mine", simBitextMine,
       s"""WITH corp AS (
          |  SELECT vec_id, vm, ${ExactSql.idot("vm", "vm")} AS nsq
          |  FROM (SELECT vec_id, ${ExactSql.microList("embedding")} AS vm
@@ -346,6 +338,6 @@ object LlmQueries9 {
          |SELECT src_id, tgt_id, sim_micro, margin_micro,
          |  is_src_best, is_tgt_best,
          |  (is_src_best AND is_tgt_best) AS mutual
-         |FROM fl ORDER BY src_id, tgt_id""".stripMargin,
+         |FROM fl ORDER BY src_id, tgt_id""".stripMargin),
   )
 }

@@ -308,33 +308,10 @@ object ParityQueries {
         col("med_half"), col("dev_half"), col("mad_quarter"))
       .orderBy(col("event_type"), col("event_id"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p1_regex_tokenize" -> (p1RegexTokenize _),
-    "p1b_json_extract" -> (p1bJsonExtract _),
-    "p5_first_match_rules" -> (p5FirstMatchRules _),
-    "p6_datetime_parse" -> (p6DatetimeParse _),
-    "f9_ip_to_num" -> (f9IpToNum _),
-    "j1_geo_range_join" -> (j1GeoRangeJoin _),
-    "j2_auto_range_join" -> (j2AutoRangeJoin _),
-    "a1_report_counters" -> (a1ReportCounters _),
-    "a5_country_topk" -> (a5CountryTopk _),
-    "s6_filtered_scan" -> (s6FilteredScan _),
-    "a6_totals" -> (a6Totals _),
-    "st4_event_window" -> (st4EventWindow _),
-    "st4_sliding_window" -> (st4SlidingWindow _),
-    "st5_session_window" -> (st5SessionWindow _),
-    "asof_purchase_click" -> (asofPurchaseClick _),
-    "asof_next_click" -> (asofNextClick _),
-    "funnel_conversion" -> (funnelConversion _),
-    "event_transitions" -> (eventTransitions _),
-    "event_outliers" -> (eventOutliers _),
-    "takuan_ssh_pipeline" -> (takuanSshPipeline _),
-  )
-
   import T.sql.{cents => c, moneySum => ms}
 
-  val oracle: Map[String, String] = Map(
-    "event_outliers" ->
+  val all: Seq[Query] = Seq(
+    Query("event_outliers", eventOutliers,
       """WITH e AS (SELECT event_id, event_type,
         |    CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
         |m AS (SELECT event_type,
@@ -350,19 +327,19 @@ object ParityQueries {
         |  s.mad_quarter
         |FROM d JOIN s USING (event_type)
         |WHERE 2 * d.dev_half > 3 * s.mad_quarter
-        |ORDER BY d.event_type, d.event_id""".stripMargin,
-    "p1b_json_extract" ->
+        |ORDER BY d.event_type, d.event_id""".stripMargin),
+    Query("p1b_json_extract", p1bJsonExtract,
       """SELECT event_id,
         |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
         |FROM events
         |WHERE json_extract_string(props, '$.k') IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-    "p1_regex_tokenize" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("p1_regex_tokenize", p1RegexTokenize,
       """SELECT event_id, CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT) AS k
         |FROM events
         |WHERE regexp_extract(props, '"k":\s*(\d+)', 1) <> ''
-        |ORDER BY event_id""".stripMargin,
-    "p5_first_match_rules" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("p5_first_match_rules", p5FirstMatchRules,
       """SELECT doc_id,
         |  CASE WHEN regexp_matches(text, 'window') THEN 'mentions_window'
         |       WHEN regexp_matches(text, 'join') THEN 'mentions_join'
@@ -370,28 +347,28 @@ object ParityQueries {
         |  END AS rule
         |FROM documents
         |WHERE regexp_matches(text, 'window|join|spark')
-        |ORDER BY doc_id""".stripMargin,
-    "p6_datetime_parse" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("p6_datetime_parse", p6DatetimeParse,
       """SELECT event_id,
         |  strptime(strftime(CAST(ts AS TIMESTAMP), '%d/%b/%Y:%H:%M:%S'), '%d/%b/%Y:%H:%M:%S') AS parsed
         |FROM events
-        |ORDER BY event_id""".stripMargin,
-    "f9_ip_to_num" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("f9_ip_to_num", f9IpToNum,
       s"""SELECT event_id, $addrSql AS address,
          |  (167772160 + CAST(user_id // 256 AS BIGINT) * 256 + user_id % 256) AS ip_num
          |FROM events
-         |ORDER BY event_id""".stripMargin,
-    "j1_geo_range_join" ->
+         |ORDER BY event_id""".stripMargin),
+    Query("j1_geo_range_join", j1GeoRangeJoin,
       s"""SELECT event_id, n_name AS country_code
          |FROM events
          |$geoSqlJoin
-         |ORDER BY event_id""".stripMargin,
-    "j2_auto_range_join" ->
+         |ORDER BY event_id""".stripMargin),
+    Query("j2_auto_range_join", j2AutoRangeJoin,
       s"""SELECT event_id, n_name AS country_code
          |FROM events
          |$geoSqlJoin
-         |ORDER BY event_id""".stripMargin,
-    "a1_report_counters" ->
+         |ORDER BY event_id""".stripMargin),
+    Query("a1_report_counters", a1ReportCounters,
       s"""WITH ev AS (
          |  SELECT $addrSql AS address, 'app' AS sensor, event_type AS rule,
          |         n_name AS country_code, n_name AS country_name
@@ -407,24 +384,24 @@ object ParityQueries {
          |  string_agg(sensor || '/' || rule || ':' || n, '|'
          |    ORDER BY sensor || '/' || rule || ':' || n) AS counters
          |FROM per GROUP BY address
-         |ORDER BY total_events DESC, address""".stripMargin,
-    "a5_country_topk" ->
+         |ORDER BY total_events DESC, address""".stripMargin),
+    Query("a5_country_topk", a5CountryTopk,
       s"""SELECT coalesce(n_name, '??') AS country_code, count(*) AS n
          |FROM events
          |$geoSqlJoin
          |GROUP BY 1
          |ORDER BY n DESC, country_code
-         |LIMIT 5""".stripMargin,
-    "s6_filtered_scan" ->
+         |LIMIT 5""".stripMargin),
+    Query("s6_filtered_scan", s6FilteredScan,
       s"""SELECT event_id, user_id, (${c("value")} / 100.0) AS value
          |FROM events
          |WHERE event_type = 'error' AND value > 50
-         |ORDER BY event_id""".stripMargin,
-    "a6_totals" ->
+         |ORDER BY event_id""".stripMargin),
+    Query("a6_totals", a6Totals,
       """SELECT count(*) AS total_events,
         |  count(DISTINCT user_id) AS n_addresses
-        |FROM events""".stripMargin,
-    "event_transitions" ->
+        |FROM events""".stripMargin),
+    Query("event_transitions", eventTransitions,
       """SELECT prev_type, event_type, count(*) AS n
         |FROM (SELECT event_type,
         |        lag(event_type) OVER (PARTITION BY user_id
@@ -432,8 +409,8 @@ object ParityQueries {
         |      FROM events)
         |WHERE prev_type IS NOT NULL
         |GROUP BY prev_type, event_type
-        |ORDER BY prev_type, event_type""".stripMargin,
-    "funnel_conversion" ->
+        |ORDER BY prev_type, event_type""".stripMargin),
+    Query("funnel_conversion", funnelConversion,
       """WITH v AS (SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS v_ts
         |           FROM events WHERE event_type = 'view' GROUP BY user_id),
         |c AS (SELECT e.user_id, min(CAST(e.ts AS TIMESTAMP)) AS c_ts
@@ -447,14 +424,14 @@ object ParityQueries {
         |SELECT '1_view' AS stage, count(*) AS n_users FROM v
         |UNION ALL SELECT '2_click', count(*) FROM c
         |UNION ALL SELECT '3_purchase', count(*) FROM p
-        |ORDER BY stage""".stripMargin,
-    "st4_event_window" ->
+        |ORDER BY stage""".stripMargin),
+    Query("st4_event_window", st4EventWindow,
       s"""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour, event_type,
          |  count(*) AS n, ${ms("value")} AS value_sum
          |FROM events
          |GROUP BY 1, 2
-         |ORDER BY hour, event_type""".stripMargin,
-    "st4_sliding_window" ->
+         |ORDER BY hour, event_type""".stripMargin),
+    Query("st4_sliding_window", st4SlidingWindow,
       s"""WITH slid AS (
          |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) - to_hours(r.range) AS win_start,
          |         value
@@ -462,8 +439,8 @@ object ParityQueries {
          |)
          |SELECT win_start, count(*) AS n, ${ms("value")} AS value_sum
          |FROM slid GROUP BY win_start
-         |ORDER BY win_start""".stripMargin,
-    "st5_session_window" ->
+         |ORDER BY win_start""".stripMargin),
+    Query("st5_session_window", st5SessionWindow,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
         |x AS (SELECT user_id, ts,
         |        lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev FROM e),
@@ -476,8 +453,8 @@ object ParityQueries {
         |SELECT user_id, min(ts) AS session_start,
         |  max(ts) + INTERVAL 20 MINUTE AS session_end, count(*) AS n_events
         |FROM z GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    "asof_purchase_click" ->
+        |ORDER BY user_id, session_start""".stripMargin),
+    Query("asof_purchase_click", asofPurchaseClick,
       """SELECT p.event_id, p.user_id, c.ts AS click_ts, c.value AS click_value
         |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |      FROM events WHERE event_type = 'purchase') p
@@ -485,8 +462,8 @@ object ParityQueries {
         |     (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
         |      FROM events WHERE event_type = 'click') c
         |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "asof_next_click" ->
+        |ORDER BY p.event_id""".stripMargin),
+    Query("asof_next_click", asofNextClick,
       """SELECT p.event_id, p.user_id, c.ts AS click_ts, c.value AS click_value
         |FROM (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts
         |      FROM events WHERE event_type = 'purchase') p
@@ -494,8 +471,8 @@ object ParityQueries {
         |     (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
         |      FROM events WHERE event_type = 'click') c
         |  ON p.user_id = c.user_id AND p.ts <= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "takuan_ssh_pipeline" ->
+        |ORDER BY p.event_id""".stripMargin),
+    Query("takuan_ssh_pipeline", takuanSshPipeline,
       s"""WITH lines AS (
          |  SELECT strftime(CAST(ts AS TIMESTAMP), '%b %-d %H:%M:%S')
          |           || ' host sshd[77]: '
@@ -514,6 +491,6 @@ object ParityQueries {
          |  'node1' AS node_name, 'ssh' AS sensor
          |FROM lines
          |WHERE rule IS NOT NULL
-         |ORDER BY payload""".stripMargin,
+         |ORDER BY payload""".stripMargin),
   )
 }

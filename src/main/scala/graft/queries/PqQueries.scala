@@ -96,31 +96,23 @@ object PqQueries {
       .orderBy(col("vec_id"), col("sub"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_pq_encode" -> (embPqEncode _),
-    "sim_pq_topk" -> (simPqTopk _),
-    "sim_ivfpq_topk" -> (simIvfPqTopk _),
-    "sim_ivfpq_residual_topk" -> (simIvfPqResidualTopk _),
-    "emb_opq_encode" -> (embOpqEncode _),
-  )
-
   private val srcCte =
     """src AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
       |        FROM embeddings)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "emb_pq_encode" ->
+  val all: Seq[Query] = Seq(
+    Query("emb_pq_encode", embPqEncode,
       s"""WITH $srcCte,
          |${PqSql.trainCtes(k = K, iters = Iters, m = M, subDim = SubDim)}
          |SELECT vid AS vec_id, CAST(sub AS INTEGER) AS sub,
          |  CAST(code AS BIGINT) AS code
-         |FROM enc ORDER BY vec_id, sub""".stripMargin,
-    "sim_pq_topk" ->
+         |FROM enc ORDER BY vec_id, sub""".stripMargin),
+    Query("sim_pq_topk", simPqTopk,
       s"""WITH $srcCte,
          |${PqSql.trainCtes(k = K, iters = Iters, m = M, subDim = SubDim)},
          |${PqSql.adcTopKSql(iters = Iters, qPred = "qm.vid < 10", topK = TopK)}"""
-        .stripMargin,
-    "sim_ivfpq_topk" ->
+        .stripMargin),
+    Query("sim_ivfpq_topk", simIvfPqTopk,
       s"""WITH $srcCte,
          |${KmeansSql.trainCtes("src", "TRUE", k = 10, iters = 3, dim = 64)},
          |cent AS (SELECT cell, cm FROM c3),
@@ -138,8 +130,8 @@ object PqQueries {
          |${PqSql.adcTopKSql(iters = Iters, qPred = "qm.vid < 10", topK = TopK,
              prefix = "p",
              candJoin = "JOIN cand ON cand.qid = qm.vid AND cand.nid = e.vid")}"""
-        .stripMargin,
-    "sim_ivfpq_residual_topk" -> {
+        .stripMargin),
+    Query("sim_ivfpq_residual_topk", simIvfPqResidualTopk, {
       val idx = s"CAST(sub.range * $SubDim + i.range + 1 AS INTEGER)"
       val residX =
         s"CAST(floor(s.v[$idx] * 1000000) AS BIGINT) - c.cm[$idx]"
@@ -168,8 +160,8 @@ object PqQueries {
              prefix = "r", vmFrom = "resvm")},
          |${PqSql.residualAdcTopKSql(iters = Iters, topK = TopK, prefix = "r")}"""
         .stripMargin
-    },
-    "emb_opq_encode" ->
+    }),
+    Query("emb_opq_encode", embOpqEncode,
       s"""WITH $srcCte,
          |vm0 AS MATERIALIZED (SELECT vid, d.range AS dim,
          |    CAST(floor(v[CAST(d.range + 1 AS INTEGER)] * 1000000) AS BIGINT) AS x
@@ -192,6 +184,6 @@ object PqQueries {
              prefix = "o", vmFrom = "pvm")}
          |SELECT vid AS vec_id, CAST(sub AS INTEGER) AS sub,
          |  CAST(code AS BIGINT) AS code
-         |FROM oenc ORDER BY vec_id, sub""".stripMargin,
+         |FROM oenc ORDER BY vec_id, sub""".stripMargin),
   )
 }

@@ -357,38 +357,10 @@ object Relational {
       .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),
         count(lit(1)).as("n_items"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q14_promo_revenue" -> (q14PromoRevenue _),
-    "q19_disjunctive" -> (q19Disjunctive _),
-    "q7_volume_shipping" -> (q7VolumeShipping _),
-    "q10_returned_items" -> (q10ReturnedItems _),
-    "q18_large_orders" -> (q18LargeOrders _),
-    "q_above_cust_avg" -> (qAboveCustAvg _),
-    "q_window_lead_lag" -> (qWindowLeadLag _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_pivot" -> (qPivot _),
-    "q_exists_agg" -> (qExistsAgg _),
-    "q_having" -> (qHaving _),
-    "q_percentile" -> (qPercentile _),
-    "q_full_outer" -> (qFullOuter _),
-    "q_cube" -> (qCube _),
-    "q_string_funcs" -> (qStringFuncs _),
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q3_shipping_priority" -> (q3ShippingPriority _),
-    "q5_local_supplier" -> (q5LocalSupplier _),
-    "q_window_top_order" -> (qWindowTopOrder _),
-    "q_window_running" -> (qWindowRunning _),
-    "q_setops" -> (qSetOps _),
-    "q_anti_join" -> (qAntiJoin _),
-    "q_semi_join" -> (qSemiJoin _),
-    "q_rollup" -> (qRollup _),
-    "q_above_avg" -> (qAboveAvg _),
-  )
-
   import T.sql.{cents => c, moneySum => ms, moneyAvg => ma}
 
-  val oracle: Map[String, String] = Map(
-    "q14_promo_revenue" ->
+  val all: Seq[Query] = Seq(
+    Query("q14_promo_revenue", q14PromoRevenue,
       s"""SELECT (CAST(sum(CASE WHEN p_type = 'PROMO'
          |         THEN ${c("l_extendedprice * (1 - l_discount)")} ELSE 0 END) AS BIGINT)
          |        * 100.0 /
@@ -396,15 +368,15 @@ object Relational {
          |       AS promo_share_pct
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-         |  AND l_shipdate < TIMESTAMP '1997-07-01'""".stripMargin,
-    "q19_disjunctive" ->
+         |  AND l_shipdate < TIMESTAMP '1997-07-01'""".stripMargin),
+    Query("q19_disjunctive", q19Disjunctive,
       s"""SELECT ${ms("l_extendedprice * (1 - l_discount)")} AS revenue,
          |  count(*) AS n_items
          |FROM lineitem JOIN part ON l_partkey = p_partkey
          |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
          |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30 AND l_quantity BETWEEN 5 AND 30)
-         |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50 AND l_quantity BETWEEN 10 AND 40)""".stripMargin,
-    "q7_volume_shipping" ->
+         |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50 AND l_quantity BETWEEN 10 AND 40)""".stripMargin),
+    Query("q7_volume_shipping", q7VolumeShipping,
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          |  CAST(year(l_shipdate) AS INTEGER) AS l_year,
          |  ${ms("l_extendedprice * (1 - l_discount)")} AS revenue
@@ -417,8 +389,8 @@ object Relational {
          |WHERE (n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_2')
          |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_3')
          |GROUP BY 1, 2, 3
-         |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "q10_returned_items" ->
+         |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
+    Query("q10_returned_items", q10ReturnedItems,
       s"""SELECT c_custkey, c_name,
          |  ${ms("l_extendedprice * (1 - l_discount)")} AS revenue,
          |  count(*) AS n_items
@@ -428,8 +400,8 @@ object Relational {
          |WHERE l_returnflag = 'R'
          |GROUP BY c_custkey, c_name
          |ORDER BY revenue DESC, c_custkey
-         |LIMIT 20""".stripMargin,
-    "q18_large_orders" ->
+         |LIMIT 20""".stripMargin),
+    Query("q18_large_orders", q18LargeOrders,
       s"""SELECT o_orderkey, o_custkey, (${c("o_totalprice")} / 100.0) AS o_totalprice,
          |  CAST(sum_qty AS BIGINT) AS sum_qty
          |FROM orders
@@ -437,8 +409,8 @@ object Relational {
          |      FROM lineitem GROUP BY l_orderkey HAVING sum_qty > 60) big
          |  ON o_orderkey = big.l_orderkey
          |ORDER BY sum_qty DESC, o_orderkey
-         |LIMIT 50""".stripMargin,
-    "q_above_cust_avg" ->
+         |LIMIT 50""".stripMargin),
+    Query("q_above_cust_avg", qAboveCustAvg,
       s"""SELECT o_orderkey, o_custkey, (${c("o_totalprice")} / 100.0) AS o_totalprice
          |FROM orders o
          |JOIN (SELECT o_custkey AS ck,
@@ -446,8 +418,8 @@ object Relational {
          |      FROM orders GROUP BY o_custkey) a
          |  ON o.o_custkey = a.ck
          |WHERE ${c("o_totalprice")} > avg_cents * 2
-         |ORDER BY o_orderkey""".stripMargin,
-    "q_window_lead_lag" ->
+         |ORDER BY o_orderkey""".stripMargin),
+    Query("q_window_lead_lag", qWindowLeadLag,
       """SELECT o_custkey, o_orderkey,
         |  CAST(coalesce(date_diff('day',
         |    CAST(lag(o_orderdate) OVER w AS DATE), CAST(o_orderdate AS DATE)), -1) AS INTEGER)
@@ -458,15 +430,15 @@ object Relational {
         |FROM orders
         |WHERE o_custkey <= 50
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q_grouping_sets" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Query("q_grouping_sets", qGroupingSets,
       s"""SELECT coalesce(o_orderstatus, 'ALL') AS status,
          |  coalesce(o_orderpriority, 'ALL') AS priority,
          |  count(*) AS n, ${ms("o_totalprice")} AS total
          |FROM orders
          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-         |ORDER BY status, priority""".stripMargin,
-    "q_pivot" ->
+         |ORDER BY status, priority""".stripMargin),
+    Query("q_pivot", qPivot,
       """SELECT o_orderstatus,
         |  count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS urgent,
         |  count(*) FILTER (WHERE o_orderpriority = '2-HIGH') AS high,
@@ -475,28 +447,28 @@ object Relational {
         |  count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS low
         |FROM orders
         |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    "q_exists_agg" ->
+        |ORDER BY o_orderstatus""".stripMargin),
+    Query("q_exists_agg", qExistsAgg,
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_having" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    Query("q_having", qHaving,
       s"""SELECT c_nationkey, ${ms("c_acctbal")} AS total_bal, count(*) AS n
          |FROM customer
          |GROUP BY c_nationkey
          |HAVING ${ms("c_acctbal")} > 40000.0
-         |ORDER BY c_nationkey""".stripMargin,
-    "q_percentile" ->
+         |ORDER BY c_nationkey""".stripMargin),
+    Query("q_percentile", qPercentile,
       """SELECT o_orderstatus,
         |  (quantile_cont(CAST(round(o_totalprice*100, 0) AS BIGINT), 0.5) / 100.0) AS median_price,
         |  (quantile_cont(CAST(round(o_totalprice*100, 0) AS BIGINT), 0.9) / 100.0) AS p90_price
         |FROM orders
         |GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-    "q_full_outer" ->
+        |ORDER BY o_orderstatus""".stripMargin),
+    Query("q_full_outer", qFullOuter,
       """SELECT coalesce(c.nk, s.nk2) AS nationkey,
         |  coalesce(n_cust, 0) AS n_cust, coalesce(n_supp, 0) AS n_supp
         |FROM (SELECT c_nationkey AS nk, count(*) AS n_cust
@@ -504,15 +476,15 @@ object Relational {
         |FULL OUTER JOIN (SELECT s_nationkey AS nk2, count(*) AS n_supp
         |      FROM supplier GROUP BY 1) s
         |  ON c.nk = s.nk2
-        |ORDER BY nationkey""".stripMargin,
-    "q_cube" ->
+        |ORDER BY nationkey""".stripMargin),
+    Query("q_cube", qCube,
       s"""SELECT coalesce(o_orderstatus, 'ALL') AS status,
          |  coalesce(o_orderpriority, 'ALL') AS priority,
          |  count(*) AS n, ${ms("o_totalprice")} AS total
          |FROM orders
          |GROUP BY CUBE (o_orderstatus, o_orderpriority)
-         |ORDER BY status, priority""".stripMargin,
-    "q_string_funcs" ->
+         |ORDER BY status, priority""".stripMargin),
+    Query("q_string_funcs", qStringFuncs,
       """SELECT n_nationkey,
         |  printf('%s/%d', n_name, n_nationkey) AS tag,
         |  n_name || '-' || r_name AS path,
@@ -520,8 +492,8 @@ object Relational {
         |  substring(n_name, 1, 3) AS prefix3,
         |  upper(substring(n_name, 1, 1)) || lower(substring(n_name, 2, 100)) AS pretty
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |ORDER BY n_nationkey""".stripMargin,
-    "q1_pricing_summary" ->
+        |ORDER BY n_nationkey""".stripMargin),
+    Query("q1_pricing_summary", q1PricingSummary,
       s"""SELECT l_returnflag, l_linestatus,
          |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
          |  ${ms("l_extendedprice")} AS sum_base_price,
@@ -531,8 +503,8 @@ object Relational {
          |FROM lineitem
          |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
          |GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
+         |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q3_shipping_priority", q3ShippingPriority,
       s"""SELECT l_orderkey, o_orderdate, o_orderpriority,
          |  ${ms("l_extendedprice * (1 - l_discount)")} AS revenue
          |FROM lineitem
@@ -543,8 +515,8 @@ object Relational {
          |  AND l_shipdate > TIMESTAMP '1998-01-01'
          |GROUP BY l_orderkey, o_orderdate, o_orderpriority
          |ORDER BY revenue DESC, l_orderkey
-         |LIMIT 10""".stripMargin,
-    "q5_local_supplier" ->
+         |LIMIT 10""".stripMargin),
+    Query("q5_local_supplier", q5LocalSupplier,
       s"""SELECT n_name,
          |  ${ms("l_extendedprice * (1 - l_discount)")} AS revenue,
          |  count(*) AS n_items
@@ -557,8 +529,8 @@ object Relational {
          |  AND o_orderdate >= TIMESTAMP '1996-01-01'
          |  AND o_orderdate < TIMESTAMP '1997-01-01'
          |GROUP BY n_name
-         |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q_window_top_order" ->
+         |ORDER BY revenue DESC, n_name""".stripMargin),
+    Query("q_window_top_order", qWindowTopOrder,
       s"""SELECT o_custkey, o_orderkey, (${c("o_totalprice")} / 100.0) AS best_price
          |FROM (
          |  SELECT *, row_number() OVER (
@@ -566,8 +538,8 @@ object Relational {
          |    ORDER BY ${c("o_totalprice")} DESC, o_orderkey) AS rn
          |  FROM orders)
          |WHERE rn = 1
-         |ORDER BY o_custkey""".stripMargin,
-    "q_window_running" ->
+         |ORDER BY o_custkey""".stripMargin),
+    Query("q_window_running", qWindowRunning,
       """SELECT l_suppkey, l_orderkey, l_linenumber,
         |  CAST(sum(CAST(l_quantity AS BIGINT)) OVER (
         |    PARTITION BY l_suppkey
@@ -575,39 +547,39 @@ object Relational {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS run_qty
         |FROM lineitem
         |WHERE l_suppkey <= 3
-        |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin,
-    "q_setops" ->
+        |ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin),
+    Query("q_setops", qSetOps,
       """SELECT custkey FROM (
         |  SELECT c_custkey AS custkey FROM customer
         |  INTERSECT
         |  SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
         |  EXCEPT
         |  SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F')
-        |ORDER BY custkey""".stripMargin,
-    "q_anti_join" ->
+        |ORDER BY custkey""".stripMargin),
+    Query("q_anti_join", qAntiJoin,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (
         |  SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-        |ORDER BY c_custkey""".stripMargin,
-    "q_semi_join" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q_semi_join", qSemiJoin,
       """SELECT p_brand, count(*) AS n_parts FROM part
         |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
         |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
-    "q_rollup" ->
+        |ORDER BY p_brand""".stripMargin),
+    Query("q_rollup", qRollup,
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
         |  coalesce(l_linestatus, 'ALL') AS linestatus,
         |  count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
         |FROM lineitem
         |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY returnflag, linestatus""".stripMargin,
-    "q_above_avg" ->
+        |ORDER BY returnflag, linestatus""".stripMargin),
+    Query("q_above_avg", qAboveAvg,
       s"""SELECT o_orderkey, (${c("o_totalprice")} / 100.0) AS o_totalprice
          |FROM orders
          |WHERE ${c("o_totalprice")} > (
          |  SELECT CAST(sum(${c("o_totalprice")}) AS BIGINT) / count(*) FROM orders) * 3 / 2
-         |ORDER BY o_orderkey""".stripMargin,
+         |ORDER BY o_orderkey""".stripMargin),
   )
 }

@@ -402,34 +402,10 @@ object Relational2 {
         instr(col("p_name"), "e").cast("int").as("e_pos"))
       .orderBy(col("p_partkey"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q8_market_share" -> (q8MarketShare _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q20_part_suppliers" -> (q20PartSuppliers _),
-    "q21_waiting_supplier" -> (q21WaitingSupplier _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_setops_all" -> (qSetopsAll _),
-    "q_string_funcs2" -> (qStringFuncs2 _),
-    "q11_important_parts" -> (q11ImportantParts _),
-    "q_datetime_funcs" -> (qDatetimeFuncs _),
-    "q_array_funcs" -> (qArrayFuncs _),
-    "q4_order_priority" -> (q4OrderPriority _),
-    "q9_product_profit" -> (q9ProductProfit _),
-    "q12_ship_priority" -> (q12ShipPriority _),
-    "q13_cust_distribution" -> (q13CustDistribution _),
-    "q16_supplier_cnt" -> (q16SupplierCnt _),
-    "q17_small_qty_revenue" -> (q17SmallQtyRevenue _),
-    "q22_idle_customers" -> (q22IdleCustomers _),
-    "q2_min_cost_supplier" -> (q2MinCostSupplier _),
-    "q_ntile_ranks" -> (qNtileRanks _),
-    "q_range_frame" -> (qRangeFrame _),
-  )
-
   import T.sql.{cents => c, moneySum => ms}
 
-  val oracle: Map[String, String] = Map(
-    "q8_market_share" ->
+  val all: Seq[Query] = Seq(
+    Query("q8_market_share", q8MarketShare,
       s"""SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
          |  (CAST(sum(CASE WHEN n2.n_name = 'NATION_2'
          |       THEN ${c("l_extendedprice * (1 - l_discount)")} ELSE 0 END) AS BIGINT)
@@ -443,8 +419,8 @@ object Relational2 {
          |JOIN supplier ON l_suppkey = s_suppkey
          |JOIN nation n2 ON s_nationkey = n2.n_nationkey
          |GROUP BY 1
-         |ORDER BY o_year""".stripMargin,
-    "q15_top_supplier" ->
+         |ORDER BY o_year""".stripMargin),
+    Query("q15_top_supplier", q15TopSupplier,
       s"""WITH rev AS (SELECT l_suppkey,
          |    sum(${c("l_extendedprice * (1 - l_discount)")}) AS rev_cents
          |  FROM lineitem
@@ -454,8 +430,8 @@ object Relational2 {
          |SELECT s_suppkey, s_name, (CAST(rev_cents AS BIGINT) / 100.0) AS total_revenue
          |FROM rev JOIN supplier ON l_suppkey = s_suppkey
          |WHERE rev_cents = (SELECT max(rev_cents) FROM rev)
-         |ORDER BY s_suppkey""".stripMargin,
-    "q20_part_suppliers" ->
+         |ORDER BY s_suppkey""".stripMargin),
+    Query("q20_part_suppliers", q20PartSuppliers,
       """SELECT s_suppkey, s_name
         |FROM supplier
         |WHERE s_suppkey IN (
@@ -463,8 +439,8 @@ object Relational2 {
         |  FROM lineitem JOIN part ON l_partkey = p_partkey AND p_type = 'SMALL'
         |  GROUP BY l_suppkey, l_partkey
         |  HAVING sum(CAST(l_quantity AS BIGINT)) > 50)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q21_waiting_supplier" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("q21_waiting_supplier", q21WaitingSupplier,
       """SELECT s_suppkey, s_name, numwait
         |FROM (SELECT a.l_suppkey, count(*) AS numwait
         |      FROM (SELECT DISTINCT l_orderkey, l_suppkey
@@ -479,8 +455,8 @@ object Relational2 {
         |      GROUP BY a.l_suppkey)
         |JOIN supplier ON l_suppkey = s_suppkey
         |ORDER BY numwait DESC, s_suppkey
-        |LIMIT 20""".stripMargin,
-    "q6_forecast_revenue" ->
+        |LIMIT 20""".stripMargin),
+    Query("q6_forecast_revenue", q6ForecastRevenue,
       s"""SELECT (CAST(sum(${c("l_extendedprice * l_discount")}) AS BIGINT) / 100.0)
          |         AS revenue,
          |       count(*) AS n_lines
@@ -488,15 +464,15 @@ object Relational2 {
          |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
          |  AND l_shipdate < TIMESTAMP '1998-01-01'
          |  AND l_discount BETWEEN 0.05 AND 0.07
-         |  AND l_quantity < 24""".stripMargin,
-    "q_unpivot" ->
+         |  AND l_quantity < 24""".stripMargin),
+    Query("q_unpivot", qUnpivot,
       s"""SELECT o_orderkey, 'price' AS measure, (${c("o_totalprice")} / 100.0) AS val
          |FROM orders WHERE o_orderkey <= 200
          |UNION ALL
          |SELECT o_orderkey, 'yr', CAST(year(o_orderdate) AS DOUBLE)
          |FROM orders WHERE o_orderkey <= 200
-         |ORDER BY o_orderkey, measure""".stripMargin,
-    "q_setops_all" ->
+         |ORDER BY o_orderkey, measure""".stripMargin),
+    Query("q_setops_all", qSetopsAll,
       """SELECT o_custkey, 'intersect_all' AS op FROM
         |  (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
         |   INTERSECT ALL
@@ -506,8 +482,8 @@ object Relational2 {
         |  (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
         |   EXCEPT ALL
         |   SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        |ORDER BY op, o_custkey""".stripMargin,
-    "q_string_funcs2" ->
+        |ORDER BY op, o_custkey""".stripMargin),
+    Query("q_string_funcs2", qStringFuncs2,
       """SELECT p_partkey,
         |  CAST(levenshtein(p_name, 'red widget') AS INTEGER) AS lev,
         |  translate(p_name, 'aeiou', '12345') AS xlat,
@@ -517,8 +493,8 @@ object Relational2 {
         |  CAST(strpos(p_name, 'e') AS INTEGER) AS e_pos
         |FROM part
         |WHERE p_partkey <= 300
-        |ORDER BY p_partkey""".stripMargin,
-    "q11_important_parts" ->
+        |ORDER BY p_partkey""".stripMargin),
+    Query("q11_important_parts", q11ImportantParts,
       s"""WITH v AS (SELECT l_partkey, CAST(sum(${c("l_extendedprice")}) AS BIGINT)
          |             AS value_cents
          |           FROM lineitem GROUP BY l_partkey)
@@ -526,8 +502,8 @@ object Relational2 {
          |FROM v
          |WHERE value_cents * 2 * (SELECT count(*) FROM v) >
          |      (SELECT sum(value_cents) FROM v) * 3
-         |ORDER BY value DESC, l_partkey""".stripMargin,
-    "q_datetime_funcs" ->
+         |ORDER BY value DESC, l_partkey""".stripMargin),
+    Query("q_datetime_funcs", qDatetimeFuncs,
       """SELECT o_orderkey,
         |  CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
         |  CAST(year(o_orderdate) AS INTEGER) AS yr,
@@ -539,8 +515,8 @@ object Relational2 {
         |    AS days_since_epoch
         |FROM orders
         |WHERE o_orderkey <= 500
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_array_funcs" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q_array_funcs", qArrayFuncs,
       """SELECT doc_id,
         |  CAST(len(string_split_regex(trim(text), '\s+')) AS INTEGER) AS n_words,
         |  CAST(len(list_distinct(string_split_regex(trim(text), '\s+'))) AS INTEGER)
@@ -552,8 +528,8 @@ object Relational2 {
         |    w -> length(w))) AS INTEGER) AS longest
         |FROM documents
         |WHERE doc_id <= 200
-        |ORDER BY doc_id""".stripMargin,
-    "q4_order_priority" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q4_order_priority", q4OrderPriority,
       """SELECT o_orderpriority, count(*) AS n_orders
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
@@ -561,8 +537,8 @@ object Relational2 {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q9_product_profit" ->
+        |ORDER BY o_orderpriority""".stripMargin),
+    Query("q9_product_profit", q9ProductProfit,
       s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
          |  ${ms("l_extendedprice * (1 - l_discount)")} AS profit
          |FROM lineitem
@@ -571,8 +547,8 @@ object Relational2 {
          |JOIN nation ON s_nationkey = n_nationkey
          |JOIN orders ON l_orderkey = o_orderkey
          |GROUP BY 1, 2
-         |ORDER BY nation, o_year""".stripMargin,
-    "q12_ship_priority" ->
+         |ORDER BY nation, o_year""".stripMargin),
+    Query("q12_ship_priority", q12ShipPriority,
       """SELECT l_linestatus,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END)
         |    AS BIGINT) AS high_line_count,
@@ -582,8 +558,8 @@ object Relational2 {
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
         |GROUP BY l_linestatus
-        |ORDER BY l_linestatus""".stripMargin,
-    "q13_cust_distribution" ->
+        |ORDER BY l_linestatus""".stripMargin),
+    Query("q13_cust_distribution", q13CustDistribution,
       """SELECT c_count, count(*) AS custdist
         |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
         |      FROM customer
@@ -591,15 +567,15 @@ object Relational2 {
         |        ON c_custkey = o_custkey
         |      GROUP BY c_custkey)
         |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q16_supplier_cnt" ->
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Query("q16_supplier_cnt", q16SupplierCnt,
       """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem
         |JOIN part ON l_partkey = p_partkey AND p_size IN (1, 5, 9, 13)
         |WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q17_small_qty_revenue" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    Query("q17_small_qty_revenue", q17SmallQtyRevenue,
       s"""SELECT ${ms("l_extendedprice")} AS small_qty_rev, count(*) AS n_lines
          |FROM lineitem
          |JOIN part ON l_partkey = p_partkey AND p_brand = 'Brand#3'
@@ -608,8 +584,8 @@ object Relational2 {
          |      FROM lineitem JOIN part ON l_partkey = p_partkey AND p_brand = 'Brand#3'
          |      GROUP BY 1) s
          |  ON l_partkey = pk
-         |WHERE CAST(l_quantity AS BIGINT) * cnt * 2 < sum_qty""".stripMargin,
-    "q22_idle_customers" ->
+         |WHERE CAST(l_quantity AS BIGINT) * cnt * 2 < sum_qty""".stripMargin),
+    Query("q22_idle_customers", q22IdleCustomers,
       s"""SELECT c_mktsegment, count(*) AS numcust, ${ms("c_acctbal")} AS totacctbal
          |FROM customer
          |WHERE ${c("c_acctbal")} > (SELECT CAST(sum(${c("c_acctbal")}) AS BIGINT) * 1.0
@@ -618,8 +594,8 @@ object Relational2 {
          |  AND NOT EXISTS (SELECT 1 FROM orders
          |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
          |GROUP BY c_mktsegment
-         |ORDER BY c_mktsegment""".stripMargin,
-    "q2_min_cost_supplier" ->
+         |ORDER BY c_mktsegment""".stripMargin),
+    Query("q2_min_cost_supplier", q2MinCostSupplier,
       s"""SELECT p_partkey, p_brand, (min_price_cents / 100.0) AS min_price,
          |  best_suppkey, s_name, n_name
          |FROM (SELECT l_partkey, min_price_cents, min(l_suppkey) AS best_suppkey
@@ -631,8 +607,8 @@ object Relational2 {
          |JOIN part ON p_partkey = l_partkey AND p_type = 'LARGE'
          |JOIN supplier ON s_suppkey = best_suppkey
          |JOIN nation ON n_nationkey = s_nationkey
-         |ORDER BY p_partkey""".stripMargin,
-    "q_ntile_ranks" ->
+         |ORDER BY p_partkey""".stripMargin),
+    Query("q_ntile_ranks", qNtileRanks,
       s"""SELECT c_custkey, c_mktsegment,
          |  ntile(4) OVER w AS tile,
          |  round(percent_rank() OVER w, 6) AS prank,
@@ -641,8 +617,8 @@ object Relational2 {
          |FROM customer
          |WHERE c_custkey <= 300
          |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY ${c("c_acctbal")}, c_custkey)
-         |ORDER BY c_custkey""".stripMargin,
-    "q_range_frame" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Query("q_range_frame", qRangeFrame,
       s"""SELECT o_custkey, o_orderkey,
          |  (CAST(sum(${c("o_totalprice")}) OVER (PARTITION BY o_custkey
          |     ORDER BY ${c("o_totalprice")}
@@ -654,6 +630,6 @@ object Relational2 {
          |WHERE o_custkey <= 100
          |WINDOW w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
          |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         |ORDER BY o_custkey, o_orderkey""".stripMargin,
+         |ORDER BY o_custkey, o_orderkey""".stripMargin),
   )
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types._
 import graft.config.{GraftConfig, SensorConf}
 import graft.parse.LogParser
 import graft.enrich.GeoIp
@@ -36,6 +37,19 @@ import graft.enrich.GeoIp
   * report queries prune to the slice they need.
   */
 object Ingest {
+
+  /** The events table as read back from `eventsPath`: the
+    * [[LogParser.pipeline]] columns, then the `sensor` and `event_date`
+    * partitions [[sensorQuery]] writes. Readers take this instead of
+    * inferring it, so they can start before the first batch commits. */
+  val EventsSchema: StructType = StructType(
+    Seq("created_at" -> TimestampType, "detected_at" -> TimestampType,
+      "node_name" -> StringType, "address" -> StringType,
+      "country_code" -> StringType, "country_name" -> StringType,
+      "rule" -> StringType, "payload" -> StringType,
+      "reported_at" -> TimestampType, "sensor" -> StringType,
+      "event_date" -> DateType)
+      .map { case (name, t) => StructField(name, t) })
 
   /** One sensor's stream: lines → events appended to `eventsPath`. */
   def sensorQuery(

@@ -67,8 +67,10 @@ object ReportJob {
       periodSecs: Int = 3600,
       now: () => java.time.ZonedDateTime =
         () => java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC)): StreamingQuery = {
-    val schema = spark.read.parquet(eventsPath).schema
-    spark.readStream.schema(schema).parquet(eventsPath)
+    // a fresh deployment starts this before any ingest batch commits
+    val dir = new org.apache.hadoop.fs.Path(eventsPath)
+    dir.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dir)
+    spark.readStream.schema(Ingest.EventsSchema).parquet(eventsPath)
       .writeStream
       .queryName("graft-report")
       .option("checkpointLocation", checkpoint)

@@ -17,15 +17,20 @@ class RegistrySpec extends SparkSpec {
   }
 
   test("oracle SQL tracks the query registry") {
-    // The rows-only set is EMPTY as of round 7: the last holdout
-    // (sketch_cardinality) switched to the engine-portable HLL — md5
-    // registers + pure-integer harmonic estimate — so even the
-    // probabilistic sketch hash-matches its DuckDB replay. Everything
-    // trained (k-means, BPE) is oracle-checked trajectory-and-all.
+    // Holds by construction: a `Query` carries its own oracle SQL. Kept as
+    // a cheap guard on the two maps `SparkEntry` derives.
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracle entries without a query: $extra")
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without an oracle: $missing")
+  }
+
+  test("a query name declared twice is rejected, naming it") {
+    def q(name: String) = graft.queries.Query(name, (_, _) => null, "SELECT 1")
+    val e = intercept[IllegalArgumentException] {
+      graft.queries.Query.byName(Seq(q("a"), q("dup_name"), q("b"), q("dup_name")))
+    }
+    assert(e.getMessage.endsWith(": dup_name"), e.getMessage)
   }
 
   test("flagship entry returns rows") {

@@ -220,4 +220,29 @@ class PqSpec extends SparkSpec {
     val (dN, dP) = (distortion(bN, natural), distortion(bP, perm))
     assert(dP < dN, s"permuted distortion $dP must beat natural $dN")
   }
+
+  test("a null vector is skipped: training and encoding see only the non-null rows") {
+    import spark.implicits._
+    val rnd = new java.util.Random(7)
+    val full = (0 until 40).map { id =>
+      (id.toLong, (0 until 8).map(_ => (rnd.nextInt(17) - 8) / 8.0f))
+    }.toDF("vec_id", "embedding")
+    // null out the first seed (lowest md5 id): seeding must skip it too
+    val nullId = full.orderBy(md5(col("vec_id").cast("string"))).head().getLong(0)
+    val withNull = full.withColumn("embedding",
+      when(col("vec_id") =!= nullId, col("embedding"))).cache()
+    val nonNull = withNull.filter(col("embedding").isNotNull)
+    def same(a: Array[Array[Array[Long]]], b: Array[Array[Array[Long]]]): Boolean =
+      a.map(_.map(_.toSeq).toSeq).toSeq == b.map(_.map(_.toSeq).toSeq).toSeq
+
+    val books = Pq.trainPqCodebooksMicro(withNull, m = 2, k = 4)
+    assert(same(books, Pq.trainPqCodebooksMicro(nonNull, m = 2, k = 4)))
+    val codes = Pq.encodeFlat(withNull, books)
+    assert(codes.count() == 39 * 2)
+    assert(codes.except(Pq.encodeFlat(nonNull, books)).isEmpty)
+
+    val perm = (0 until 8).toArray
+    assert(same(Pq.trainPermutedPqCodebooksMicro(withNull, perm, m = 2, k = 4),
+      Pq.trainPermutedPqCodebooksMicro(nonNull, perm, m = 2, k = 4)))
+  }
 }

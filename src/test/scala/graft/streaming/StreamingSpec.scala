@@ -390,8 +390,18 @@ class StreamingSpec extends SparkSpec {
     writeLog(logDir, "a.log",
       "Aug  3 11:22:33 host1 sshd[1]: Authentication failed for root 203.0.113.7 port 1",
       "Aug  3 11:22:35 host1 sshd[2]: Authentication failed for root 203.0.113.7 port 2")
-    Ingest.sensorQuery(spark, sensor, "n", eventsPath, tmp("ck3"),
-      None, Trigger.AvailableNow()).awaitTermination(120000)
+    // a fresh deployment: the report stream starts before any event exists
+    val early = new LogPublisher
+    val q0 = ReportJob.stream(spark, eventsPath, tmp("graft-reports3e"), tmp("ck3e"), early, 1)
+    try {
+      Ingest.sensorQuery(spark, sensor, "n", eventsPath, tmp("ck3"),
+        None, Trigger.AvailableNow()).awaitTermination(120000)
+      q0.processAllAvailable()
+      assert(early.published.exists(_.contains("2 total events")))
+    } finally q0.stop()
+    // the declared events schema is the one the table infers
+    def cols(t: org.apache.spark.sql.types.StructType) = t.map(f => f.name -> f.dataType)
+    assert(cols(spark.read.parquet(eventsPath).schema) == cols(Ingest.EventsSchema))
 
     val pub = new LogPublisher
     val q = ReportJob.stream(spark, eventsPath, tmp("graft-reports3"), tmp("ck3r"), pub, 1)
