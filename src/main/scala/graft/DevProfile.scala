@@ -82,13 +82,16 @@ object DevProfile {
       // listener events drain asynchronously; give the bus a beat
       // (listenerBus.waitUntilEmpty is private[spark])
       Thread.sleep(500)
-      import scala.jdk.CollectionConverters._
-      val jobs = jobLog.asScala.toSeq
-        .filter(_._3 == group).map(j => (j._1, j._2)).sortBy(_._1)
+      // drain the log: jobs that started under another group (untagged,
+      // or a previous iteration's late job-end) are left out of this
+      // iteration and counted as `dropped`
+      val (mine, dropped) = Iterator.continually(jobLog.poll())
+        .takeWhile(_ != null).toSeq.partition(_._3 == group)
+      val jobs = mine.map(j => (j._1, j._2)).sortBy(_._1)
       val jobSum = jobs.map(_._2).sum
       println(f"[profile] $name iter $i: $dt%.3f s " +
         f"shuffle=${shuffleBytes.get() / 1048576.0}%.1f MiB " +
-        f"jobs=${jobs.size} stages=${stageCount.get()} " +
+        f"jobs=${jobs.size} dropped=${dropped.size} stages=${stageCount.get()} " +
         f"jobSum=$jobSum%.3f s driverGap=${dt - jobSum}%.3f s")
       if (args.contains("--jobs"))
         println("[profile]   job times: " + jobs.map {

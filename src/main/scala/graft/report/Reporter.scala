@@ -126,7 +126,10 @@ object Reporter {
     s"$totalEvents new event$plural from ${shown.mkString(", ")} $reportUrl #takuan #threatreport"
   }
 
-  /** A6: the commit-message totals (core/reporter.go:182). One pass. */
+  /** A6: the commit-message totals (core/reporter.go:182) as a standalone
+    * pass: (events, distinct non-null addresses). The service path does not
+    * call it; `ReportJob.reportBatch` observes the same two numbers on the
+    * report's CSV write. It stays as the batch form and the test oracle. */
   def totals(events: DataFrame): (Long, Long) = {
     val r = events.agg(count(lit(1)), countDistinct(col("address"))).head()
     (r.getLong(0), r.getLong(1))

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.report.Reporter
 
@@ -40,24 +42,43 @@ class LogPublisher extends ReportPublisher {
 object ReportJob {
 
   /** One report pass over a batch of fresh events (also usable standalone
-    * as the batch analogue). Returns rows in the report for inspection. */
+    * as the batch analogue). Returns rows in the report for inspection.
+    *
+    * The CSV, the commit-message totals and the row count come from one
+    * observed pass: an unnamed [[Observation]] on the report counts its
+    * rows, its non-null addresses (= `countDistinct(address)`) and sums
+    * `total_events` (= the event count) while the CSV is written. The tweet
+    * adds one country-summary scan. The report is not cached, because a
+    * cached plan's shuffles are not coalesced by AQE: on the perfbench
+    * `service` backlog report (4 vCPUs) the cached pass ran 418 tasks in 15
+    * jobs, the uncached one 13 tasks in 9 jobs. The observation has no
+    * name, so concurrent report passes in one session never share a metric
+    * name. */
   def reportBatch(events: DataFrame, outDir: String, publisher: ReportPublisher,
       now: java.time.ZonedDateTime = java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC)): Long = {
     if (events.isEmpty) return 0L
-    val report = Reporter.report(events).cache()
-    try {
-      val dir = Reporter.writeCsv(report, outDir, now)
-      val (total, addresses) = Reporter.totals(events)
-      val url = publisher.publishCsv(dir, addresses, total)
-      val tweet = Reporter.tweetText(Reporter.countrySummary(events), total, url)
-      publisher.publishSummary(tweet)
-      report.count()
-    } finally report.unpersist()
+    val seen = Observation()
+    val report = Reporter.report(events).observe(seen,
+      count(lit(1)).as("rows"), count(col("address")).as("addresses"),
+      sum(col("total_events")).as("events"))
+    val dir = Reporter.writeCsv(report, outDir, now)
+    val m = seen.get
+    val total = m("events").asInstanceOf[Long]
+    val url = publisher.publishCsv(dir, m("addresses").asInstanceOf[Long], total)
+    publisher.publishSummary(Reporter.tweetText(Reporter.countrySummary(events), total, url))
+    m("rows").asInstanceOf[Long]
   }
 
   /** Streaming cadence over the ingested events table. `now` is the
     * report clock (injectable so end-to-end runs are deterministic and
-    * golden-comparable, exactly like the batch path). */
+    * golden-comparable, exactly like the batch path).
+    *
+    * A batch replayed after a crash (its offsets logged, its commit not)
+    * is published once: each published `batchId` is recorded as an empty
+    * file under `<checkpoint>/published`, and a batch whose id is there is
+    * skipped. Spark replays only the latest batch, so recording id n drops
+    * the mark of n - 1. The id is recorded after publication, so a crash
+    * between publishing and recording still publishes that batch again. */
   def stream(
       spark: SparkSession,
       eventsPath: String,
@@ -67,16 +88,24 @@ object ReportJob {
       periodSecs: Int = 3600,
       now: () => java.time.ZonedDateTime =
         () => java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC)): StreamingQuery = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
     // a fresh deployment starts this before any ingest batch commits
-    val dir = new org.apache.hadoop.fs.Path(eventsPath)
-    dir.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dir)
+    val dir = new Path(eventsPath)
+    dir.getFileSystem(hadoopConf).mkdirs(dir)
+    val ledger = new Path(checkpoint, "published")
+    val ledgerFs = ledger.getFileSystem(hadoopConf)
     spark.readStream.schema(Ingest.EventsSchema).parquet(eventsPath)
       .writeStream
       .queryName("graft-report")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(s"$periodSecs seconds"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        reportBatch(batch, outDir, publisher, now())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val mark = new Path(ledger, batchId.toString)
+        if (!ledgerFs.exists(mark)) {
+          reportBatch(batch, outDir, publisher, now())
+          ledgerFs.create(mark).close()
+          ledgerFs.delete(new Path(ledger, (batchId - 1).toString), false)
+        }
         ()
       }
       .start()

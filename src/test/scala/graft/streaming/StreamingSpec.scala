@@ -231,6 +231,31 @@ class StreamingSpec extends SparkSpec {
     assert(csv.length == 1)
   }
 
+  test("report batch: one observed pass gives the separate-pass row count and totals, nothing cached") {
+    import spark.implicits._
+    // a null address is a report row (groupBy keeps the null group) but
+    // not an address (countDistinct ignores it); a null country reaches
+    // the tweet summary
+    val events = Seq(
+      ("1.1.1.1", "US", "United States", "ssh", "auth-failure"),
+      ("1.1.1.1", "US", "United States", "ssh", "auth-failure"),
+      (null, "US", "United States", "ssh", "auth-failure"),
+      ("2.2.2.2", null, null, "http", "XDebug"),
+      ("3.3.3.3", "NL", "Netherlands", "http", "XDebug"))
+      .toDF("address", "country_code", "country_name", "sensor", "rule")
+    val pub = new LogPublisher
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    val n = ReportJob.reportBatch(events, tmp("graft-reports-obs"), pub)
+    assert(spark.sparkContext.getPersistentRDDs.size == cached)
+    val rows = graft.report.Reporter.report(events).count()
+    val (total, addresses) = graft.report.Reporter.totals(events)
+    assert(n == rows)
+    assert(rows == addresses + 1)
+    assert(pub.published.exists(s => s.startsWith("csv:") &&
+      s.endsWith(s"(reporting $addresses addresses, $total total events)")), pub.published)
+    assert(pub.published.exists(_.startsWith(s"tweet: $total new events from")), pub.published)
+  }
+
   test("report batch publishes the summary through the REAL twitter poster (S12)") {
     import spark.implicits._
     import java.net.InetSocketAddress
@@ -409,5 +434,35 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(pub.published.exists(_.contains("2 total events")))
     } finally q.stop()
+  }
+
+  test("a report batch replayed after a crash is published once") {
+    val logDir = tmp("graft-logs4")
+    val eventsPath = tmp("graft-events4") + "/events"
+    val (ingestCk, ck) = (tmp("ck4"), tmp("ck4r"))
+    val sensor = conf.sensors.find(_.name == "ssh").get.copy(filename = logDir)
+    val pub = new LogPublisher
+    def ingestAndReport(log: String, line: String): Unit = {
+      writeLog(logDir, log, line)
+      Ingest.sensorQuery(spark, sensor, "n", eventsPath, ingestCk,
+        None, Trigger.AvailableNow()).awaitTermination(120000)
+      val q = ReportJob.stream(spark, eventsPath, tmp("graft-reports4"), ck, pub, 1)
+      try q.processAllAvailable() finally q.stop()
+    }
+    ingestAndReport("a.log",
+      "Aug  3 11:22:33 host1 sshd[1]: Authentication failed for root 203.0.113.7 port 1")
+    ingestAndReport("b.log",
+      "Aug  3 11:22:35 host1 sshd[2]: Authentication failed for root 203.0.113.9 port 2")
+    // a crash after publication, before the commit: the batch's offsets
+    // are logged, its commit is not, so the restart runs it again
+    val commits = new java.io.File(ck, "commits")
+    Seq("1", ".1.crc").foreach(f => new java.io.File(commits, f).delete())
+    val q = ReportJob.stream(spark, eventsPath, tmp("graft-reports4"), ck, pub, 1)
+    try q.processAllAvailable() finally q.stop()
+    assert(new java.io.File(commits, "1").exists(), "the batch was not replayed")
+    assert(pub.published.count(_.startsWith("csv:")) == 2, pub.published)
+    assert(pub.published.count(_.startsWith("tweet:")) == 2, pub.published)
+    // the ledger keeps only the latest id: no older batch is replayed
+    assert(new java.io.File(ck, "published").list().filterNot(_.startsWith(".")).toSeq == Seq("1"))
   }
 }
