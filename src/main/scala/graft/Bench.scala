@@ -29,11 +29,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def buildSession(cpus: String): SparkSession = {
+  /** The local session every measurement and dump main runs on (Bench,
+    * Verify, DevProfile, PlanDump, ScaleProbe): `cpus` local cores and,
+    * unless given, as many shuffle partitions. `GraftApp.session` is the
+    * service profile and stays separate. */
+  def session(cpus: String): SparkSession = session(cpus, cpus)
+
+  def session(cpus: String, shufflePartitions: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       // collect_list aggs (report counters) fall back to sort-based after
       // 128 in-memory keys by default — far too conservative for small
@@ -99,30 +105,25 @@ object Bench {
     val passLoads = scala.collection.mutable.ArrayBuffer[String]()
 
     shards.zipWithIndex.foreach { case (shard, si) =>
-      val spark = buildSession(cpus)
+      val spark = session(cpus)
       // Uncounted FULL warmup pass: every query in the shard runs once,
       // discarded, before any timed pass. A first-query-only warmup
       // (r10) left each query's own codegen compilation inside its
       // first timed sample, inflating medians 2-4x for sub-second
       // queries (r10 verdict: sketch_heavy_hitters 4.30 s recorded vs
       // 1.14 s isolated). After this pass, every timed sample runs
-      // against compiled classes and a warm block manager.
-      // Session-scoped shared fixtures (SharedRels) stay persisted across
-      // queries BY DESIGN — unpersisting a localCheckpointed fixture
-      // destroys its only copy (truncated lineage), so the sweep must
-      // skip those blocks.
-      def sweepPersisted(): Unit = {
-        val keep = graft.queries.SharedRels.liveRddIds(spark)
-        spark.sparkContext.getPersistentRDDs.values
-          .filterNot(r => keep.contains(r.id))
-          .foreach(_.unpersist(blocking = true))
-      }
+      // against compiled classes and a warm block manager. Each cold
+      // run's seconds go to stderr, so an isolated run
+      // (SPARK_GRAFT_ONLY=<q>) still shows the first-run cost.
       shard.foreach { case (name, fn) =>
+        val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
         }
-        sweepPersisted()
+        System.err.println(
+          f"[bench] warmup $name ${(System.nanoTime() - t0) / 1e9}%.3f")
+        graft.queries.SharedRels.sweep(spark)
       }
       // Untimed GC between warmup and timed passes: warmup allocation
       // garbage must not trigger a collection inside a timed sample.
@@ -147,7 +148,7 @@ object Bench {
           // after a driver GC notices the dangling ref. Apart from the
           // SharedRels fixtures (kept alive on purpose), queries never
           // share persisted RDDs, so drop them synchronously, untimed.
-          sweepPersisted()
+          graft.queries.SharedRels.sweep(spark)
           name -> elapsed
         }
         // Codegen-cache churn evidence: cumulative janino compile count

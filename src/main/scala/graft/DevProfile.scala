@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling loop: runs one registered query N times in a single
   * session and prints per-iteration seconds, separating plan/codegen
   * warm-up from steady-state execution. Usage:
   *   runMain graft.DevProfile <sfDir> <queryName> [n] [--explain]
+  * on the [[Bench.session]] at SPARK_GRAFT_CPUS cores (default 32).
   */
 object DevProfile {
   def main(args: Array[String]): Unit = {
@@ -13,18 +12,7 @@ object DevProfile {
     val name = args(1)
     val n = if (args.length > 2 && !args(2).startsWith("--")) args(2).toInt else 3
     val explain = args.contains("--explain")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val fn = SparkEntry.queries(name)
     if (explain) fn(spark, sfDir).explain("formatted")
     // total shuffle write across the query's stages — the number a

@@ -7,22 +7,15 @@ import java.nio.file.{Files, Paths}
   * `plans/r<N>/`. Usage:
   *   runMain graft.PlanDump <sfDir> <outDir> <suffix> <query...>
   * writes <outDir>/<query>_<suffix>.txt per query. Plans are built (not
-  * executed), so this is cheap and load-independent.
+  * executed), so this is cheap and load-independent. The session is the
+  * [[Bench.session]] at SPARK_GRAFT_CPUS cores (default 32, as Bench):
+  * `T.par` widths are clamped to the core count, so plan at the core
+  * count the bench runs at.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names @ _*) = args
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     new java.io.File(outDir).mkdirs()
     for (name <- names) {
       try {

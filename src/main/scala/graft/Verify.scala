@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,26 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional query-name filter (dev loop); empty = all
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // default 100 entries churns across a 130+-query dump (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // collect_list aggs (report counters) fall back to sort-based after
-      // 128 in-memory keys by default — far too conservative for small
-      // per-key buffers; keep them hash-based.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // testdata parquet files are single-digit-MB; default 128 MB split
-      // size scans each as ONE partition, serializing every query. At real
-      // scale the default is correct — this is local-bench parallelization.
-      .config("spark.sql.files.maxPartitionBytes", "2097152")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

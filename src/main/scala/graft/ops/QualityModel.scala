@@ -759,13 +759,11 @@ object QualityModel {
     val w = Array.fill(dim)(0L)
     var b = 0L
     val out = Seq.newBuilder[(Array[Long], Long)]
-    val sc = labels.sparkSession.sparkContext
     for (_ <- 0 until iters) {
       // lazy checkpoint: the residual relation feeds BOTH the feature
       // gradient join and the bias sum below; without it the per-doc
       // margin aggregation would run twice per iteration (and with the
       // id-partitioned feats there is no exchange left to reuse)
-      val beforeIds = sc.getPersistentRDDs.keySet
       val resid = marginsMicro(feats, labels, w, b)
         .select(col("id"),
           (graft.functions.VectorFunctions.sigmoid_micro(col("m"))
@@ -794,8 +792,11 @@ object QualityModel {
       // the residual checkpoint is fully consumed by the collect above;
       // free its blocks NOW instead of accumulating iters checkpoints
       // until a driver GC notices the dangling refs (ADVICE r16)
-      sc.getPersistentRDDs.filterNot { case (id, _) => beforeIds(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      // — and only its OWN blocks, the RDD its LogicalRDD wraps: a cached
+      // input first materialized during this iteration must stay cached.
+      resid.queryExecution.logical
+        .collect { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+        .foreach(_.unpersist(blocking = false))
       out += ((w.clone(), b))
     }
     out.result()

@@ -27,8 +27,8 @@ import graft.ops.Dedup
   * Lifecycle: entries are keyed by (session, sf dir). A consumer checks
   * that the checkpointed blocks still exist (an unpersist would truncate
   * the lineage AND drop the blocks, making the cached plan unreadable)
-  * and rebuilds if not. [[liveRddIds]] exposes the backing RDD ids so
-  * `Bench`'s between-query unpersist sweep can skip fixture blocks.
+  * and rebuilds if not. [[sweep]], the between-query cleanup of `Bench`
+  * and `ScaleProbe`, skips the fixture blocks [[liveRddIds]] names.
   */
 object SharedRels {
 
@@ -67,6 +67,19 @@ object SharedRels {
   def liveRddIds(spark: SparkSession): Set[Int] = synchronized {
     cache.collect { case (Key(s, _, _), e) if s eq spark => e.rddIds }
       .flatten.toSet
+  }
+
+  /** The between-query cleanup: unpersist, synchronously, every
+    * persisted RDD of the session except the live fixtures' blocks.
+    * Queries never share persisted RDDs, but fixtures stay persisted
+    * across queries BY DESIGN — unpersisting a localCheckpointed fixture
+    * destroys its only copy (truncated lineage), and the next consumer
+    * would pay its rebuild. */
+  def sweep(spark: SparkSession): Unit = {
+    val keep = liveRddIds(spark)
+    spark.sparkContext.getPersistentRDDs.values
+      .filterNot(r => keep.contains(r.id))
+      .foreach(_.unpersist(blocking = true))
   }
 
   /** Drop all fixtures of one session — the checkpoint-backed relations

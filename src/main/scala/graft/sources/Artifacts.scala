@@ -91,10 +91,16 @@ object Artifacts {
     // count aggregation into the single writer task, silently
     // serializing the whole reduce side on a larger training slice;
     // the one-partition shuffle of a model-sized table is noise
-    // (ADVICE r16).
-    c3.repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$path/c3")
-    c23.repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$path/c23")
-    c1.repartition(1).write.mode(SaveMode.Overwrite).parquet(s"$path/c1")
+    // (ADVICE r16). The one partition is sorted on the n-gram key: the
+    // shuffle hands rows over in fetch order, which varies run to run,
+    // so unsorted the same counts would write a different file each time.
+    def save(df: org.apache.spark.sql.DataFrame, name: String,
+        keys: String*): Unit =
+      df.repartition(1).sortWithinPartitions(keys.map(col): _*)
+        .write.mode(SaveMode.Overwrite).parquet(s"$path/$name")
+    save(c3, "c3", "t", "b12")
+    save(c23, "c23", "b23", "w2")
+    save(c1, "c1", "w3")
   }
 
   def loadLmCounts(spark: SparkSession, path: String):

@@ -17,15 +17,6 @@ class SharedRelsSpec extends SparkSpec {
 
   val dir = "/root/testdata/sf0.001"
 
-  private def sweepLikeBench(): Unit = {
-    // mirror of Bench.sweepPersisted: drop every persisted block except
-    // the fixtures' own
-    val keep = SharedRels.liveRddIds(spark)
-    spark.sparkContext.getPersistentRDDs.values
-      .filterNot(r => keep.contains(r.id))
-      .foreach(_.unpersist(blocking = true))
-  }
-
   private def consume(df: DataFrame): Long = df.count()
 
   test("relation fixtures build once, survive the bench sweep, and never silently rebuild") {
@@ -43,7 +34,7 @@ class SharedRelsSpec extends SparkSpec {
     assert(SharedRels.buildCount == before + 1, "second consumer must not rebuild")
     // the bench sweep reclaims everything BUT fixture blocks — exactly
     // what the ContextCleaner does to the build's internal checkpoints
-    sweepLikeBench()
+    SharedRels.sweep(spark)
     val ep3 = SharedRels.gdEpochScores(spark, dir, iters = 3, lrDen = 16L)
     assert(ep3 eq ep1, "post-sweep consumer must still get the cached frame")
     assert(consume(ep3) == n1, "cached frame must stay readable post-sweep")
@@ -70,7 +61,7 @@ class SharedRelsSpec extends SparkSpec {
     val (c3b, c23b, c1b) = SharedRels.trigramLm500(spark, dir)
     assert(c3b eq c3a)
     assert(SharedRels.buildCount == before + 1)
-    sweepLikeBench()
+    SharedRels.sweep(spark)
     val (c3c, _, _) = SharedRels.trigramLm500(spark, dir)
     assert(c3c eq c3a, "post-sweep the cached triple survives")
     assert(consume(c3c) > 0 && consume(c23b) > 0 && consume(c1b) > 0)

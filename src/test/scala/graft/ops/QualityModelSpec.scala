@@ -286,6 +286,34 @@ class QualityModelSpec extends SparkSpec {
     assert(traj.map(_._2) == traj2.map(_._2))
   }
 
+  test("trajectory frees only its residual checkpoints; a lazily cached input stays cached") {
+    import spark.implicits._
+    val docs = (1 to 40).map(i => (i.toLong,
+        if (i % 2 == 0) s"good day $i" else s"bad night $i", i % 2))
+      .toDF("doc_id", "text", "label")
+    val labels = docs.select(col("doc_id").as("id"),
+      col("label").cast("long").as("y"))
+    val expected = QualityModel.trajectoryFrom(
+      QualityModel.hashedFeatures(docs, 16), labels, 16, 3, 1L, 2L)
+    val sc = spark.sparkContext
+    // cached but not yet materialized: its RDD registers during the
+    // first iteration
+    val feats = QualityModel.hashedFeatures(docs, 16).cache()
+    try {
+      val before = sc.getPersistentRDDs.keySet
+      val traj = QualityModel.trajectoryFrom(feats, labels, 16, 3, 1L, 2L)
+      assert(traj.map(t => (t._1.toSeq, t._2)) ==
+        expected.map(t => (t._1.toSeq, t._2)))
+      // what the call left persisted is the feats cache alone, fully
+      // cached; every residual checkpoint is gone
+      val left = sc.getPersistentRDDs.keySet.diff(before)
+      assert(left.size == 1, s"persisted after the call: $left")
+      val info = sc.getRDDStorageInfo.find(_.id == left.head)
+      assert(info.exists(i => i.numCachedPartitions == i.numPartitions),
+        "the feats cache must still hold all its blocks")
+    } finally feats.unpersist(blocking = true)
+  }
+
   test("forgetting + curve: exact replay from collected epochs") {
     import spark.implicits._
     val r = new scala.util.Random(17)

@@ -58,6 +58,17 @@ class ArtifactsSpec extends SparkSpec {
     val (c3, c23, c1) = TextAnalysis.trainTrigramCounts(docs)
     Artifacts.saveLmCounts(spark, s"$tmp/lm", c3, c23, c1)
     val (l3, l23, l1) = Artifacts.loadLmCounts(spark, s"$tmp/lm")
+    // each table is one file whose rows read back in n-gram key order
+    for ((name, keys) <- Seq("c3" -> Seq("t", "b12"),
+        "c23" -> Seq("b23", "w2"), "c1" -> Seq("w3"))) {
+      val files = new java.io.File(s"$tmp/lm/$name").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"$name: ${files.length} files")
+      val rows = spark.read.parquet(files.head.getPath)
+        .select(keys.map(col): _*).collect()
+        .map(r => keys.indices.map(r.getString).mkString("\u0000")).toSeq
+      assert(rows.size > 1 && rows == rows.sorted, s"$name not in key order")
+    }
     // same-corpus serve through the loaded artifact == the inline scorer
     // (every n-gram is in-vocabulary, so the left joins never null)
     val inline = TextAnalysis.trigramLmScore(docs)

@@ -7,7 +7,9 @@ Usage: bench_diff.py <old.json> <new.json> [threshold_ratio=1.3]
 Prints queries whose median moved by more than the threshold in either
 direction (regressions first), plus totals. New/removed queries are
 listed separately. Medians only — sample noise is the reader's problem;
-re-run `graft.BenchOne <name>` to confirm anything surprising.
+re-run `SPARK_GRAFT_ONLY=<name> sbt "runMain graft.Bench"` (a fresh
+session, one untimed warmup, then median-of-3) to confirm anything
+surprising.
 """
 import json
 import sys
