@@ -49,10 +49,10 @@ object GraftApp {
   }
 
   def main(args: Array[String]): Unit = args.toList match {
-    case "--geo" :: geoCsv :: eventsPath :: outPath :: Nil =>
+    case "--geo" :: geoDb :: eventsPath :: outPath :: Nil =>
       val spark = session("graft-geo-backfill")
       val (refreshed, changed) = GeoIp.backfill(
-        spark.read.parquet(eventsPath), geoSource(spark, geoCsv))
+        spark.read.parquet(eventsPath), geoSource(spark, geoDb))
       val total = refreshed.count()
       val nChanged = refreshed.filter(changed).count()
       refreshed.write.mode("overwrite").parquet(outPath)
@@ -101,8 +101,10 @@ object GraftApp {
 
     case _ =>
       System.err.println(
-        """usage: graft.GraftApp <config.yml> <eventsPath> <checkpointRoot> <reportDir> [geoCsv]
-          |       graft.GraftApp --geo <geoCsv> <eventsPath> <outPath>""".stripMargin)
+        """usage: graft.GraftApp <config.yml> <eventsPath> <checkpointRoot> <reportDir> [geoDb]
+          |       graft.GraftApp --geo <geoDb> <eventsPath> <outPath>
+          |       graft.GraftApp --rdns <eventsPath> <outPath>
+          |geoDb is a flattened range CSV or a binary .mmdb file""".stripMargin)
       sys.exit(2)
   }
 }

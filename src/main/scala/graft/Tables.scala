@@ -83,15 +83,20 @@ object T {
   /** The input bytes one [[par]] task must cover (calibration above). */
   private val MinBytesPerTask = 64L << 10
 
-  /** Adaptive width: ceil(estimatedBytes / MinBytesPerTask) clamped to
-    * [1, cores]. Unknown/huge estimates clamp to full width. */
-  private[graft] def parWidth(df: DataFrame, cores: Int): Int = {
-    val bytes =
+  /** Adaptive width of `df`: [[widthFor]] its estimated bytes.
+    * Unknown/huge estimates clamp to full width. */
+  private[graft] def parWidth(df: DataFrame, cores: Int): Int =
+    widthFor(
       try df.queryExecution.analyzed.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
+      catch { case _: Throwable => BigInt(Long.MaxValue) },
+      cores)
+
+  /** ceil(bytes / MinBytesPerTask) clamped to [1, cores] — also the
+    * slice count of a tail-file micro-batch ([[graft.streaming
+    * .TailMicroBatchStream]]). */
+  private[graft] def widthFor(bytes: BigInt, cores: Int): Int =
     if (bytes >= BigInt(MinBytesPerTask) * cores) cores
     else math.max(1, ((bytes + MinBytesPerTask - 1) / MinBytesPerTask).toInt)
-  }
 
   /** Full-width fan-out for CPU-BOUND narrow kernels (the pre-r17
     * unconditional [[par]]): per-row cost dwarfs bytes, so the byte

@@ -9,11 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Engine shape: the reader runs ONCE on the driver and enumerates the
   * binary search tree into (start_ip_num, end_ip_num, code, name) ranges —
-  * a few hundred k rows for a country database — which become the
-  * broadcast side of [[GeoIp.enrich]]'s bucketed equi-join. That keeps the
-  * per-event cost identical to the reference's in-process O(1) lookup
-  * while staying a declarative join (no per-row UDF, no mmdb on
-  * executors).
+  * a few hundred k rows for a country database — which become
+  * [[GeoIp.enrich]]'s broadcast range index. That keeps the per-event
+  * cost a binary search like the reference's in-process lookup, with no
+  * mmdb on executors.
   *
   * Supported: record sizes 24/28/32, IPv4 and IPv6 trees (IPv4 ranges are
   * read from the ::/96-prefixed subtree of a v6 database), all data types
@@ -218,8 +217,8 @@ object Mmdb {
 
   /** Read an mmdb file into the geo range DataFrame consumed by
     * [[GeoIp.enrich]] (same schema as [[GeoIp.fromCsv]]). Driver-side
-    * one-time read; the result is dimension-sized and broadcast by the
-    * join. */
+    * one-time read; the result is dimension-sized and broadcast as
+    * [[GeoIp.enrich]]'s range index. */
   def fromMmdb(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     readRanges(path)

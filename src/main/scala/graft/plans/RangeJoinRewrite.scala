@@ -65,7 +65,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Reference behavior analogue: core/aggregator.go:62-66 does a per-event
   * O(1) mmdb lookup; this rule gives the declarative join the same
   * hash-lookup shape without the caller hand-bucketing (GeoIp.enrich
-  * remains the explicit form).
+  * is the dedicated form: a broadcast range index, no join).
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 

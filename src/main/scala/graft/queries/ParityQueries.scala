@@ -127,7 +127,8 @@ object ParityQueries {
       .withColumn("ip_num", graft.functions.GraftFunctions.ip_to_num(col("address")))
       .orderBy(col("event_id"))
 
-  /** J1: GeoIP broadcast range join via the bucketed equi-join. */
+  /** J1: GeoIP range lookup via [[GeoIp.enrich]]'s broadcast range index
+    * (binary search per event, no join). */
   def j1GeoRangeJoin(spark: SparkSession, dir: String): DataFrame =
     GeoIp.enrich(
       T.events(spark, dir).select(col("event_id"), addrCol.as("address")),
@@ -136,8 +137,9 @@ object ParityQueries {
       .orderBy(col("event_id"))
 
   /** J1 via the automatic [[graft.plans.RangeJoinRewrite]] optimizer rule:
-    * the raw BETWEEN join (no hand-bucketing) — the rule turns it into the
-    * same bucketed hash equi-join GeoIp.enrich builds manually. */
+    * the raw BETWEEN join (no hand-bucketing) — the rule turns it into a
+    * /16-bucketed hash equi-join; J1 computes the same answer with
+    * GeoIp.enrich's range index. */
   def j2AutoRangeJoin(spark: SparkSession, dir: String): DataFrame =
     T.events(spark, dir).select(col("event_id"), addrCol.as("address"))
       .withColumn("ip", graft.functions.GraftFunctions.ip_to_num(col("address")))

@@ -56,7 +56,7 @@ object Reporter {
   /** [[report]] with late geo enrichment: aggregate first, enrich the
     * (address, sensor, rule) aggregate rows — not the raw events. The
     * address→country mapping is functional, so results are identical to
-    * `report(GeoIp.enrich(events, geo))`, but the geo join touches
+    * `report(GeoIp.enrich(events, geo))`, but the geo lookup touches
     * |distinct address×rule| rows instead of |events|: at 100 TB that is
     * the difference between enriching billions of rows and enriching a few
     * million aggregates. The reference enriches per event at ingest

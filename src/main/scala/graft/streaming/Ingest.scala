@@ -31,10 +31,14 @@ import graft.enrich.GeoIp
   *    reference's separate DB-flush ticker collapses into the micro-batch
   *    commit itself.
   *
-  * Scale: the parse/classify/enrich stages are all narrow + broadcast, so
-  * each micro-batch is an embarrassingly parallel scan→append with zero
-  * shuffles; the sink partitions by (event_date, sensor) so downstream
-  * report queries prune to the slice they need.
+  * Scale: the parse/classify/enrich stages are all narrow, so each
+  * micro-batch is one embarrassingly parallel scan→append stage with zero
+  * shuffles and no other job. The tail source cuts a batch over 64 KiB
+  * into line-aligned slices, up to one per core; the geo lookup reads a
+  * range index broadcast once per geo DataFrame, which every sensor
+  * stream shares ([[GeoIp.enrich]]). The sink partitions by
+  * (event_date, sensor) so downstream report queries prune to the slice
+  * they need.
   */
 object Ingest {
 

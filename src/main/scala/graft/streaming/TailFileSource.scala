@@ -3,6 +3,7 @@ package graft.streaming
 import java.util
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -46,11 +47,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale contract: this is a TAIL source — a handful of live log files
   * per node, kilobytes per trigger — not a bulk loader. The driver
   * reads each appended region once to find line boundaries (exactly
-  * the bytes a single tailing process would read); executors then read
-  * their `[start, end)` slices via positioned reads. Slices are capped
-  * at 2 GiB per file per batch (a growing file beyond that should be
-  * rotated or bulk-loaded; the require names the limit). For bulk
-  * directory ingest at scale, use the directory source in [[Ingest]].
+  * the bytes a single tailing process would read). A file's batch range
+  * of up to 64 KiB is one slice; a larger one (a backlog, a burst) is
+  * cut into one line-aligned slice per 64 KiB, at most one per core
+  * ([[graft.T.widthFor]], the `T.par` rule), so the batch is one
+  * parallel stage. Executors read their `[start, end)` slices via
+  * positioned reads. A batch is capped at 2 GiB per file (a growing
+  * file beyond that should be rotated or bulk-loaded; the require names
+  * the limit). For bulk directory ingest at scale, use the directory
+  * source in [[Ingest]].
   *
   * Usage: `spark.readStream.format("tail-file").load(path)` where path
   * is a file, directory, or glob (directories list their direct files).
@@ -350,9 +355,46 @@ class TailMicroBatchStream(pathSpec: String)
         require(endOff - startOff <= Int.MaxValue,
           s"tail-file: $p grew ${endOff - startOff} bytes in one batch; " +
             "cap is 2 GiB — rotate the file or bulk-load the backlog")
-        Some(TailInputPartition(p, startOff, endOff))
-      } else None
+        val bounds = startOff +: sliceCuts(p, startOff, endOff) :+ endOff
+        bounds.zip(bounds.tail).map { case (a, b) => TailInputPartition(p, a, b) }
+      } else Nil
     }.toArray
+  }
+
+  /** Inner cuts of one file's line-aligned `[start, end)`: the range is
+    * split into `T.widthFor(bytes, defaultParallelism)` slices (one per
+    * 64 KiB, at most one per core), each cut placed just past the first
+    * '\n' at or after an even target, found with one short positioned
+    * read from that target. A cut that reaches `end` (or repeats the
+    * previous one, when a line is longer than a slice) is dropped. Every
+    * slice therefore stays line-aligned: the cuts are a function of
+    * (file, start, end) and the core count, and however a replayed batch
+    * is cut it rereads exactly the lines of `[start, end)`. */
+  private def sliceCuts(path: String, start: Long, end: Long): Seq[Long] = {
+    val n = graft.T.widthFor(BigInt(end - start),
+      SparkSession.active.sparkContext.defaultParallelism)
+    if (n <= 1) return Nil
+    val in = fs.open(new Path(path))
+    try {
+      val buf = new Array[Byte](4096)
+      // position just past the first '\n' in [from, end), or `end`
+      def nextLineStart(from: Long): Long = {
+        var pos = from
+        while (pos < end) {
+          val got = in.read(pos, buf, 0, math.min(buf.length.toLong, end - pos).toInt)
+          if (got <= 0) return end
+          var i = 0
+          while (i < got) {
+            if (buf(i) == '\n') return pos + i + 1
+            i += 1
+          }
+          pos += got
+        }
+        end
+      }
+      (1 until n).map(k => nextLineStart(start + (end - start) * k / n))
+        .filter(_ < end).distinct
+    } finally in.close()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

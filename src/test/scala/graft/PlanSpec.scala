@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 
@@ -40,9 +41,11 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), s"expected top-k operator:\n$p")
   }
 
-  test("geo enrichment is a broadcast hash equi-join on the bucket key") {
-    val p = plan(queries.ParityQueries.j1GeoRangeJoin(spark, dir))
-    assert(p.contains("BroadcastHashJoin"), p)
+  test("geo enrichment is a range-index lookup: no join, no broadcast exchange") {
+    val qe = queries.ParityQueries.j1GeoRangeJoin(spark, dir).queryExecution
+    assert(qe.optimizedPlan.find(_.isInstanceOf[Join]).isEmpty, qe.optimizedPlan)
+    val p = qe.executedPlan.toString
+    assert(!p.contains("BroadcastExchange"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 

@@ -166,6 +166,42 @@ class StreamingSpec extends SparkSpec {
     assert(st3.off == 9L && st3.gen == 0L)
   }
 
+  test("tail-file: a batch over 64 KiB is cut into line-aligned slices that lose and repeat no line") {
+    val dir = tmp("graft-tail-slices")
+    val file = Paths.get(dir, "big.log")
+    // ~420 KiB: lines of varying length (so cut targets fall mid-line), a
+    // CRLF line, an empty line, and one 170 KiB line — longer than a
+    // slice, spanning two cut targets
+    val lines = (0 until 6000).map(i => s"line-$i-" + "x" * (i * 37 % 61)) ++
+      Seq("crlf\r", "", "L" * (170 << 10)) ++
+      (6000 until 6400).map(i => s"line-$i-" + "y" * (i % 53))
+    val bytes = lines.mkString("", "\n", "\n").getBytes("UTF-8")
+    Files.write(file, bytes)
+    assert(bytes.length > (4 << 16))
+
+    val s = new TailMicroBatchStream(file.toString)
+    val parts = s.planInputPartitions(s.initialOffset(), s.latestOffset())
+      .map(_.asInstanceOf[TailInputPartition]).toSeq
+    assert(parts.size >= 2, s"one slice for ${bytes.length} bytes: $parts")
+    assert(parts.head.start == 0L && parts.last.end == bytes.length.toLong)
+    parts.zip(parts.tail).foreach { case (a, b) =>
+      assert(a.end == b.start, s"slices do not tile: $a, $b")
+      assert(a.end > a.start && bytes((a.end - 1).toInt) == '\n',
+        s"cut ${a.end} is not just past a newline")
+    }
+
+    val out = tmp("graft-tail-slices-out") + "/rows"
+    spark.readStream.format("tail-file").load(file.toString)
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", tmp("graft-tail-slices-ckpt"))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
+    val got = spark.read.parquet(out).collect().map(_.getString(0)).toSeq
+    val want = lines.map(_.stripSuffix("\r"))
+    assert(got.size == want.size)
+    assert(got.groupBy(identity).view.mapValues(_.size).toMap ==
+      want.groupBy(identity).view.mapValues(_.size).toMap)
+  }
+
   test("sensorQuery on a FILE config tails appends through the full pipeline (S1)") {
     val dir = tmp("graft-tailq")
     val logFile = Paths.get(dir, "auth.log")
