@@ -35,7 +35,8 @@ object GraftApp {
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // report counters use collect_list; the default ObjectHashAggregate
+      // the report's typed counter aggregator (and collect_list in the
+      // late-enrich report) runs in ObjectHashAggregate; its default
       // fallback (sort-based after 128 in-memory keys) is far too
       // conservative for small per-key buffers
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")

@@ -1,21 +1,26 @@
 package graft.report
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The report pipeline (SURVEY §2.4/§2.5; reference: core/reporter.go,
   * core/twitter.go): per-address aggregation with nested sensor/rule
   * counters, descending sort, CSV publication, and the per-country top-5
   * summary.
   *
-  * Scale design: the nested counters are computed with a two-phase
-  * partial/final hash aggregate — `groupBy(address, sensor, rule).count()`
-  * first (map-side combine shrinks the shuffle to distinct key triples),
-  * then `groupBy(address)` assembles the counter string. Per-address event
-  * *lists* are never materialized, unlike the reference's
-  * `map[string][]Event` (core/reporter.go:102-109), so a hot address with
-  * millions of events costs O(#distinct rules), not O(#events). The only
-  * driver-side collect anywhere is the ≤6-element tweet summary.
+  * Scale design: the report is one `groupBy(address)` aggregate, so it
+  * shuffles once, keyed on address. Its nested counters come from
+  * [[Counters]], a typed aggregator whose buffer is a `sensor/rule → count`
+  * map: each map task folds its events into one buffer per address
+  * (map-side combine), so the shuffle carries one small map per address
+  * and task. Per-address event *lists* are never materialized, unlike the
+  * reference's `map[string][]Event` (core/reporter.go:102-109), so a hot
+  * address with millions of events costs O(#distinct rules), not
+  * O(#events). The only driver-side collect anywhere is the ≤6-element
+  * tweet summary.
   */
 object Reporter {
 
@@ -23,34 +28,45 @@ object Reporter {
   val Header: Seq[String] =
     Seq("address", "country_code", "country_name", "total_events", "counters")
 
-  /** A1-A4 + O1: the report table. `counters` is "sensor/rule:count" pairs
-    * joined by '|' (core/reporter.go:148-169). The reference's pair order is
-    * Go map-iteration order (nondeterministic); we pin lexicographic order.
-    * Likewise A2's "first event's country" (buffer order in the reference)
-    * is pinned to `min` — deterministic and almost always identical, since
-    * an address maps to one country. */
-  def report(events: DataFrame): DataFrame = {
-    // Country columns ride in the level-1 GROUP BY key rather than as
-    // min() aggregates: a string min() forces SortAggregate (immutable agg
-    // buffer), while a pure count() stays in codegen'd HashAggregate. Geo
-    // enrichment maps an address to exactly one country within a batch, so
-    // the key extension doesn't split groups.
-    val perRule = events
-      .groupBy(col("address"), col("country_code"), col("country_name"),
-        col("sensor"), col("rule"))
-      .agg(count(lit(1)).as("n"))
-    perRule
-      .groupBy(col("address"))
+  /** The report order: most events first, ties broken by address. */
+  val Order: Seq[Column] = Seq(col("total_events").desc, col("address"))
+
+  /** A1-A4 + O1: the report table in [[Order]]. `counters` is
+    * "sensor/rule:count" pairs joined by '|' (core/reporter.go:148-169). The
+    * reference's pair order is Go map-iteration order (nondeterministic);
+    * we pin the UTF-8 byte order of the whole pairs. Likewise A2's "first
+    * event's country" (buffer order in the reference) is pinned to `min` —
+    * deterministic and almost always identical, since an address maps to
+    * one country. */
+  def report(events: DataFrame): DataFrame =
+    perAddress(events).orderBy(Order: _*)
+
+  /** [[report]] before its sort: one row per address, in no order. */
+  def perAddress(events: DataFrame): DataFrame =
+    events.groupBy(col("address"))
       .agg(
         min(col("country_code")).as("country_code"),
         min(col("country_name")).as("country_name"),
-        sum(col("n")).as("total_events"),
-        concat_ws("|", array_sort(collect_list(
-          concat_ws(":", concat_ws("/", col("sensor"), col("rule")), col("n")))))
-          .as("counters"))
-      .select(col("address"), col("country_code"), col("country_name"),
-        col("total_events"), col("counters"))
-      .orderBy(col("total_events").desc, col("address"))
+        count(lit(1)).as("total_events"),
+        counters(concat_ws("/", col("sensor"), col("rule"))).as("counters"))
+
+  private val counters = udaf(Counters, Encoders.STRING)
+
+  /** The `counters` column: a count per `sensor/rule` key, rendered as
+    * `key:n` pairs joined by '|' in unsigned UTF-8 byte order (the order
+    * of [[UTF8String]], which `array_sort` uses), not Java `String` order,
+    * which differs above U+FFFF. */
+  private object Counters extends Aggregator[String, Map[String, Long], String] {
+    def zero: Map[String, Long] = Map.empty
+    def reduce(b: Map[String, Long], key: String): Map[String, Long] =
+      b.updated(key, b.getOrElse(key, 0L) + 1L)
+    def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
+      b.foldLeft(a) { case (m, (key, n)) => m.updated(key, m.getOrElse(key, 0L) + n) }
+    def finish(b: Map[String, Long]): String =
+      b.iterator.map { case (key, n) => UTF8String.fromString(s"$key:$n") }
+        .toArray.sorted.mkString("|")
+    val bufferEncoder: Encoder[Map[String, Long]] = ExpressionEncoder[Map[String, Long]]()
+    val outputEncoder: Encoder[String] = Encoders.STRING
   }
 
   /** [[report]] with late geo enrichment: aggregate first, enrich the

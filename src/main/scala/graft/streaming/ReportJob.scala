@@ -45,28 +45,43 @@ object ReportJob {
     * as the batch analogue). Returns rows in the report for inspection.
     *
     * The CSV, the commit-message totals and the row count come from one
-    * observed pass: an unnamed [[Observation]] on the report counts its
-    * rows, its non-null addresses (= `countDistinct(address)`) and sums
-    * `total_events` (= the event count) while the CSV is written. The tweet
-    * adds one country-summary scan. The report is not cached, because a
-    * cached plan's shuffles are not coalesced by AQE: on the perfbench
-    * `service` backlog report (4 vCPUs) the cached pass ran 418 tasks in 15
-    * jobs, the uncached one 13 tasks in 9 jobs. The observation has no
-    * name, so concurrent report passes in one session never share a metric
-    * name. */
+    * observed pass. [[Reporter.perAddress]] shuffles once, keyed on
+    * address; its rows are coalesced into one writer task, which sorts them
+    * into [[Reporter.Order]] and writes the single CSV file, so no range
+    * sort samples the rows or shuffles them again. An unnamed
+    * [[Observation]] in that task counts the rows and the non-null
+    * addresses (= `countDistinct(address)`) and sums `total_events` (= the
+    * event count). A batch with no events writes a header-only file; the
+    * observed row count finds it, its directory is deleted and nothing is
+    * published, so no separate emptiness job runs. The tweet adds one
+    * country-summary scan. On the perfbench `service` backlog report (4
+    * vCPUs, 8 event files) the traced pass runs 5 jobs with 11 tasks,
+    * against 9 jobs with 19 tasks for a two-level aggregate, a range sort
+    * and an emptiness check. The report is not cached, because a cached
+    * plan's shuffles are not coalesced by AQE. The observation has no name,
+    * so concurrent report passes in one session never share a metric name.
+    * A frame with no columns has no events: it returns 0 without a job. */
   def reportBatch(events: DataFrame, outDir: String, publisher: ReportPublisher,
       now: java.time.ZonedDateTime = java.time.ZonedDateTime.now(java.time.ZoneOffset.UTC)): Long = {
-    if (events.isEmpty) return 0L
+    if (events.columns.isEmpty) return 0L
     val seen = Observation()
-    val report = Reporter.report(events).observe(seen,
+    val report = Reporter.perAddress(events).observe(seen,
       count(lit(1)).as("rows"), count(col("address")).as("addresses"),
       sum(col("total_events")).as("events"))
-    val dir = Reporter.writeCsv(report, outDir, now)
+    // already one partition, sorted in its task: no second coalesce
+    val dir = Reporter.writeCsv(report.coalesce(1).sortWithinPartitions(Reporter.Order: _*),
+      outDir, now, singleFile = false)
     val m = seen.get
+    val rows = m("rows").asInstanceOf[Long]
+    if (rows == 0) {
+      val out = new Path(dir)
+      out.getFileSystem(events.sparkSession.sessionState.newHadoopConf()).delete(out, true)
+      return 0L
+    }
     val total = m("events").asInstanceOf[Long]
     val url = publisher.publishCsv(dir, m("addresses").asInstanceOf[Long], total)
     publisher.publishSummary(Reporter.tweetText(Reporter.countrySummary(events), total, url))
-    m("rows").asInstanceOf[Long]
+    rows
   }
 
   /** Streaming cadence over the ingested events table. `now` is the

@@ -1,13 +1,25 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 import graft.config.GraftConfig
 import graft.enrich.GeoIp
 
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -331,6 +343,91 @@ class StreamingSpec extends SparkSpec {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq())), "/tmp/none", pub) == 0)
     assert(pub.published.isEmpty)
+  }
+
+  test("a zero-row events frame reports nothing and leaves no report directory") {
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], Ingest.EventsSchema)
+    val outDir = tmp("graft-reports-empty")
+    val pub = new LogPublisher
+    assert(ReportJob.reportBatch(empty, outDir, pub) == 0)
+    assert(pub.published.isEmpty)
+    assert(new java.io.File(outDir).list().toSeq == Nil)
+  }
+
+  test("a report pass writes its CSV through one hash exchange: no range sort, no isEmpty job") {
+    val eventsPath = tmp("graft-events-plan") + "/events"
+    val ckpt = tmp("graft-ck-plan")
+    val geo = GeoIp.fromCsv(spark, fixture("geo.csv"))
+    conf.enabledSensors.foreach(s => Ingest.sensorQuery(spark, s, "n", eventsPath, ckpt,
+      Some(geo), Trigger.AvailableNow()).awaitTermination(120000))
+    val events = spark.read.parquet(eventsPath)
+    assert(events.select("sensor").distinct().count() == 2)
+
+    val outDir = tmp("graft-reports-plan")
+    val writes = new ConcurrentLinkedQueue[SparkPlan]()
+    val plans = new QueryExecutionListener {
+      // AQE plans the whole write: the command sits inside a query stage
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (collect(qe.executedPlan) { case w: DataWritingCommandExec => w.cmd }.exists {
+            case c: InsertIntoHadoopFsRelationCommand => c.outputPath.toString.contains(outDir)
+            case _ => false
+          }) writes.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val callSites = new ConcurrentLinkedQueue[String]()
+    val jobs = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        // the result stage is named after the job's call site ("isEmpty at X.scala:N")
+        j.stageInfos.maxByOption(_.stageId).foreach(s => callSites.add(s.name))
+      }
+    }
+    spark.listenerManager.register(plans)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      val pub = new LogPublisher
+      assert(ReportJob.reportBatch(events, outDir, pub) > 0)
+      ListenerBusDrain(spark.sparkContext)
+      assert(writes.size == 1, writes)
+      val shuffles = collect(writes.peek()) { case e: ShuffleExchangeLike => e.outputPartitioning }
+      assert(shuffles.size == 1, writes.peek())
+      assert(shuffles.head.isInstanceOf[HashPartitioning], shuffles)
+      assert(collect(writes.peek()) { case p if p.outputPartitioning.isInstanceOf[RangePartitioning] => p }
+        .isEmpty, writes.peek())
+      assert(!callSites.asScala.exists(_.startsWith("isEmpty")), callSites)
+      assert(pub.published.exists(_.startsWith("csv:")), pub.published)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      spark.listenerManager.unregister(plans)
+    }
+  }
+
+  test("two report passes on two threads of one session publish their own rows and totals") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def ev(addresses: Seq[String], perAddress: Int) =
+      addresses.flatMap(a => Seq.fill(perAddress)((a, "US", "United States", "ssh", "auth-failure")))
+        .toDF("address", "country_code", "country_name", "sensor", "rule")
+    val a = ev(Seq("1.1.1.1", "1.1.1.2", "1.1.1.3"), 2)
+    val b = ev(Seq("2.2.2.1", "2.2.2.2"), 5)
+    for (_ <- 1 to 3) {
+      val start = new java.util.concurrent.CountDownLatch(2)
+      val runs = Seq(a, b).map { events =>
+        Future {
+          val pub = new LogPublisher
+          start.countDown()
+          start.await()
+          (ReportJob.reportBatch(events, tmp("graft-reports-par"), pub), pub.published.toSeq)
+        }
+      }
+      val Seq((na, pa), (nb, pb)) = runs.map(Await.result(_, 2.minutes))
+      assert(na == 3 && nb == 2)
+      assert(pa.exists(_.endsWith("(reporting 3 addresses, 6 total events)")), pa)
+      assert(pa.exists(_.startsWith("tweet: 6 new events from")), pa)
+      assert(pb.exists(_.endsWith("(reporting 2 addresses, 10 total events)")), pb)
+      assert(pb.exists(_.startsWith("tweet: 10 new events from")), pb)
+    }
   }
 
   test("streaming dedup: dropDuplicates within the watermark (exactly-once by id)") {
