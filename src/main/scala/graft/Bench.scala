@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.{ListenerBusDrain, SparkContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE COMPACT JSON line on stdout.
@@ -26,13 +31,16 @@ import org.apache.spark.sql.SparkSession
   *    stdout line now carries the total + a ~12-query headline map
   *    (~600 bytes); the full per-query medians AND per-pass samples go
   *    to stderr and to BENCH_DETAIL.json in the working directory.
+  *
+  * Every [[Sample]] comes from [[timed]]. Dev loop: `SPARK_GRAFT_ONLY=<q>
+  * SPARK_GRAFT_PASSES=<n>` times one query n times after its cold run.
   */
 object Bench {
 
   /** The local session every measurement and dump main runs on (Bench,
-    * Verify, DevProfile, PlanDump, ScaleProbe): `cpus` local cores and,
-    * unless given, as many shuffle partitions. `GraftApp.session` is the
-    * service profile and stays separate. */
+    * Verify, PlanDump, ScaleProbe): `cpus` local cores and, unless given,
+    * as many shuffle partitions. `GraftApp.session` is the service
+    * profile and stays separate. */
   def session(cpus: String): SparkSession = session(cpus, cpus)
 
   def session(cpus: String, shufflePartitions: String): SparkSession = {
@@ -73,6 +81,122 @@ object Bench {
     spark
   }
 
+  /** One run of a registry query. `layers` splits it by the jobs that
+    * started during it, under `perfbench`'s per-layer metric names: jobs,
+    * stages, tasks, executor run/cpu/gc ms, shuffle bytes written, spill
+    * bytes, and gap_ms, the wall time no job covers (planning, codegen,
+    * driver-side work). `jobSeconds` is each job's (id, seconds). */
+  final case class Sample(seconds: Double, error: Option[String],
+      layers: Seq[(String, Long)], jobSeconds: Seq[(Int, Double)]) {
+    def failed: Boolean = error.isDefined
+    def apply(layer: String): Long = layers.find(_._1 == layer).get._2
+    def line: String = f"$seconds%.3f " +
+      layers.map { case (k, v) => s"$k=$v" }.mkString(" ") + " job_s=" +
+      jobSeconds.map { case (id, s) => f"$id:$s%.2f" }.mkString(",") +
+      error.fold("")(e => s" FAILED: $e")
+  }
+
+  /** The listener behind [[timed]], one per SparkContext: each job's
+    * interval and the layer sums of every task. Queries run one at a
+    * time, so what reaches it between a sample's two bus drains is that
+    * sample's, whichever thread submitted the jobs. */
+  private final class Meter extends SparkListener {
+    private var jobs = Map.empty[Int, (Long, Long)] // id -> (start, end)
+    private var sums = Map.empty[String, Double].withDefaultValue(0.0)
+    private def add(kvs: (String, Double)*): Unit =
+      kvs.foreach { case (k, v) => sums += k -> (sums(k) + v) }
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      jobs += e.jobId -> (e.time, -1L)
+      add("jobs" -> 1, "stages" -> e.stageIds.size)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(e.jobId).foreach(j => jobs += e.jobId -> (j._1, e.time))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      Option(e.taskMetrics).foreach(m => add("tasks" -> 1,
+        "run_ms" -> m.executorRunTime, "cpu_ms" -> m.executorCpuTime / 1e6,
+        "gc_ms" -> m.jvmGCTime,
+        "shuffle_bytes" -> m.shuffleWriteMetrics.bytesWritten,
+        "spill_bytes" -> (m.memoryBytesSpilled + m.diskBytesSpilled)))
+    }
+    /** The jobs and layer sums recorded since the last call. */
+    def take(): (Map[Int, (Long, Long)], Map[String, Double]) = synchronized {
+      val r = (jobs, sums)
+      jobs = Map.empty
+      sums = Map.empty[String, Double].withDefaultValue(0.0)
+      r
+    }
+  }
+
+  private val meters = new java.util.WeakHashMap[SparkContext, Meter]()
+
+  /** Times one registry query: the only place one is timed (Bench's
+    * warmup and passes, ScaleProbe). The noop write runs the full plan;
+    * the bus drains, the layer split and `SharedRels.sweep` stay outside
+    * the timed interval. A query that throws gives a failed sample. */
+  def timed(spark: SparkSession, fn: (SparkSession, String) => DataFrame,
+      sfDir: String): Sample = {
+    val sc = spark.sparkContext
+    val meter = meters.synchronized(meters.computeIfAbsent(sc,
+      _ => { val m = new Meter; sc.addSparkListener(m); m }))
+    ListenerBusDrain(sc)
+    meter.take()
+    val t0 = System.currentTimeMillis()
+    val n0 = System.nanoTime()
+    val error =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
+    val seconds = (System.nanoTime() - n0) / 1e9
+    val t1 = System.currentTimeMillis()
+    ListenerBusDrain(sc)
+    val (jobs, sums) = meter.take()
+    // the union of the job intervals within [t0, t1], swept by start
+    val (covered, _) = jobs.values.toSeq
+      .map { case (s, e) => (s max t0, (if (e < 0) t1 else e) min t1) }.sorted
+      .foldLeft((0L, t0)) { case ((c, reach), (s, e)) =>
+        if (e > reach) (c + e - (s max reach), e) else (c, reach) }
+    // the query's localCheckpoint blocks are dead: free them now, not
+    // at the next driver GC (SharedRels fixtures stay)
+    graft.queries.SharedRels.sweep(spark)
+    Sample(seconds, error, Seq("jobs", "stages", "tasks", "run_ms", "cpu_ms",
+      "gc_ms", "shuffle_bytes", "spill_bytes").map(k => k -> sums(k).round) :+
+      ("gap_ms" -> ((seconds * 1000).toLong - covered).max(0L)),
+      jobs.toSeq.sorted.map { case (id, (s, e)) => id -> (e.max(s) - s) / 1e3 })
+  }
+
+  /** (query, median, min) over each query's completed samples: a failed
+    * run is no time at all, and a query with none leaves the totals. */
+  private def stats(samples: Seq[(String, Seq[Sample])]) =
+    samples.flatMap { case (k, ss) =>
+      val xs = ss.filterNot(_.failed).map(_.seconds).sorted
+      xs.headOption.map(min => (k, xs(xs.size / 2), min))
+    }
+
+  /** BENCH_DETAIL.json: totals, run settings and per-pass loadavg, then
+    * per query its median and min seconds and, aligned with `samples`,
+    * one array per layer field and `failed`. */
+  def detailJson(samples: Seq[(String, Seq[Sample])], passes: Int,
+      shardSize: Int, sfDir: String, loads: Seq[String]): String = {
+    val st = stats(samples)
+    def secs(k: String, f: ((String, Double, Double)) => Double) =
+      st.find(_._1 == k).fold("null")(r => f"${f(r)}%.3f")
+    def arr(xs: Seq[Any]) = xs.mkString("[", ",", "]")
+    val queries = samples.map { case (k, ss) =>
+      "\"" + k + "\":{\"median\":" + secs(k, _._2) + ",\"min\":" + secs(k, _._3) +
+        ",\"samples\":" + arr(ss.map(s => f"${s.seconds}%.3f")) +
+        ",\"failed\":" + arr(ss.map(_.failed)) +
+        ss.headOption.toSeq.flatMap(_.layers).map { case (l, _) =>
+          ",\"" + l + "\":" + arr(ss.map(_(l)))
+        }.mkString + "}"
+    }.mkString("{", ",", "}")
+    "{\"total\":" + f"${st.map(_._2).sum}%.3f" +
+      ",\"total_min\":" + f"${st.map(_._3).sum}%.3f" +
+      ",\"n_queries\":" + st.size + ",\"n_failed\":" +
+      samples.count(_._2.exists(_.failed)) + ",\"passes\":" + passes +
+      ",\"shard_size\":" + shardSize + ",\"sf\":\"" + sfDir +
+      "\",\"load\":" + arr(loads) + ",\"queries\":" + queries + "}"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -91,7 +215,7 @@ object Bench {
     val shards = registry.grouped(shardSize).toSeq
 
     // name -> per-pass samples (median taken after)
-    val allSamples = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val allSamples = mutable.LinkedHashMap[String, Seq[Sample]]()
 
     // Host-load attribution (additions-only; the stdout contract is
     // unchanged): /proc/loadavg read at each timed pass's start and end
@@ -102,7 +226,7 @@ object Bench {
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+").take(3).mkString(",")
       catch { case _: Throwable => "" }
-    val passLoads = scala.collection.mutable.ArrayBuffer[String]()
+    val passLoads = mutable.ArrayBuffer[String]()
 
     shards.zipWithIndex.foreach { case (shard, si) =>
       val spark = session(cpus)
@@ -112,18 +236,11 @@ object Bench {
       // first timed sample, inflating medians 2-4x for sub-second
       // queries (r10 verdict: sketch_heavy_hitters 4.30 s recorded vs
       // 1.14 s isolated). After this pass, every timed sample runs
-      // against compiled classes and a warm block manager. Each cold
-      // run's seconds go to stderr, so an isolated run
+      // against compiled classes and a warm block manager. Cold runs
+      // print their stderr line too, so an isolated run
       // (SPARK_GRAFT_ONLY=<q>) still shows the first-run cost.
       shard.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-        }
-        System.err.println(
-          f"[bench] warmup $name ${(System.nanoTime() - t0) / 1e9}%.3f")
-        graft.queries.SharedRels.sweep(spark)
+        System.err.println(s"[bench] warmup $name ${timed(spark, fn, sfDir).line}")
       }
       // Untimed GC between warmup and timed passes: warmup allocation
       // garbage must not trigger a collection inside a timed sample.
@@ -133,23 +250,12 @@ object Bench {
       // from a real regression. All passes are warm (see above); the
       // median of three discards one-sided outliers, and the per-query
       // MIN (reported alongside) bounds true cost from below.
-      val passSamples = (0 until passes).map { pass =>
+      (0 until passes).foreach { pass =>
         val loadStart = loadavg()
-        val res = shard.map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          }
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          // localCheckpoint blocks (MEMORY_AND_DISK persisted RDDs) from
-          // the query just finished are dead the moment its DataFrame
-          // goes out of scope, but the ContextCleaner only reclaims them
-          // after a driver GC notices the dangling ref. Apart from the
-          // SharedRels fixtures (kept alive on purpose), queries never
-          // share persisted RDDs, so drop them synchronously, untimed.
-          graft.queries.SharedRels.sweep(spark)
-          name -> elapsed
+        shard.foreach { case (name, fn) =>
+          val s = timed(spark, fn, sfDir)
+          System.err.println(s"[bench] pass $pass $name ${s.line}")
+          allSamples(name) = allSamples.getOrElse(name, Vector()) :+ s
         }
         // Codegen-cache churn evidence: cumulative janino compile count
         // after each pass. Warm passes adding ~nothing means no eviction.
@@ -159,11 +265,6 @@ object Bench {
         passLoads += ("{\"shard\":" + si + ",\"pass\":" + pass +
           ",\"load_start\":\"" + loadStart +
           "\",\"load_end\":\"" + loadavg() + "\"}")
-        res
-      }
-      shard.foreach { case (name, _) =>
-        allSamples(name) =
-          passSamples.map(_.find(_._1 == name).get._2)
       }
       graft.queries.SharedRels.clear(spark)
       spark.stop()
@@ -174,25 +275,8 @@ object Bench {
       System.gc()
     }
 
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-    val medians = allSamples.toSeq.map { case (n, xs) => n -> median(xs) }
-
-    // Full per-query detail: stderr (dev loop) + BENCH_DETAIL.json (judge).
-    val full = allSamples.toSeq.map { case (k, xs) =>
-      val raw = xs.map(t => f"$t%.3f").mkString("[", ",", "]")
-      "\"" + k + "\":{\"median\":" + f"${median(xs)}%.3f" +
-        ",\"min\":" + f"${xs.min}%.3f" +
-        ",\"samples\":" + raw + "}"
-    }.mkString("{", ",", "}")
-    System.err.println(s"[bench] per-query seconds: $full")
-    val total = medians.map(_._2).sum
-    val totalMin = allSamples.values.map(_.min).sum
-    val detail = "{\"total\":" + f"$total%.3f" +
-      ",\"total_min\":" + f"$totalMin%.3f" +
-      ",\"n_queries\":" + medians.size + ",\"passes\":" + passes +
-      ",\"shard_size\":" + shardSize + ",\"sf\":\"" + sfDir +
-      "\",\"load\":" + passLoads.mkString("[", ",", "]") +
-      ",\"queries\":" + full + "}"
+    val detail = detailJson(allSamples.toSeq, passes, shardSize, sfDir,
+      passLoads.toSeq)
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       detail.getBytes("UTF-8"))
@@ -200,12 +284,14 @@ object Bench {
       System.err.println(s"[bench] detail write failed: ${e.getMessage}")
     }
 
-    val headlineSet = headline.filter(h => medians.exists(_._1 == h))
-    val qs = medians.filter(r => headlineSet.contains(r._1))
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+    val st = stats(allSamples.toSeq)
+    val total = st.map(_._2).sum
+    val totalMin = st.map(_._3).sum
+    val qs = st.filter(r => headline.contains(r._1))
+      .map(r => "\"" + r._1 + "\":" + f"${r._2}%.3f")
       .mkString("{", ",", "}")
     System.out.flush(); System.err.flush()
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"n_queries":${medians.size},"agg":"median","passes":$passes,"shard_size":$shardSize,"queries":$qs,"detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"n_queries":${st.size},"agg":"median","passes":$passes,"shard_size":$shardSize,"queries":$qs,"detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
     System.out.flush()
   }
 

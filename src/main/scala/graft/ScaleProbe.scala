@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * the canonical weak-scaling instance.
   *
   * Output: one line per (query, scale) with seconds, then the ratio table
-  * that SCALING.md records. Times are best-of-2 (codegen amortized, same
-  * convention as the bench's warm numbers). */
+  * that SCALING.md records. Times are best-of-2 [[Bench.timed]] samples
+  * (codegen amortized, same convention as the bench's warm numbers). */
 object ScaleProbe {
 
   /** Copy count: 10 by default (the per-round sf1.0 probe);
@@ -457,20 +457,16 @@ object ScaleProbe {
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
     val selected = probes.filter { case (n, _) => only.isEmpty || only(n) }
 
-    def time(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      val ts = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        graft.queries.SharedRels.sweep(spark)
-        t
-      }
-      ts.min
+    // best of 2 Bench.timed samples; NaN when both runs failed
+    def best(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
+      val ss = (1 to 2).map(_ => Bench.timed(spark, fn, dir))
+      ss.flatMap(_.error).foreach(e => System.err.println(s"[probe] failed: $e"))
+      ss.filterNot(_.failed).map(_.seconds).minOption.getOrElse(Double.NaN)
     }
     println(s"| query | sf0.1 s | x$Copies-synth s | ratio (ideal $Copies) |")
     selected.foreach { case (name, fn) =>
-      val a = time(fn, sf01)
-      val b = time(fn, synthDir)
+      val a = best(fn, sf01)
+      val b = best(fn, synthDir)
       println(f"| $name | $a%.2f | $b%.2f | ${b / a}%.1f |")
     }
     spark.stop()
