@@ -40,6 +40,14 @@ object GraftApp {
       // fallback (sort-based after 128 in-memory keys) is far too
       // conservative for small per-key buffers
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
+      // every streaming query runs on a clone of this session; with
+      // artifact isolation on (the default), each clone gets its own
+      // executor classloader, and CodeGenerator's class cache is keyed on
+      // the classloader, so each new sensor stream recompiled every stage
+      // class. The service adds no session artifacts (jars, files) to
+      // isolate, so its sessions share one loader and each stage class is
+      // compiled once per JVM. Read only when the session is created.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // under spark-submit the master comes from the launcher; standalone
     // runs (tests, local smoke) fall back to all local cores
     val withMaster =

@@ -11,6 +11,13 @@ import graft.timefmt.GoTimeFormat
   * whole-stage-codegen pipeline with zero shuffles — one pass over the raw
   * lines regardless of sensor/rule count. Regex patterns are literals, so
   * Catalyst compiles each `Pattern` once per task.
+  *
+  * Per line, the parser regex runs once ([[tokenize]]) and each rule regex
+  * at most once, in order, until one matches ([[classify]]); both sit
+  * behind a Generate fence so no optimizer rewrite re-evaluates them. Rules
+  * run in their [[findForm]], which drops the leading/trailing `.+`/`.*`
+  * that make Java's backtracking `find` quadratic in the token length (the
+  * reference evaluates them with Go's linear-time RE2).
   */
 object LogParser {
 
@@ -55,26 +62,76 @@ object LogParser {
     * (core/sensor.go:88-106 — `break` after first match ⇒ ≤1 event/line).
     * Compiles to one lazily-evaluated CASE WHEN chain: codegen emits an
     * early-exit branch per rule, preserving the reference's short-circuit.
-    * Rules are case-sensitive (core/rule.go:19). Rows matching no rule get
-    * NULL and are filtered by [[pipeline]].
+    * Rules are case-sensitive (core/rule.go:19) and run in their
+    * [[findForm]]. Rows matching no rule get NULL.
     */
   def classifyColumn(rules: Seq[RuleConf]): Column =
     rules.foldLeft(lit(null).cast("string")) { (acc, r) =>
-      coalesce(acc, when(col(r.token).rlike(r.expression), lit(r.name)))
+      coalesce(acc, when(col(r.token).rlike(findForm(r.expression)), lit(r.name)))
     }
 
-  /** "Matches any rule" — one combined alternation regex per target token
-    * instead of the full per-rule CASE chain. Used as the pipeline's drop
-    * filter so the (expensive, ordered) [[classifyColumn]] chain runs only
-    * on surviving rows: a filter on `classifyColumn(...).isNotNull` would
-    * make Catalyst evaluate every rule regex twice per row (once in the
-    * pushed-down predicate, once in the projection — no cross-operator
-    * subexpression elimination in codegen). OR across tokens is
-    * order-insensitive, so the per-token grouping is safe. */
-  def anyRuleMatch(rules: Seq[RuleConf]): Column =
-    rules.groupBy(_.token).toSeq.sortBy(_._1).map { case (token, rs) =>
-      col(token).rlike(rs.map(r => s"(?:${r.expression})").mkString("|"))
-    }.reduce(_ || _)
+  /** `df` plus a `rule` column (the first matching rule's name); rows that
+    * match no rule are dropped. The chain runs once per row: as in
+    * [[tokenize]], explode(array(...)) is an optimizer fence, so the null
+    * filter reads the Generate's output instead of re-evaluating every
+    * rule regex in a pushed-down predicate. */
+  def classify(df: DataFrame, rules: Seq[RuleConf]): DataFrame =
+    df.select(col("*"), explode(array(classifyColumn(rules))).as("rule"))
+      .filter(col("rule").isNotNull)
+
+  /** A rule pattern that `find` matches on exactly the strings the
+    * original matches, in linear time. Under find semantics a leading
+    * `.*` and a trailing `.*` match the empty string and can go, and a
+    * leading or trailing `.+` only needs its one character next to the
+    * rest: `.+X` finds a match iff `.X` does. Java's `find` tries every
+    * start position and backtracks the greedy `.+` over the rest of the
+    * token from each, so the original forms cost O(n²).
+    *
+    * Only a bare `.` (not escaped, not in a class) with a plain `*`/`+`
+    * (no `?`, `+`, `*` or `{` after it) is rewritten. A pattern with `\Q`
+    * (quoting), `(?` (flags, lookaround, non-capturing groups), `\G` or a
+    * top-level `|` is returned as it is. */
+  def findForm(pattern: String): String = bareDots(pattern).fold(pattern) { dots =>
+    val n = pattern.length
+    // X.* -> X, X.+ -> X.
+    val p =
+      if (n >= 2 && dots(n - 2) && "*+".contains(pattern(n - 1)))
+        pattern.dropRight(if (pattern(n - 1) == '+') 1 else 2)
+      else pattern
+    // .*X -> X, .+X -> .X
+    if (p.length >= 2 && p(0) == '.' && "*+".contains(p(1)) &&
+        !p.lift(2).exists("?+*{".contains(_)))
+      (if (p(1) == '+') "." else "") + p.drop(2)
+    else p
+  }
+
+  /** The indices of the bare `.` atoms of `p`; None when [[findForm]]
+    * must leave `p` as it is. */
+  private def bareDots(p: String): Option[Set[Int]] = {
+    val dots = Set.newBuilder[Int]
+    var i = 0
+    var depth = 0   // group nesting
+    var inClass = 0 // character-class nesting
+    while (i < p.length) {
+      p(i) match {
+        case '\\' =>
+          if (p.lift(i + 1).exists("QG".contains(_))) return None
+          i += (if (p.lift(i + 1).contains('c')) 2 else 1) // \cX: one more char
+        case '[' => inClass += 1
+        case ']' if inClass > 0 => inClass -= 1
+        case _ if inClass > 0 =>
+        case '(' =>
+          if (p.lift(i + 1).contains('?')) return None
+          depth += 1
+        case ')' => depth -= 1
+        case '|' if depth == 0 => return None
+        case '.' => dots += i
+        case _ =>
+      }
+      i += 1
+    }
+    Some(dots.result())
+  }
 
   /** P6: parse the (year-repaired) datetime token with the sensor's Go
     * layout. `try_to_timestamp` nulls on failure — the reference emits the
@@ -92,18 +149,21 @@ object LogParser {
 
   /** Full per-sensor pipeline (reference §3.1 stages 1-3 + P9 column
     * injection): lines -> events with the reference's table schema
-    * (models/event.go:7-20). `detectedAt` is injectable for reproducible
-    * golden tests; None means wall-clock `current_timestamp()`.
+    * (models/event.go:7-20), tokenizing and classifying each line in one
+    * pass. `detectedAt` is injectable for reproducible golden tests; None
+    * means wall-clock `current_timestamp()` — in a stream, the micro-batch
+    * timestamp, one value per batch. That value is read through
+    * [[graft.functions.ConstantRef]] rather than written into the
+    * generated code, so every batch of a stream runs the stage classes the
+    * first batch compiled.
     */
   def pipeline(lines: DataFrame, sensor: SensorConf, nodeName: String,
       detectedAt: Option[java.sql.Timestamp] = None,
       currYear: Int = java.time.Year.now.getValue): DataFrame =
-    tokenize(lines, sensor.parser, currYear)
-      .filter(anyRuleMatch(sensor.rules))
-      .withColumn("rule", classifyColumn(sensor.rules))
+    classify(tokenize(lines, sensor.parser, currYear), sensor.rules)
       .withColumn("created_at", datetimeColumn(sensor.parser))
-      .withColumn("detected_at",
-        detectedAt.map(lit(_)).getOrElse(current_timestamp()))
+      .withColumn("detected_at", detectedAt.map(lit(_))
+        .getOrElse(graft.functions.ConstantFunctions.constant_ref(current_timestamp())))
       .withColumn("node_name", lit(nodeName))
       .withColumn("sensor", lit(sensor.name))
       .withColumn("payload", col(LineCol))
@@ -118,8 +178,7 @@ object LogParser {
     * Routed to a quarantine sink instead of failing the stream. */
   def malformedDatetimes(lines: DataFrame, sensor: SensorConf,
       currYear: Int = java.time.Year.now.getValue): DataFrame =
-    tokenize(lines, sensor.parser, currYear)
-      .filter(anyRuleMatch(sensor.rules))
+    classify(tokenize(lines, sensor.parser, currYear), sensor.rules)
       .filter(datetimeColumn(sensor.parser).isNull)
       .select(col(LineCol).as("payload"), col("datetime"))
 }

@@ -98,12 +98,7 @@ object ParityQueries {
       RuleConf("mentions_window", "text", "window"),
       RuleConf("mentions_join", "text", "join"),
       RuleConf("mentions_spark", "text", "spark"))
-    T.t(spark, dir, "documents")
-      // anyRuleMatch first: filtering on classifyColumn(...).isNotNull
-      // would re-evaluate the whole ordered rlike CASE chain inside the
-      // pushed-down predicate (same trap LogParser.pipeline guards against)
-      .filter(LogParser.anyRuleMatch(rules))
-      .withColumn("rule", LogParser.classifyColumn(rules))
+    LogParser.classify(T.t(spark, dir, "documents"), rules)
       .select(col("doc_id"), col("rule"))
       .orderBy(col("doc_id"))
   }

@@ -38,7 +38,12 @@ import graft.enrich.GeoIp
   * range index broadcast once per geo DataFrame, which every sensor
   * stream shares ([[GeoIp.enrich]]). The sink partitions by
   * (event_date, sensor) so downstream report queries prune to the slice
-  * they need.
+  * they need. A sensor's stage classes compile once per JVM, not once per
+  * micro-batch or per query: the batch timestamp is read from the stage's
+  * references instead of written into its code ([[LogParser.pipeline]]),
+  * so every batch generates the same source, and `GraftApp.session` turns
+  * off artifact isolation, so every stream's tasks load classes through
+  * one classloader, the key of Spark's compiled-class cache.
   */
 object Ingest {
 

@@ -259,6 +259,69 @@ class StreamingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(df.head().getAs[String]("sensor") == "ssh")
   }
 
+  /** Janino compiles since JVM start (every thread, driver and tasks). */
+  def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Runs `body` with the service's `spark.sql.artifact.isolation.enabled`
+    * (GraftApp.session sets it to false); a stream's cloned session reads
+    * it from the session that starts the stream. */
+  def withServiceConf[T](body: => T): T = {
+    val key = "spark.sql.artifact.isolation.enabled"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("codegen: a second AvailableNow drain of the sensors compiles no class") {
+    withServiceConf {
+      val geo = GeoIp.fromCsv(spark, fixture("geo.csv"))
+      def drain(k: Int): Long = {
+        val before = compiles()
+        val eventsPath = tmp(s"graft-cg-events$k") + "/events"
+        val ckpt = tmp(s"graft-cg-ckpt$k")
+        conf.enabledSensors.map(s => Ingest.sensorQuery(spark, s, "n", eventsPath, ckpt,
+          Some(geo), Trigger.AvailableNow())).foreach(_.awaitTermination(120000))
+        val n = compiles() - before
+        // auth.log 3 events, access.log 4
+        assert(spark.read.parquet(eventsPath).count() == 7)
+        n
+      }
+      val first = drain(1)
+      val second = drain(2)
+      assert(first > 0)
+      assert(second == 0, s"second drain compiled $second classes (first $first)")
+    }
+  }
+
+  test("codegen: a stream's second micro-batch compiles no class; each batch has its own detected_at") {
+    withServiceConf {
+      val logFile = Paths.get(tmp("graft-cg-live"), "auth.log")
+      val eventsPath = tmp("graft-cg-live-events") + "/events"
+      val line1 = "Aug  3 11:22:33 host1 sshd[1]: Authentication failed for root 203.0.113.7 port 1"
+      val line2 = "Aug  3 11:22:34 host1 sshd[2]: Invalid user admin 198.51.100.23 port 2"
+      val line3 = "Aug  3 11:22:35 host1 sshd[3]: Authentication error for guest 203.0.113.9 port 3"
+      Files.write(logFile, s"$line1\n$line2\n".getBytes)
+      val sensor = conf.sensors.find(_.name == "ssh").get.copy(filename = logFile.toString)
+      val q = Ingest.sensorQuery(spark, sensor, "n", eventsPath, tmp("graft-cg-live-ckpt"),
+        None, Trigger.ProcessingTime("100 milliseconds"))
+      try {
+        q.processAllAvailable()
+        val before = compiles()
+        Files.write(logFile, s"$line3\n".getBytes, StandardOpenOption.APPEND)
+        q.processAllAvailable()
+        val second = compiles() - before
+        assert(second == 0, s"second micro-batch compiled $second classes")
+      } finally q.stop()
+      val at = spark.read.parquet(eventsPath).collect()
+        .map(r => r.getAs[String]("payload") -> r.getAs[java.sql.Timestamp]("detected_at")).toMap
+      assert(at.keySet == Set(line1, line2, line3))
+      assert(at(line1) == at(line2))
+      assert(at(line3) != at(line1))
+    }
+  }
+
   test("report job: CSV + publisher side effects from a batch (ST2, S10-S12)") {
     import spark.implicits._
     val events = Seq(
